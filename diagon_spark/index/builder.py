@@ -20,8 +20,9 @@ block-encoded postings + norms + stored) → atomic commit. Here:
   segment split into rows of <= CHUNK_DOCS docs, so no single parquet row
   or query-side group explodes on terms like "int"/"return" that occur in
   >50% of docs;
-* atomic publish = staged write + manifest commit file (the parquet/
-  Iceberg-snapshot analogue of segments_N, index/IndexWriter.cpp:208-247);
+* atomic publish = appended segment rows + term_dict/stats staged and
+  swapped in with the manifest commit file (index/publish.py — the
+  parquet analogue of segments_N, index/IndexWriter.cpp:208-247);
 * recommended session config for builds: spark.python.worker.reuse=false —
   the encode tasks run seconds each and long-lived python workers degrade
   ~60% over sequential heavy tasks (allocator growth); worker spawn cost
@@ -94,8 +95,8 @@ def _append_tiny_parquet(spark, path: str, rows: list[dict],
                          schema) -> None:
     """Append a driver-known handful of metadata rows to a parquet dir
     WITHOUT a Spark job: one pyarrow part file, written to a tmp name
-    and atomically renamed in (the same publish discipline as
-    _swap_write). Types are pinned by `schema` so files from different
+    and atomically renamed in, so a reader listing the dir never sees a
+    partial file. Types are pinned by `schema` so files from different
     waves/rounds always merge. A `ts` column, when present in the
     schema but absent from the rows, is stamped with the current time."""
     import uuid
@@ -116,32 +117,6 @@ def _append_tiny_parquet(spark, path: str, rows: list[dict],
     tmp = d / f".{name}.tmp"
     pq.write_table(table, tmp)
     tmp.rename(d / name)
-    spark.catalog.refreshByPath(path)
-
-
-def _swap_tiny_parquet(spark, path: str, rows: list[dict], schema) -> None:
-    """Overwrite-swap a driver-known tiny metadata table (the pyarrow
-    analogue of _swap_write): stage one part file under `<path>.swap`,
-    atomically swap directories, refresh the session's file listing."""
-    import shutil
-    import uuid
-    from datetime import datetime, timezone
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if "ts" in schema.names and rows and "ts" not in rows[0]:
-        now = datetime.now(timezone.utc)
-        rows = [{**r, "ts": now} for r in rows]
-    table = pa.Table.from_pylist(rows, schema=schema)
-    tmp = Path(path + ".swap")
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    tmp.mkdir(parents=True)
-    pq.write_table(table, tmp / f"part-driver-{uuid.uuid4().hex}.parquet")
-    if Path(path).exists():
-        shutil.rmtree(path)
-    tmp.rename(path)
     spark.catalog.refreshByPath(path)
 
 
@@ -366,29 +341,6 @@ class IndexCatalog:
         tmp.write_text(json.dumps(meta))
         tmp.rename(cdir / f"commit_{gen}.json")  # atomic publish (segments_N)
         self.generation = gen
-
-
-def _swap_write(df: DataFrame, path: str, partition_by: str | None = None,
-                options: dict | None = None) -> None:
-    """Overwrite a table that the plan may be reading from: stage to
-    `<path>.swap`, then atomically swap directories. (On object stores /
-    Iceberg this is a snapshot commit instead of a rename.)"""
-    import shutil
-    tmp = path + ".swap"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    w = df.write.mode("overwrite")
-    for k, v in (options or {}).items():
-        w = w.option(k, v)
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
-    if Path(path).exists():
-        shutil.rmtree(path)
-    Path(tmp).rename(path)
-    # drop any session-cached file listing for the swapped path — a later
-    # spark.read of the same path must re-list, not chase deleted parts
-    df.sparkSession.catalog.refreshByPath(path)
 
 
 def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
@@ -1051,9 +1003,11 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         _phase(f"lineage_b{bi}")
 
     covered_all = (not resume and max_batches is None and not done)
+    from diagon_spark.index.publish import Publish
+    pub = Publish(spark, out_dir)
     _refresh_term_dict_and_stats(
-        spark, cat, field_names, docs_idx=docs_idx,
-        new_docs_idx=new_docs_idx, append=append, segment_base=segment_base,
+        spark, cat, pub, new_docs_idx=new_docs_idx, append=append,
+        segment_base=segment_base,
         stats_acc=stats_acc if covered_all else None)
     _phase("dict_stats_refresh")
 
@@ -1064,7 +1018,8 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     # of degrading a perfectly consistent analyzer-built index
     tok_extra = ({"tokenizer": "custom-analyzer"} if analyzer is not None
                  else {})
-    cat.commit({"batches_run": n_run, **tok_extra, **(commit_extra or {})})
+    pub.commit(cat, {"batches_run": n_run, **tok_extra,
+                     **(commit_extra or {})})
     return cat
 
 
@@ -1085,88 +1040,59 @@ def _rollback_impl(spark: SparkSession, root: str, generation: int
     physically dropped (segment ids are monotone across append epochs, so
     the cut is `segment_id < old.num_segments`), tombstones referencing
     dropped docs are pruned, term_dict/stats are recomputed, and a NEW
-    commit generation publishes the rolled-back state atomically."""
-    import shutil
+    commit generation publishes the rolled-back state: every rewritten
+    table and the recomputed term_dict/stats swap in together with that
+    commit (index/publish.py), so a crash leaves all of them at one
+    generation."""
+    from diagon_spark.index.publish import Publish
     old = IndexCatalog.load(root, generation)
-    cut = old.num_segments
-    for sub, part_by in (("docs", None), ("postings", "bucket"),
-                         ("deleted", None), ("lineage", None)):
-        p = Path(root, sub)
-        if not p.exists():
-            continue
-        df = spark.read.parquet(str(p))
-        if sub == "deleted" and "segment_id" not in df.columns:
-            # pre-r2 tombstone tables carry only doc_id — upgrade via the
-            # (already rolled back, docs is first in the loop) docs table;
-            # tombstones of dropped docs vanish with the inner join
-            docs_now = (spark.read.parquet(str(Path(root, "docs")))
-                        .select("doc_id", "segment_id"))
-            _swap_write(df.select("doc_id").distinct()
-                        .join(docs_now, "doc_id", "inner")
-                        .select(F.col("doc_id").cast("long"),
-                                F.col("segment_id").cast("int")), str(p))
-            continue
-        if df.filter(F.col("segment_id") >= cut).limit(1).count() == 0:
-            continue
-        _swap_write(df.filter(F.col("segment_id") < cut), str(p),
-                    partition_by=part_by,
-                    options=_BLOOM_OPTS if sub == "postings" else None)
-    docs_idx = spark.read.parquet(old.docs_path)
-    _refresh_term_dict_and_stats(spark, old, old.fields, docs_idx=docs_idx,
-                                 new_docs_idx=docs_idx, append=False,
-                                 segment_base=0)
-    old.commit({"rolled_back_to": generation})
+    pub = Publish(spark, root)
+    _stage_dropping(spark, pub, F.col("segment_id") >= old.num_segments,
+                    ("docs", "postings", "deleted", "lineage"))
+    _refresh_term_dict_and_stats(
+        spark, old, pub, new_docs_idx=spark.read.parquet(pub.source("docs")),
+        append=False, segment_base=0)
+    pub.commit(old, {"rolled_back_to": generation})
     return old
 
 
-def _swap_write_buckets(df: DataFrame, path: str, buckets: list[int],
-                        options: dict | None = None) -> None:
-    """Overwrite ONLY the given bucket=N partition dirs of a
-    bucket-partitioned table: stage the (bucket-partitioned) df to
-    `<path>.swap`, then atomically swap the touched bucket dirs. The
-    append-path term_dict maintenance — untouched buckets are never read
-    or rewritten. (Object-store form: Iceberg dynamic partition
-    overwrite.)"""
-    import shutil
-    tmp = path + ".swap"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    w = df.write.mode("overwrite")
-    for k, v in (options or {}).items():
-        w = w.option(k, v)
-    w.partitionBy("bucket").parquet(tmp)
-    for b in buckets:
-        src = Path(tmp, f"bucket={b}")
-        dst = Path(path, f"bucket={b}")
-        if dst.exists():
-            shutil.rmtree(dst)
-        if src.exists():
-            src.rename(dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-    # same hazard as _swap_write: session-cached listings of the table
-    # must not chase the removed bucket part files
-    df.sparkSession.catalog.refreshByPath(path)
+def _stage_dropping(spark: SparkSession, pub, drop, tables) -> None:
+    """Stage each segment-keyed table in `tables` into the publish `pub`
+    without its rows matching `drop`; a table holding no such row is
+    left as it is."""
+    for sub in tables:
+        p = pub.path / sub
+        if not p.exists():
+            continue
+        df = spark.read.parquet(str(p))
+        if df.filter(drop).limit(1).count() == 0:
+            continue
+        postings = sub == "postings"
+        pub.write(df.filter(~drop), sub,
+                  partition_by="bucket" if postings else None,
+                  options=_BLOOM_OPTS if postings else None)
 
 
 def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
-                                 field_names: list[str], *,
-                                 docs_idx: DataFrame,
-                                 new_docs_idx: DataFrame,
+                                 pub, *, new_docs_idx: DataFrame,
                                  append: bool, segment_base: int,
                                  stats_acc: dict | None = None) -> None:
-    """Term dictionary + per-field collection stats.
+    """Term dictionary + per-field collection stats, staged into the
+    writer's publish `pub` (index/publish.py) over the postings it will
+    publish.
 
     term_dict is hive-partitioned by `bucket`. Fresh build: one global
     shuffle agg over all postings (the k-way SegmentMerger heap is
     Spark's sort-merge shuffle). Append: aggregate ONLY the new segments
     (parquet pushdown on segment_id skips old row groups), merge-add into
-    ONLY the bucket partitions those terms hash to, and swap just those
+    ONLY the bucket partitions those terms hash to, and stage just those
     bucket dirs — maintenance cost is O(touched vocabulary), not
     O(global vocabulary), per micro-batch (the per-segment SegmentInfos
     stats model, summed at write time instead of read time). df/cttf/
     sttf/sum_doc_freq are additive, so incremental maintenance is exact.
     """
-    pdf = spark.read.parquet(cat.postings_path)
+    field_names = cat.fields
+    pdf = spark.read.parquet(pub.source("postings"))
     if append:
         pdf = pdf.filter(F.col("segment_id") >= segment_base)
     new_td = (pdf.groupBy("field", "term", "bucket")
@@ -1189,8 +1115,9 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
         merged = (old_sub.unionByName(new_td)
                   .groupBy("field", "term", "bucket")
                   .agg(F.sum("df").alias("df"), F.sum("cttf").alias("cttf")))
-        _swap_write_buckets(merged, cat.term_dict_path, touched,
-                            options=_BLOOM_OPTS)
+        pub.write(merged, "term_dict", partition_by="bucket",
+                  options=_BLOOM_OPTS,
+                  parts=[f"bucket={b}" for b in touched])
         new_td.unpersist()
     else:
         # per-field sum_doc_freq rides the term_dict WRITE as observed
@@ -1201,8 +1128,8 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
         observed = new_td.observe(obs, *[
             F.sum(F.when(F.col("field") == fn_, F.col("df")))
             .alias(f"sdf_{i}") for i, fn_ in enumerate(field_names)])
-        _swap_write(observed, cat.term_dict_path, partition_by="bucket",
-                    options=_BLOOM_OPTS)
+        pub.write(observed, "term_dict", partition_by="bucket",
+                  options=_BLOOM_OPTS)
 
     # per-field stats: (field, max_doc, doc_count, sum_total_term_freq,
     # sum_doc_freq). max_doc/doc_count are global doc counts (the
@@ -1255,10 +1182,10 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
                          int(prev["sum_total_term_freq"]),
                          sum_doc_freq.get(fn_, 0)))
     # the stats table is a per-field handful of driver-known numbers:
-    # write it directly with pyarrow (atomic dir swap) — no Spark job at
-    # all (the earlier JVM-literal-union form still paid plan analysis
-    # plus a write job; createDataFrame(list) was worse still — one
-    # python worker spawn per partition under worker.reuse=false)
+    # stage it directly with pyarrow — no Spark job at all (the earlier
+    # JVM-literal-union form still paid plan analysis plus a write job;
+    # createDataFrame(list) was worse still — one python worker spawn
+    # per partition under worker.reuse=false)
     import pyarrow as pa
     stats_schema = pa.schema([
         pa.field("field", pa.string()),
@@ -1266,8 +1193,8 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
         pa.field("doc_count", pa.int64()),
         pa.field("sum_total_term_freq", pa.int64()),
         pa.field("sum_doc_freq", pa.int64())])
-    _swap_tiny_parquet(
-        spark, cat.stats_path,
+    _append_tiny_parquet(
+        spark, pub.stage("stats"),
         [{"field": fn_, "max_doc": int(md), "doc_count": int(dc),
           "sum_total_term_freq": int(sttf), "sum_doc_freq": int(sdf_)}
          for fn_, md, dc, sttf, sdf_ in rows], stats_schema)

@@ -4,9 +4,10 @@ Lucene's CheckIndex verification discipline applied to the parquet
 tables).
 
 check_index(spark, root) runs structural checks (commit readable, codec
-registered, tables present, no crashed-merge sentinel) and cross-table
-invariants (doc counts vs stats, per-field df/cttf in term_dict equal to
-the postings-table aggregates, norms/doc_len consistency on a sample).
+registered, tables present, no publish left pending by a crashed writer)
+and cross-table invariants (doc counts vs stats, per-field df/cttf in
+term_dict equal to the postings-table aggregates, norms/doc_len
+consistency on a sample).
 Everything is one Spark pass per invariant — no driver-side row loops —
 so it runs at any index size.
 """
@@ -26,10 +27,10 @@ def check_index(spark: SparkSession, root: str,
                 verify_postings: bool = True) -> dict:
     """Returns {"status": healthy|degraded|unhealthy, "checks": {...},
     "messages": [...]}. unhealthy = structural breakage (unreadable /
-    inconsistent tables); degraded = recoverable leftovers (crashed merge
-    sentinel, orphan tombstones); healthy otherwise."""
+    inconsistent tables); degraded = recoverable leftovers (a pending
+    publish intent, orphan tombstones); healthy otherwise."""
     from diagon_spark.index.builder import IndexCatalog
-    from diagon_spark.index.merge import _MERGE_SENTINEL
+    from diagon_spark.index.publish import INTENT
 
     checks: dict[str, bool] = {}
     msgs: list[str] = []
@@ -53,11 +54,12 @@ def check_index(spark: SparkSession, root: str,
     if not all(checks.values()):
         return {"status": UNHEALTHY, "checks": checks, "messages": msgs}
 
-    pending = Path(root, _MERGE_SENTINEL).exists()
-    checks["no_pending_merge"] = not pending
+    pending = Path(root, INTENT).exists()
+    checks["no_pending_publish"] = not pending
     if pending:
-        msgs.append("crashed commit_merge detected — run "
-                    "merge.repair_merge(root) before writing")
+        msgs.append(f"a writer crashed mid-publish ({INTENT} present) — "
+                    "run diagon_spark.index.publish.repair_index(root), "
+                    "which every writer also runs on entry")
 
     # serving with a different non-ASCII tokenizer than the build used
     # diverges silently on non-ASCII queries. The commit manifest records
@@ -134,7 +136,7 @@ def check_index(spark: SparkSession, root: str,
 
     structural = ["stats_max_doc_matches_docs", "segment_ids_in_range",
                   "doc_ids_unique", "term_dict_matches_postings"]
-    recoverable = ["no_pending_merge", "tombstones_reference_live_docs",
+    recoverable = ["no_pending_publish", "tombstones_reference_live_docs",
                    "tokenizer_matches_build"]
     if any(checks.get(k) is False for k in structural):
         status = UNHEALTHY

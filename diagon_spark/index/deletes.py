@@ -29,16 +29,24 @@ from diagon_spark.index.builder import IndexCatalog, build_index
 def resolve_deletes(spark: SparkSession, cat: IndexCatalog,
                     deletes_df: DataFrame,
                     join_cols: list[str] | None = None) -> DataFrame:
-    """Map delete keys (e.g. repo/path/commit rows) to
-    (doc_id, segment_id) via a broadcast join against the docs table."""
+    """Map delete keys (e.g. repo/path/commit rows) to the
+    (doc_id, segment_id) of LIVE docs via a broadcast join against the
+    docs table — already-tombstoned rows are anti-joined away, so a key
+    deleted twice (or an updated doc's old version) is not counted
+    again."""
     cols = join_cols or cat.key_cols
     if not cols:
         cols = ["doc_id"]
     docs = spark.read.parquet(cat.docs_path)
-    return (docs.join(F.broadcast(deletes_df.select(*cols).distinct()),
+    hits = (docs.join(F.broadcast(deletes_df.select(*cols).distinct()),
                       cols, "inner")
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.col("segment_id").cast("int").alias("segment_id")))
+    dp = Path(cat.root, "deleted")
+    if dp.exists():
+        hits = hits.join(spark.read.parquet(str(dp)).select("doc_id"),
+                         "doc_id", "left_anti")
+    return hits
 
 
 def delete_documents(spark: SparkSession, cat: IndexCatalog,
@@ -50,10 +58,14 @@ def delete_documents(spark: SparkSession, cat: IndexCatalog,
     writer's commit-generation allocation."""
     from diagon_spark.index.lock import write_lock
     with write_lock(cat.root):
-        hits = resolve_deletes(spark, cat, deletes_df, join_cols)
-        n = hits.count()
-        if n:
-            hits.write.mode("append").parquet(f"{cat.root}/deleted")
+        # cached: the count and the append share one docs scan
+        hits = resolve_deletes(spark, cat, deletes_df, join_cols).persist()
+        try:
+            n = hits.count()
+            if n:
+                hits.write.mode("append").parquet(f"{cat.root}/deleted")
+        finally:
+            hits.unpersist()
         cat.commit({"deleted_added": n})
         return n
 
@@ -66,9 +78,6 @@ def deleted_docs_df(spark: SparkSession, cat: IndexCatalog) -> DataFrame | None:
     if not p.exists():
         return None
     df = spark.read.parquet(str(p))
-    if "segment_id" not in df.columns:  # pre-r2 tombstone tables
-        docs = spark.read.parquet(cat.docs_path).select("doc_id", "segment_id")
-        df = df.select("doc_id").join(docs, "doc_id", "inner")
     return df.select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.col("segment_id").cast("int").alias("segment_id")) \
              .distinct()

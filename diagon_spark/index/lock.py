@@ -6,7 +6,9 @@ before any mutation and holds it for the writer's lifetime
 a second writer on the same index fails fast with LockObtainFailed
 instead of corrupting the commit chain. This repo's mutators
 (build_index, delete_documents, commit_merge, rollback) all hold this
-lock.
+lock, and taking it first heals any publish a crashed writer left
+pending (publish.repair_index — the IndexWriter-open cleanup of files
+no commit references).
 
 Mechanics — a kernel advisory lock (fcntl.flock LOCK_EX|LOCK_NB) on
 `<root>/write.lock`, exactly NativeFSLockFactory's native-lock design:
@@ -28,8 +30,8 @@ Mechanics — a kernel advisory lock (fcntl.flock LOCK_EX|LOCK_NB) on
   BEFORE closing the fd, so any racer that opened the doomed inode fails
   that check and retries onto the fresh file.
 
-Object-store caveat (same as _swap_write's): flock is a local-fs
-primitive. On S3-like stores the equivalent is a conditional PUT
+Object-store caveat (same as index/publish.py's renames): flock is a
+local-fs primitive. On S3-like stores the equivalent is a conditional PUT
 (If-None-Match) or the catalog's own optimistic commit (Iceberg/Hive
 lock); the call sites are the integration points.
 """
@@ -103,7 +105,8 @@ def write_lock(root: str):
 
     Raises LockObtainFailedError if another live writer (process or
     sibling thread) holds it; a crashed writer's lock needs no breaking —
-    the kernel released it. Same-thread nesting re-enters."""
+    the kernel released it, and the first acquire repairs what it left
+    half-published. Same-thread nesting re-enters."""
     key = os.path.abspath(root)
     tid = threading.get_ident()
     with _held_mu:
@@ -128,6 +131,8 @@ def write_lock(root: str):
     with _held_mu:
         _held[key] = (tid, 1)
     try:
+        from diagon_spark.index.publish import repair_index
+        repair_index(key)
         yield
     finally:
         with _held_mu:

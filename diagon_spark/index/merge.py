@@ -162,19 +162,26 @@ def merge_segments(spark: SparkSession, cat: IndexCatalog, out_dir: str,
     is forceMerge(1)). Holds out_dir's write.lock — the merge target is a
     new index root being written and committed."""
     from diagon_spark.index.lock import write_lock
+    from diagon_spark.index.publish import Publish
     with write_lock(out_dir):
-        return _merge_segments_impl(spark, cat, out_dir, num_segments)
+        pub = Publish(spark, out_dir)
+        merged, n_purged = _stage_merge(spark, cat, pub, num_segments)
+        pub.commit(merged, {"merged_from": cat.root, "purged": n_purged})
+        return merged
 
 
-def _merge_segments_impl(spark: SparkSession, cat: IndexCatalog,
-                         out_dir: str, num_segments: int = 1
-                         ) -> IndexCatalog:
+def _stage_merge(spark: SparkSession, cat: IndexCatalog, pub,
+                 num_segments: int) -> tuple[IndexCatalog, int]:
+    """Stage `cat` merged to `num_segments` segments into the publish
+    `pub` (index/publish.py): docs, postings, term_dict and stats.
+    Returns the merged, not yet committed catalog of `pub`'s root and
+    the number of purged docs."""
     from diagon_spark._ship import ensure_shipped
     from diagon_spark.index.deletes import deleted_docs_df
     ensure_shipped(spark)
 
     deleted = deleted_docs_df(spark, cat)  # distributed; None if no deletes
-    merged = IndexCatalog(root=out_dir, num_buckets=cat.num_buckets,
+    merged = IndexCatalog(root=pub.root, num_buckets=cat.num_buckets,
                           num_segments=num_segments,
                           has_positions=cat.has_positions,
                           key_cols=cat.key_cols, fields=cat.fields)
@@ -210,11 +217,8 @@ def _merge_segments_impl(spark: SparkSession, cat: IndexCatalog,
                                         F.col("_salt"))
                    .groupBy("bucket", "_salt"))
                .applyInPandas(fn, schema=POSTINGS_SCHEMA))
-    w = (out.repartition(cat.num_buckets, F.col("bucket"))
-         .write.mode("overwrite"))
-    for k_, v_ in _BLOOM_OPTS.items():
-        w = w.option(k_, v_)
-    w.partitionBy("bucket").parquet(merged.postings_path)
+    pub.write(out.repartition(cat.num_buckets, F.col("bucket")),
+              "postings", partition_by="bucket", options=_BLOOM_OPTS)
 
     docs = spark.read.parquet(cat.docs_path) \
         .withColumn("segment_id",
@@ -226,74 +230,18 @@ def _merge_segments_impl(spark: SparkSession, cat: IndexCatalog,
         # Catalyst/AQE picks broadcast vs shuffle by tombstone size
         docs = docs.join(deleted.select("doc_id"), "doc_id", "left_anti")
         n_purged = int(deleted.count())
-    docs.write.mode("overwrite").parquet(merged.docs_path)
-    docs_idx = spark.read.parquet(merged.docs_path)
-    _refresh_term_dict_and_stats(spark, merged, merged.fields,
-                                 docs_idx=docs_idx, new_docs_idx=docs_idx,
-                                 append=False, segment_base=0)
-    merged.commit({"merged_from": cat.root, "purged": n_purged})
-    return merged
+    pub.write(docs, "docs")
+    _refresh_term_dict_and_stats(
+        spark, merged, pub,
+        new_docs_idx=spark.read.parquet(pub.source("docs")),
+        append=False, segment_base=0)
+    return merged, n_purged
 
 
 def force_merge(spark: SparkSession, cat: IndexCatalog,
                 out_dir: str) -> IndexCatalog:
     """Merge all segments into one (forceMerge(1)) under out_dir."""
     return merge_segments(spark, cat, out_dir, num_segments=1)
-
-
-_MERGE_TABLES = ("docs", "postings", "term_dict", "stats")
-_MERGE_SENTINEL = "_merge_pending.json"
-
-
-def repair_merge(root: str) -> str | None:
-    """Recover from a commit_merge crash (single-writer assumption, like
-    IndexWriter's write.lock). The sentinel written before any table swap
-    records the pre-merge latest commit generation; the new commit is
-    published only AFTER every swap, so:
-
-    * latest generation == sentinel's  → the merge commit never published:
-      ROLL BACK — restore every `<table>.premerge` dir over the partial
-      swap and drop the staged tables.
-    * latest generation >  sentinel's  → the commit published but cleanup
-      died: ROLL FORWARD — delete `.premerge` leftovers, prune old
-      commits.
-
-    Returns "rolled_back" / "rolled_forward", or None if no crash marker.
-    """
-    import json as _json
-    import shutil
-    from pathlib import Path
-
-    sentinel = Path(root, _MERGE_SENTINEL)
-    if not sentinel.exists():
-        return None
-    pre_gen = int(_json.loads(sentinel.read_text())["pre_generation"])
-    commits = IndexCatalog.list_commits(root)
-    latest = IndexCatalog._gen_of(commits[-1]) if commits else -1
-    if latest > pre_gen:  # roll forward: finish the cleanup
-        for sub in _MERGE_TABLES:
-            old = Path(root, sub + ".premerge")
-            if old.exists():
-                shutil.rmtree(old)
-        dp = Path(root, "deleted")
-        if dp.exists():
-            shutil.rmtree(dp)
-        for p in IndexCatalog.list_commits(root)[:-1]:
-            p.unlink()
-        outcome = "rolled_forward"
-    else:  # roll back: un-swap whatever was swapped
-        for sub in _MERGE_TABLES:
-            old, dst = Path(root, sub + ".premerge"), Path(root, sub)
-            if old.exists():
-                if dst.exists():  # the swapped-in merged table
-                    shutil.rmtree(dst)
-                old.rename(dst)
-        outcome = "rolled_back"
-    staging = Path(root, "_merging")
-    if staging.exists():
-        shutil.rmtree(staging)
-    sentinel.unlink()
-    return outcome
 
 
 def maybe_merge(spark: SparkSession, cat: IndexCatalog,
@@ -336,69 +284,29 @@ def _commit_merge_impl(spark: SparkSession, cat: IndexCatalog,
     Lucene's default KeepOnlyLastCommitDeletionPolicy. Tombstoned docs
     are purged, so the deleted/ table is dropped too.
 
-    Crash safety (segments_N discipline): the table swaps cannot be one
-    atomic rename, so a sentinel recording the pre-merge generation is
-    fsync-published first, pre-swap tables are KEPT as `.premerge` dirs
-    until the new commit lands, and `repair_merge` deterministically
-    rolls a crashed swap back (commit absent) or forward (commit
-    present). commit_merge itself repairs any earlier crash on entry.
-    Readers opened pre-merge must reopen (LocalSearcher.reopen_if_changed)
-    — on an object store the Iceberg-snapshot analogue keeps old files
-    live until old readers are released (flagged like IndexCatalog.commit).
+    Crash safety: the merged tables, the removal of deleted/ and the
+    commit pruning go through the one publish protocol
+    (index/publish.py), so `publish.repair_index` — run by every writer
+    on entry — rolls a crashed merge back (commit absent) or forward
+    (commit present). Readers opened pre-merge must reopen
+    (LocalSearcher.reopen_if_changed) — on an object store the
+    Iceberg-snapshot analogue keeps old files live until old readers are
+    released (flagged like IndexCatalog.commit).
     """
-    import json as _json
-    import shutil
-    from pathlib import Path
+    from diagon_spark.index.publish import Publish
+    from diagon_spark.streaming.incremental import committed_epochs
 
-    repair_merge(cat.root)  # heal any crashed previous attempt
-    staging = Path(cat.root, "_merging")
-    if staging.exists():
-        shutil.rmtree(staging)
-    merged = merge_segments(spark, cat, str(staging),
-                            num_segments=num_segments)
-    assert merged.num_segments == num_segments
-
-    commits = IndexCatalog.list_commits(cat.root)
-    pre_gen = IndexCatalog._gen_of(commits[-1]) if commits else -1
-    sentinel = Path(cat.root, _MERGE_SENTINEL)
-    tmp = Path(cat.root, "." + _MERGE_SENTINEL + ".tmp")
-    tmp.write_text(_json.dumps({"pre_generation": pre_gen}))
-    tmp.rename(sentinel)  # crash before this point: nothing swapped yet
-
-    for sub in _MERGE_TABLES:
-        src, dst = staging / sub, Path(cat.root, sub)
-        dst.rename(Path(cat.root, sub + ".premerge"))
-        src.rename(dst)
-        # invalidate any session-cached file listing of the swapped path
-        spark.catalog.refreshByPath(str(dst))
-
-    # stream-epoch bookkeeping must SURVIVE commit pruning: gather every
+    pub = Publish(spark, cat.root)
+    merged, _ = _stage_merge(spark, cat, pub, num_segments)
+    pub.remove("deleted")  # purged into the merged postings/docs
+    # stream-epoch bookkeeping must SURVIVE commit pruning: carry every
     # epoch published by the commits about to be deleted so streaming
     # replay idempotency (incremental.committed_epochs) keeps holding
-    import json as _json
-    epochs: set[int] = set()
-    for p in IndexCatalog.list_commits(cat.root):
-        m = _json.loads(p.read_text())
-        if "stream_epoch" in m:
-            epochs.add(int(m["stream_epoch"]))
-        epochs.update(int(e) for e in m.get("merged_epochs", []))
+    epochs = committed_epochs(cat.root)
 
-    out = IndexCatalog(root=cat.root, num_buckets=cat.num_buckets,
-                       num_segments=num_segments,
-                       has_positions=cat.has_positions,
-                       key_cols=cat.key_cols, fields=cat.fields)
-    out.commit({"merge_committed": True,
-                "merged_from_segments": cat.num_segments,
-                **({"merged_epochs": sorted(epochs)} if epochs else {})})
-
-    # cleanup — a crash anywhere below rolls FORWARD via repair_merge
-    for sub in _MERGE_TABLES:
-        shutil.rmtree(Path(cat.root, sub + ".premerge"))
-    dp = Path(cat.root, "deleted")
-    if dp.exists():
-        shutil.rmtree(dp)  # purged into the merged postings/docs
-    shutil.rmtree(staging)  # staging _commits + empty shell
-    for p in IndexCatalog.list_commits(cat.root)[:-1]:
-        p.unlink()  # KeepOnlyLastCommitDeletionPolicy
-    sentinel.unlink()
-    return out
+    pub.commit(merged, {"merge_committed": True,
+                        "merged_from_segments": cat.num_segments,
+                        **({"merged_epochs": sorted(epochs)}
+                           if epochs else {})},
+               prune_commits=True)
+    return merged

@@ -135,7 +135,8 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     and the groupBy plans its own exchange — but a partial aggregate
     runs below it, so that exchange moves ~one 17-long row per
     (doc_id, partition), the same tiny width the old expression plan
-    shuffled; the heavy text/shingle stream still crosses no shuffle.
+    shuffled. The exploded shingle stream crosses no shuffle; the raw
+    text crosses only the under-parallel input repartition.
     """
     from diagon_spark._ship import ensure_shipped
     from diagon_spark.pipelines.textstats import TOKEN_RE

@@ -94,9 +94,6 @@ class LocalSearcher(PlannerMixin):
         from pathlib import Path
         dp = Path(catalog.root, "deleted")
         self._tomb_ds = ds.dataset(str(dp)) if dp.exists() else None
-        self._tomb_legacy = (self._tomb_ds is not None and
-                             "segment_id" not in
-                             self._tomb_ds.schema.names)
         self._tomb_by_seg: dict[int, np.ndarray] = {}
         self._tomb_all: np.ndarray | None = None
 
@@ -124,11 +121,8 @@ class LocalSearcher(PlannerMixin):
         """Per-segment tombstone arrays (sorted unique), loading missing
         segments in ONE pushed-filter scan of the deleted/ table —
         parquet row-group stats keep the read O(touched tombstones), not
-        O(all tombstones). Legacy tables without segment_id fall back to
-        the global load."""
+        O(all tombstones)."""
         segs = [int(s) for s in segs]
-        if self._tomb_legacy:
-            return {s: self.deleted for s in segs}
         need = sorted(s for s in set(segs) if s not in self._tomb_by_seg)
         if need and self._tomb_ds is not None:
             tbl = self._tomb_ds.to_table(
@@ -489,9 +483,11 @@ class LocalSearcher(PlannerMixin):
         keeps serving its point-in-time view: the pyarrow datasets pinned
         their file listings at construction, so appended segment files
         never leak in. Local-fs caveat (flagged like IndexCatalog.commit):
-        a concurrent term_dict/stats _swap_write physically replaces files
+        a writer's publish (index/publish.py) renames the replaced
+        term_dict/stats (and, for rollback or commit_merge, docs/postings)
+        aside and drops them once its commit lands, so their files vanish
         under the old reader — stats were loaded eagerly and term lookups
-        are cached, but a cold term lookup after a swap needs the reader
+        are cached, but a cold lookup after a publish needs the reader
         reopened; on an object store the Iceberg-snapshot analogue keeps
         old files live until the old reader is released."""
         from diagon_spark.index.builder import IndexCatalog

@@ -16,11 +16,14 @@ the index live. Searchers opened after a commit see it atomically
 
 Exactly-once publish on top of foreachBatch's at-least-once delivery:
 each epoch's batch_id is recorded in the commit metadata; a replayed
-epoch that already committed is skipped, and a replay of an epoch that
-failed mid-write first scrubs that epoch's segment rows from docs/
-postings/lineage (segment ids are epoch-determined, so the partial rows
-are identifiable) before re-appending. On Iceberg the scrub would be a
-snapshot rollback instead of a filter-rewrite.
+epoch that already committed is skipped. An epoch that failed mid-write
+may leave two kinds of debris: a half-done term_dict/stats publish,
+which the retry's write.lock heals on entry (index/publish.py rolls it
+back, since its commit never landed), and segment rows already appended
+to docs/postings/lineage, which the retry scrubs first (segment ids are
+epoch-determined, so the partial rows are identifiable) before
+re-appending. On Iceberg the scrub would be a snapshot rollback instead
+of a filter-rewrite.
 """
 
 from __future__ import annotations
@@ -104,40 +107,25 @@ def _scrub_partial_epoch(spark: SparkSession, out_dir: str,
                          seg_lo: int, seg_hi: int) -> None:
     """Remove rows of a partially-written (uncommitted) epoch so the retry
     is idempotent. Rare path: only runs when a previous attempt of this
-    epoch died between its first append and its commit."""
-    import shutil
-    scrubbed = False
-    for sub, part_by in (("docs", None), ("postings", "bucket"),
-                         ("lineage", None)):
-        p = Path(out_dir, sub)
-        if not p.exists():
-            continue
-        df = spark.read.parquet(str(p))
-        cond = ((F.col("segment_id") >= seg_lo)
-                & (F.col("segment_id") < seg_hi))
-        if df.filter(cond).limit(1).count() == 0:
-            continue
-        tmp = Path(str(p) + ".retry_tmp")
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        w = df.filter(~cond).write.mode("overwrite")
-        if part_by:
-            w = w.partitionBy(part_by)
-        w.parquet(str(tmp))
-        shutil.rmtree(p)
-        tmp.rename(p)
-        scrubbed = True
-    if scrubbed:
-        # the failed attempt may have merge-added the epoch into
-        # term_dict/stats before dying — rebuild both from what remains
-        # (full recompute is fine on this rare recovery path)
-        from diagon_spark.index.builder import _refresh_term_dict_and_stats
+    epoch died between its first append and its commit. term_dict/stats
+    are recomputed from the rows that remain, and they swap in with the
+    filtered tables under a commit of their own (index/publish.py)."""
+    from diagon_spark.index.builder import (_refresh_term_dict_and_stats,
+                                            _stage_dropping)
+    from diagon_spark.index.lock import write_lock
+    from diagon_spark.index.publish import Publish
+    with write_lock(out_dir):
+        pub = Publish(spark, out_dir)
+        _stage_dropping(spark, pub, F.col("segment_id").between(
+            seg_lo, seg_hi - 1), ("docs", "postings", "lineage"))
+        if not pub.entries:
+            return
         cat = IndexCatalog.load(out_dir)
-        docs_idx = spark.read.parquet(cat.docs_path)
-        _refresh_term_dict_and_stats(spark, cat, cat.fields,
-                                     docs_idx=docs_idx,
-                                     new_docs_idx=docs_idx,
-                                     append=False, segment_base=0)
+        _refresh_term_dict_and_stats(
+            spark, cat, pub,
+            new_docs_idx=spark.read.parquet(pub.source("docs")),
+            append=False, segment_base=0)
+        pub.commit(cat, {"scrubbed_segments": [seg_lo, seg_hi]})
 
 
 def _exists(out_dir: str) -> bool:

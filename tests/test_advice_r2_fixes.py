@@ -1,6 +1,6 @@
 """Regression tests for round-2 advisor findings (ADVICE.md r02, items
-3-5): codec/format-version rejection of pre-change commits, rollback over
-legacy (doc_id-only) tombstone tables. Items 1-2 (rewrite flattening /
+3-5): codec/format-version rejection of pre-change commits, rollback
+pruning the tombstones of dropped segments. Items 1-2 (rewrite flattening /
 filter-MatchAll) are covered by tests/test_rewrite_semantics.py and the
 un-rewritten-oracle fuzz suite; item 5 (MAXSCORE upward rounding) by
 tests/test_wand_pruning.py exactness assertions."""
@@ -55,10 +55,10 @@ def test_current_commit_loads(spark, tmp_path):
     assert cat.num_segments == 1
 
 
-def test_rollback_with_legacy_tombstone_table(spark, tmp_path):
-    """Pre-r2 tombstone tables carry only doc_id; rollback must upgrade
-    them via the docs table instead of raising on the missing
-    segment_id column (ADVICE r02 item 4)."""
+def test_rollback_prunes_tombstones_of_dropped_segments(spark, tmp_path):
+    """Rollback keeps the tombstones of surviving docs and prunes those
+    of docs in the segments it drops (ADVICE r02 item 4)."""
+    from diagon_spark.index.deletes import delete_documents
     out = str(tmp_path / "idx")
     df0 = spark.createDataFrame(generate_pandas(0, 40))
     cat = build_index(spark, df0, out, num_segments=2, num_buckets=4,
@@ -67,22 +67,23 @@ def test_rollback_with_legacy_tombstone_table(spark, tmp_path):
     build_index(spark, df1, out, num_segments=1, num_buckets=4,
                 positions=False, append=True, segment_base=2)  # gen 1
 
-    # legacy-style tombstones: one surviving doc + one appended doc
+    # tombstones: one surviving doc + one appended doc (gen 2)
     docs = spark.read.parquet(f"{out}/docs")
     keep_victim = int(docs.filter("segment_id < 2")
                       .select("doc_id").first().doc_id)
     drop_victim = int(docs.filter("segment_id >= 2")
                       .select("doc_id").first().doc_id)
-    spark.createDataFrame([(keep_victim,), (drop_victim,)], "doc_id long") \
-        .write.mode("overwrite").parquet(f"{out}/deleted")
+    assert delete_documents(
+        spark, IndexCatalog.load(out),
+        spark.createDataFrame([(keep_victim,), (drop_victim,)],
+                              "doc_id long"), join_cols=["doc_id"]) == 2
 
     rolled = rollback(spark, out, generation=0)
     assert rolled.num_segments == 2
     # tombstone of the dropped epoch's doc is pruned; the survivor keeps
-    # its (upgraded, segment_id-carrying) tombstone row
+    # its tombstone row
     del_rows = spark.read.parquet(f"{out}/deleted").collect()
     assert {int(r.doc_id) for r in del_rows} == {keep_victim}
-    assert all(hasattr(r, "segment_id") for r in del_rows)
     s = Searcher(spark, rolled)
     assert s.count(MatchAll()) == 39  # 40 docs - 1 live tombstone
     hit_ids = {int(r.doc_id) for r in s.search(MatchAll(), k=100).collect()}

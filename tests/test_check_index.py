@@ -1,5 +1,5 @@
 """check_index — CheckIndex / HealthCheck.h parity: healthy on a fresh
-index, degraded on a crashed-merge sentinel, unhealthy on cross-table
+index, degraded on a pending publish intent, unhealthy on cross-table
 inconsistencies."""
 
 import json
@@ -8,7 +8,7 @@ from pathlib import Path
 from diagon_spark import build_index
 from diagon_spark.corpus import generate_pandas
 from diagon_spark.index.check import check_index
-from diagon_spark.index.merge import _MERGE_SENTINEL
+from diagon_spark.index.publish import INTENT
 
 
 def _build(spark, tmp_path, n=50):
@@ -28,11 +28,11 @@ def test_fresh_index_healthy(spark, tmp_path):
 
 def test_pending_merge_sentinel_degrades(spark, tmp_path):
     out = _build(spark, tmp_path)
-    Path(out, _MERGE_SENTINEL).write_text(json.dumps({"pre_generation": 0}))
+    Path(out, INTENT).write_text(json.dumps({"pre_generation": 0}))
     r = check_index(spark, out)
     assert r["status"] == "degraded"
-    assert not r["checks"]["no_pending_merge"]
-    assert any("repair_merge" in m for m in r["messages"])
+    assert not r["checks"]["no_pending_publish"]
+    assert any("repair_index" in m for m in r["messages"])
 
 
 def test_stats_mismatch_unhealthy(spark, tmp_path):

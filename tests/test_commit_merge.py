@@ -12,6 +12,7 @@ from diagon_spark.corpus import generate_pandas
 from diagon_spark.index.builder import IndexCatalog
 from diagon_spark.index.deletes import delete_documents
 from diagon_spark.index.merge import commit_merge
+from diagon_spark.index.publish import ASIDE, INTENT, STAGING, repair_index
 from diagon_spark.search.local_reader import LocalSearcher
 from diagon_spark.search.query import MatchAll, Term
 
@@ -54,7 +55,7 @@ def test_commit_merge_in_place_removes_sources_and_purges(spark, tmp_path):
     # KeepOnlyLastCommitDeletionPolicy: only the merge commit remains
     commits = IndexCatalog.list_commits(out)
     assert len(commits) == 1
-    assert not Path(out, "_merging").exists()
+    assert not Path(out, STAGING).exists()
 
     # Spark path agrees post-merge
     s = Searcher(spark, merged)
@@ -88,11 +89,14 @@ def _setup_with_deletes(spark, tmp_path, n=60):
     return out, cat, set(victims), n
 
 
+_MERGE_ENTRIES = {t: True for t in
+                  ("docs", "postings", "term_dict", "stats", "deleted")}
+
+
 def test_repair_rolls_back_crash_mid_swap(spark, tmp_path):
-    """Kill window: sentinel written, only SOME tables swapped, commit
+    """Kill window: intent written, only SOME tables swapped, commit
     never published — repair must restore the pre-merge state exactly."""
     import json
-    import shutil
 
     from diagon_spark.index import merge as m
 
@@ -101,22 +105,24 @@ def test_repair_rolls_back_crash_mid_swap(spark, tmp_path):
     pre_hits = pre.search(Term("int"), k=1000)
     pre_count = pre.count(MatchAll())
 
-    # simulate the crash: stage a merge, write the sentinel, swap ONE
+    # simulate the crash: stage a merge, write the intent, swap ONE
     # table, then "die" (no commit)
-    staging = Path(out, "_merging")
+    staging = Path(out, STAGING)
     m.merge_segments(spark, cat, str(staging), num_segments=1)
     gen = IndexCatalog._gen_of(IndexCatalog.list_commits(out)[-1])
-    Path(out, m._MERGE_SENTINEL).write_text(
-        json.dumps({"pre_generation": gen}))
-    Path(out, "docs").rename(Path(out, "docs.premerge"))
+    Path(out, INTENT).write_text(json.dumps(
+        {"pre_generation": gen, "entries": _MERGE_ENTRIES,
+         "prune_commits": True}))
+    Path(out, ASIDE).mkdir()
+    Path(out, "docs").rename(Path(out, ASIDE, "docs"))
     (staging / "docs").rename(Path(out, "docs"))
 
-    assert m.repair_merge(out) == "rolled_back"
+    assert repair_index(out) == "rolled_back"
     post = LocalSearcher(IndexCatalog.load(out))
     assert post.count(MatchAll()) == pre_count
     assert post.search(Term("int"), k=1000) == pre_hits
-    assert not Path(out, m._MERGE_SENTINEL).exists()
-    assert not Path(out, "docs.premerge").exists()
+    assert not Path(out, INTENT).exists()
+    assert not Path(out, ASIDE).exists()
     assert not staging.exists()
     # and a subsequent commit_merge heals + completes normally
     cat2 = IndexCatalog.load(out)
@@ -126,37 +132,35 @@ def test_repair_rolls_back_crash_mid_swap(spark, tmp_path):
 
 
 def test_repair_rolls_forward_crash_mid_cleanup(spark, tmp_path):
-    """Kill window: commit published but .premerge/deleted cleanup died —
+    """Kill window: commit published but the aside/deleted cleanup died —
     repair must finish the cleanup, never resurrect old tables."""
+    import json
     import shutil
-
-    from diagon_spark.index import merge as m
 
     out, cat, victims, n = _setup_with_deletes(spark, tmp_path)
 
     # run a real commit_merge, then re-create the crashed-cleanup state:
-    # sentinel present, a stale .premerge dir and deleted/ left behind
-    import json
+    # intent present, the old docs/ and deleted/ still set aside
     pre_gen = IndexCatalog._gen_of(IndexCatalog.list_commits(out)[-1])
-    m.commit_merge(spark, cat, num_segments=1)
-    Path(out, m._MERGE_SENTINEL).write_text(
-        json.dumps({"pre_generation": pre_gen}))
-    shutil.copytree(Path(out, "docs"), Path(out, "docs.premerge"))
-    Path(out, "deleted").mkdir()
+    commit_merge(spark, cat, num_segments=1)
+    Path(out, INTENT).write_text(json.dumps(
+        {"pre_generation": pre_gen, "entries": _MERGE_ENTRIES,
+         "prune_commits": True}))
+    shutil.copytree(Path(out, "docs"), Path(out, ASIDE, "docs"))
+    Path(out, ASIDE, "deleted").mkdir()
 
-    assert m.repair_merge(out) == "rolled_forward"
-    assert not Path(out, "docs.premerge").exists()
+    assert repair_index(out) == "rolled_forward"
+    assert not Path(out, ASIDE).exists()
     assert not Path(out, "deleted").exists()
-    assert not Path(out, m._MERGE_SENTINEL).exists()
+    assert not Path(out, INTENT).exists()
     assert len(IndexCatalog.list_commits(out)) == 1
     assert (LocalSearcher(IndexCatalog.load(out)).count(MatchAll())
             == n - len(victims))
 
 
 def test_repair_noop_without_sentinel(spark, tmp_path):
-    from diagon_spark.index import merge as m
     out, _, _, _ = _setup_with_deletes(spark, tmp_path)
-    assert m.repair_merge(out) is None
+    assert repair_index(out) is None
 
 
 def test_maybe_merge_policy_gate(spark, tmp_path):

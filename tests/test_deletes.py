@@ -2,10 +2,12 @@
 index/IndexWriter.h:224-233): tombstone -> vanish from top-k -> purge on
 merge; updateDocument = delete + add."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
-from diagon_spark import build_index, Searcher
+from diagon_spark import IndexCatalog, build_index, Searcher
 from diagon_spark.corpus import corpus_df
 from diagon_spark.index.deletes import delete_documents, update_documents
 from diagon_spark.index.merge import merge_segments
@@ -64,3 +66,25 @@ def test_update_documents(spark, built):
     # old content of that doc no longer retrievable under its key's new id
     fetched = s.fetch(s.search(Term("zzupdated"), k=1)).collect()[0]
     assert fetched.repo == one.repo and fetched.path == one.path
+
+
+def test_delete_counts_only_live_docs(spark, built):
+    """delete_documents resolves keys against LIVE docs: deleting the same
+    file twice returns 1 then 0, and a second update of a file tombstones
+    only its current version, not the version the first update replaced."""
+    cat, df = built
+    one, two = df.orderBy("repo", "path", "commit").limit(2).collect()
+    key = spark.createDataFrame([(one.repo, one.path, one.commit)],
+                                "repo string, path string, commit string")
+    assert delete_documents(spark, cat, key) == 1
+    assert delete_documents(spark, cat, key) == 0
+
+    schema = ("repo string, path string, commit string, lang string, "
+              "content string")
+    for text in ("zzfirst version", "zzsecond version"):
+        cat = update_documents(spark, cat, spark.createDataFrame(
+            [(two.repo, two.path, two.commit, two.lang, text)], schema))
+    added = [json.loads(p.read_text()).get("deleted_added")
+             for p in IndexCatalog.list_commits(cat.root)]
+    assert [a for a in added if a is not None] == [1, 0, 1, 1]
+    assert Searcher(spark, cat).count(MatchAll()) == 200 - 1
