@@ -1115,9 +1115,10 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
         merged = (old_sub.unionByName(new_td)
                   .groupBy("field", "term", "bucket")
                   .agg(F.sum("df").alias("df"), F.sum("cttf").alias("cttf")))
-        pub.write(merged, "term_dict", partition_by="bucket",
-                  options=_BLOOM_OPTS,
-                  parts=[f"bucket={b}" for b in touched])
+        if touched:  # docs without postings leave term_dict as it is
+            pub.write(merged, "term_dict", partition_by="bucket",
+                      options=_BLOOM_OPTS,
+                      parts=[f"bucket={b}" for b in touched])
         new_td.unpersist()
     else:
         # per-field sum_doc_freq rides the term_dict WRITE as observed

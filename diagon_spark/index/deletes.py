@@ -58,14 +58,10 @@ def delete_documents(spark: SparkSession, cat: IndexCatalog,
     writer's commit-generation allocation."""
     from diagon_spark.index.lock import write_lock
     with write_lock(cat.root):
-        # cached: the count and the append share one docs scan
-        hits = resolve_deletes(spark, cat, deletes_df, join_cols).persist()
-        try:
-            n = hits.count()
-            if n:
-                hits.write.mode("append").parquet(f"{cat.root}/deleted")
-        finally:
-            hits.unpersist()
+        hits = resolve_deletes(spark, cat, deletes_df, join_cols)
+        n = hits.count()
+        if n:
+            hits.write.mode("append").parquet(f"{cat.root}/deleted")
         cat.commit({"deleted_added": n})
         return n
 

@@ -47,18 +47,20 @@ class Publish:
         self.root, self.path = root, Path(root)
         self.entries: list[str] = []
 
-    def stage(self, table: str, parts=()) -> str:
-        """Staging dir of `table`. The publish swaps in the whole table,
-        or only its `parts` sub-dirs (the touched `bucket=N` partitions of
-        an append); an entry left unwritten is removed."""
-        self.entries += [f"{table}/{p}" for p in parts] or [table]
+    def stage(self, table: str, parts=None) -> str:
+        """Staging dir of `table`. The publish swaps in the whole table
+        (`parts` None), or only its `parts` sub-dirs (the touched
+        `bucket=N` partitions of an append); an entry left unwritten is
+        removed."""
+        self.entries += ([table] if parts is None
+                         else [f"{table}/{p}" for p in parts])
         return str(self.path / STAGING / table)
 
     def remove(self, table: str) -> None:
         self.entries.append(table)
 
     def write(self, df, table: str, partition_by: str | None = None,
-              options: dict | None = None, parts=()) -> None:
+              options: dict | None = None, parts=None) -> None:
         """Stage `df` as (the `parts` of) `table`."""
         w = df.write.mode("overwrite")
         for k, v in (options or {}).items():

@@ -22,8 +22,9 @@ which the retry's write.lock heals on entry (index/publish.py rolls it
 back, since its commit never landed), and segment rows already appended
 to docs/postings/lineage, which the retry scrubs first (segment ids are
 epoch-determined, so the partial rows are identifiable) before
-re-appending. On Iceberg the scrub would be a snapshot rollback instead
-of a filter-rewrite.
+re-appending. The scrub leaves term_dict/stats alone: after the
+rollback they already match the last commit. On Iceberg the scrub would
+be a snapshot rollback instead of a filter-rewrite.
 """
 
 from __future__ import annotations
@@ -108,24 +109,20 @@ def _scrub_partial_epoch(spark: SparkSession, out_dir: str,
     """Remove rows of a partially-written (uncommitted) epoch so the retry
     is idempotent. Rare path: only runs when a previous attempt of this
     epoch died between its first append and its commit. term_dict/stats
-    are recomputed from the rows that remain, and they swap in with the
-    filtered tables under a commit of their own (index/publish.py)."""
-    from diagon_spark.index.builder import (_refresh_term_dict_and_stats,
-                                            _stage_dropping)
+    change only together with a commit, and write.lock rolls back a
+    publish that died before its own, so they already match the last
+    commit; only docs/postings/lineage are filtered, swapped in under a
+    commit of their own (index/publish.py)."""
+    from diagon_spark.index.builder import _stage_dropping
     from diagon_spark.index.lock import write_lock
     from diagon_spark.index.publish import Publish
     with write_lock(out_dir):
         pub = Publish(spark, out_dir)
         _stage_dropping(spark, pub, F.col("segment_id").between(
             seg_lo, seg_hi - 1), ("docs", "postings", "lineage"))
-        if not pub.entries:
-            return
-        cat = IndexCatalog.load(out_dir)
-        _refresh_term_dict_and_stats(
-            spark, cat, pub,
-            new_docs_idx=spark.read.parquet(pub.source("docs")),
-            append=False, segment_base=0)
-        pub.commit(cat, {"scrubbed_segments": [seg_lo, seg_hi]})
+        if pub.entries:
+            pub.commit(IndexCatalog.load(out_dir),
+                       {"scrubbed_segments": [seg_lo, seg_hi]})
 
 
 def _exists(out_dir: str) -> bool:

@@ -8,11 +8,13 @@
 """
 
 import numpy as np
+import pytest
 
 from diagon_spark import Searcher, build_index
 from diagon_spark.analysis.tokenizer import tokenize
 from diagon_spark.corpus import generate_pandas
 from diagon_spark.index.builder import IndexCatalog
+from diagon_spark.index.check import HEALTHY, check_index
 from diagon_spark.search.query import MatchAll, Term
 
 
@@ -78,12 +80,20 @@ def test_streaming_epoch_replay_idempotent(spark, tmp_path):
                 positions=False, commit_extra={"stream_epoch": 0})
     assert committed_epochs(out) == {0}
 
-    # epoch 1 partially written (docs+postings appended, no commit):
+    # epoch 1 partially written: docs+postings appended and term_dict/
+    # stats swapped in, then the writer dies just before its commit
     df1 = spark.createDataFrame(generate_pandas(60, 100))
-    build_index(spark, df1, out, num_segments=2, num_buckets=4,
-                positions=False, append=True, segment_base=2)
-    # (that call DID commit; emulate "no commit" by treating epoch 1 as
-    # unacknowledged and scrubbing — the retry path)
+
+    def die(self, extra=None):
+        raise RuntimeError("killed before the commit")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(IndexCatalog, "commit", die)
+        with pytest.raises(RuntimeError, match="killed"):
+            build_index(spark, df1, out, num_segments=2, num_buckets=4,
+                        positions=False, append=True, segment_base=2)
+    assert committed_epochs(out) == {0}
+    # the retry path: scrub, then re-append
     _scrub_partial_epoch(spark, out, 2, 4)
     build_index(spark, df1, out, num_segments=2, num_buckets=4,
                 positions=False, append=True, segment_base=2,
@@ -93,6 +103,7 @@ def test_streaming_epoch_replay_idempotent(spark, tmp_path):
     docs = spark.read.parquet(f"{out}/docs")
     assert docs.count() == 100
     assert docs.select("doc_id").distinct().count() == 100
+    assert check_index(spark, out)["status"] == HEALTHY
 
 
 def test_unicode_fallback_underscore_separator():

@@ -142,6 +142,8 @@ def _build(spark, root, lo, hi, **kw):
 def test_killpoints_fresh_build(spark, tmp_path):
     base = str(tmp_path / "base")
     _build(spark, base, 0, 30, num_segments=2)
+    # only term_dict/stats: a fresh build clears postings/lineage/deleted
+    # and overwrites docs before its commit, outside the publish
     _run_killpoints(spark, tmp_path, base,
                     lambda r: _build(spark, r, 30, 60, num_segments=2),
                     ["term_dict", "stats"])

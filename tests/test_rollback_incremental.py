@@ -122,3 +122,33 @@ def test_append_scan_prunes_old_segments(spark, tmp_path):
            .filter(F.col("segment_id") >= 2))
     plan = pdf._jdf.queryExecution().executedPlan().toString()
     assert "GreaterThanOrEqual(segment_id,2)" in plan
+
+
+def test_append_of_empty_content_keeps_term_dict(spark, tmp_path):
+    """An append whose docs yield no postings touches no term_dict bucket:
+    the whole live term_dict stays as it was and the index stays
+    consistent (an empty bucket list must not mean 'replace the table')."""
+    import pyarrow.dataset as ds
+
+    from diagon_spark.index.check import HEALTHY, check_index
+
+    out = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(generate_pandas(0, 40)), out,
+                num_segments=2, num_buckets=4, positions=False)
+
+    def term_dict():
+        t = ds.dataset(f"{out}/term_dict", format="parquet",
+                       partitioning="hive").to_table()
+        return sorted((r["field"], r["term"], int(r["df"]), int(r["cttf"]))
+                      for r in t.to_pylist())
+
+    before = term_dict()
+    empty = spark.createDataFrame(
+        [("r_empty", "p_empty", "c_empty", "py", "")],
+        "repo string, path string, commit string, lang string, content string")
+    build_index(spark, empty, out, num_segments=1, num_buckets=4,
+                positions=False, append=True, segment_base=2)
+    assert term_dict() == before
+    assert check_index(spark, out)["status"] == HEALTHY
+    s = Searcher(spark, IndexCatalog.load(out))
+    assert s.count(MatchAll()) == 41
