@@ -36,16 +36,9 @@ from pyspark.sql import DataFrame, functions as F
 DEFAULT_BYTES_PER_PARTITION = 256 << 10
 
 
-def _input_bytes(df: DataFrame) -> int | None:
-    """Best-effort input size from the scan's file list (listing is
-    already cached by the session); None when the plan has no file
-    sources (in-memory DataFrames)."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # pragma: no cover - defensive
-        return None
-    if not files:
-        return None
+def _input_bytes(files: list[str]) -> int | None:
+    """Best-effort input size of a scan's files; None when one cannot be
+    stat'ed."""
     total = 0
     for f in files:
         p = f[len("file:"):] if f.startswith("file:") else f
@@ -69,19 +62,22 @@ def ensure_min_parallelism(df: DataFrame, key_col: str | None = None,
     key_col None: round-robin (deterministic — Spark sorts before
     round-robin repartition, SPARK-23207).
     """
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    cap = cores * 2
-    est = _input_bytes(df)
-    if est is None:
-        # no file source to size from (in-memory DataFrame): trust the
-        # caller's existing partitioning
-        return df
-    target = max(1, min(cap, -(-est // max(bytes_per_partition, 1))))
     try:
-        n = df.rdd.getNumPartitions()
+        # the scan's file list (listing is already cached by the session)
+        files = df.inputFiles()
+        n = df.rdd.getNumPartitions() if files else 0
     except Exception:  # pragma: no cover - defensive (unresolvable plan)
         return df
+    cap = df.sparkSession.sparkContext.defaultParallelism * 2
+    # no file source to size from (in-memory DataFrame): trust the
+    # caller's existing partitioning. At the cap already: no target can
+    # be higher, so skip sizing — it stats every input file
+    if not files or n >= cap:
+        return df
+    est = _input_bytes(files)
+    if est is None:
+        return df
+    target = max(1, min(cap, -(-est // max(bytes_per_partition, 1))))
     if n >= target:
         return df
     if key_col is not None:

@@ -9,11 +9,12 @@ trips) and runs the SAME planning (planner.py) and numpy scoring kernels
 (wand.py) the Spark executors run — one code path, two execution
 substrates:
 
-* Spark path (Searcher): distributed scans/analytics, the build engine,
-  arbitrarily large indexes;
-* local path (LocalSearcher): millisecond BM25 top-k over the same
-  committed tables, suitable for a serving tier that mounts the index
-  (exactly how the reference is embedded as a library via its C API).
+* driver (this reader): millisecond BM25 top-k over the committed
+  tables, for a serving tier that mounts the index (how the reference
+  is embedded via its C API) — and the Spark Searcher's reader core:
+  its stats, term_dict lookups and small queries run here;
+* Spark (Searcher's distributed plan): larger queries, distributed
+  scans/analytics, the build engine, arbitrarily large indexes.
 
 Nested boolean/phrase trees are served too, INCLUDING Range/MatchAll
 clauses: aux doc sets materialize from a pyarrow doc-values scan of the
@@ -42,14 +43,23 @@ import pyarrow.parquet as pq
 from diagon_spark.index.builder import IndexCatalog, term_bucket
 from diagon_spark.search import wand
 from diagon_spark.search.planner import PlannerMixin, run_segment_spec
-from diagon_spark.search.query import (Boolean, MatchAll, MatchNone, Phrase,
-                                       Query, Range, Term, rewrite)
+from diagon_spark.search.query import (MatchAll, MatchNone, Query, Range,
+                                       Term, rewrite)
 
-_BASE_COLS = ["field", "term", "segment_id", "chunk", "df", "doc_blocks",
-              "tf_blocks", "norm_bytes", "block_first", "block_last",
-              "block_max_tf", "block_max_norm", "block_doc_off",
-              "block_tf_off"]
-_POS_COLS = _BASE_COLS + ["pos_blocks", "block_pos_off"]
+BASE_COLS = ["field", "term", "segment_id", "chunk", "df", "doc_blocks",
+             "tf_blocks", "norm_bytes", "block_first", "block_last",
+             "block_max_tf", "block_max_norm", "block_doc_off",
+             "block_tf_off"]
+POS_COLS = BASE_COLS + ["pos_blocks", "block_pos_off"]
+
+
+def term_filter(col, pairs: list[tuple[str, str]], num_buckets: int):
+    """Bucket-pruned (field, term) lookup filter, built with `col`
+    (`pyarrow.compute.field` or `pyspark.sql.functions.col`)."""
+    buckets = sorted({term_bucket(t, num_buckets, f) for f, t in pairs})
+    return (col("bucket").isin(buckets)
+            & col("field").isin(sorted({f for f, _ in pairs}))
+            & col("term").isin(sorted({t for _, t in pairs})))
 
 
 class LocalSearcher(PlannerMixin):
@@ -151,13 +161,9 @@ class LocalSearcher(PlannerMixin):
                    ) -> dict[tuple[str, str], tuple[int, int]]:
         missing = [p for p in pairs if p not in self._term_stats_cache]
         if missing:
-            buckets = sorted({term_bucket(t, self.cat.num_buckets, f)
-                              for f, t in missing})
-            flt = (pc.field("bucket").isin(buckets)
-                   & pc.field("field").isin(sorted({f for f, _ in missing}))
-                   & pc.field("term").isin(sorted({t for _, t in missing})))
             tbl = self._term_dict_ds.to_table(
-                columns=["field", "term", "df", "cttf"], filter=flt)
+                columns=["field", "term", "df", "cttf"],
+                filter=term_filter(pc.field, missing, self.cat.num_buckets))
             found = {(f, t): (int(d), int(c)) for f, t, d, c in
                      zip(tbl.column("field").to_pylist(),
                          tbl.column("term").to_pylist(),
@@ -173,14 +179,9 @@ class LocalSearcher(PlannerMixin):
                        need_positions: bool):
         if not pairs:
             return []
-        buckets = sorted({term_bucket(t, self.cat.num_buckets, f)
-                          for f, t in pairs})
-        cols = _POS_COLS if need_positions else _BASE_COLS
         tbl = self._postings_ds.to_table(
-            columns=cols,
-            filter=(pc.field("bucket").isin(buckets)
-                    & pc.field("field").isin(sorted({f for f, _ in pairs}))
-                    & pc.field("term").isin(sorted({t for _, t in pairs}))))
+            columns=POS_COLS if need_positions else BASE_COLS,
+            filter=term_filter(pc.field, pairs, self.cat.num_buckets))
         return tbl.to_pylist()
 
     # ---------------------------------------------- aux doc-value scans
@@ -262,10 +263,14 @@ class LocalSearcher(PlannerMixin):
         here (scoring is many small numpy calls, not GIL-releasing bulk
         kernels) — 8 threads ran 8x SLOWER than one. Concurrency for a
         serving tier comes from running many queries in parallel
-        processes, like the reference's one-thread-per-search model."""
+        processes, like the reference's one-thread-per-search model.
+        `stats_list`, when given, gets one counters dict per segment
+        (segment_id, total, exact, blocks_total, blocks_decoded)."""
         results = []
-        for _seg, postings, aux, banned in self._segment_groups(spec):
-            st: dict | None = {} if stats_list is not None else None
+        for seg, postings, aux, banned in self._segment_groups(spec):
+            st = ({"segment_id": seg, "total": 0, "exact": True,
+                   "blocks_total": 0, "blocks_decoded": 0}
+                  if stats_list is not None else None)
             results.append(run_segment_spec(spec, postings, aux, k, f64,
                                             after, banned,
                                             stats_out=st))
@@ -284,14 +289,18 @@ class LocalSearcher(PlannerMixin):
             ids = self._matching_doc_ids(q)[:k]
             return [(int(d), float(q.boost)) for d in ids]
         spec = self.plan(q)
-        results = self._run_segments(spec, k, f64, after)
-        all_docs = [d for d, _ in results]
-        if not all_docs:
-            return []
-        docs = np.concatenate(all_docs)
-        scores = np.concatenate([s for _, s in results])
-        d, s = wand._topk(docs, scores, k)
+        d, s = self._top_hits(spec, k, f64, after)
         return [(int(a), float(b)) for a, b in zip(d, s)]
+
+    def _top_hits(self, spec: dict, k: int, f64: bool, after,
+                  stats_list: list | None = None):
+        """Global top-k (docs, scores) of a planned spec, collector
+        order — also the Spark Searcher's driver substrate."""
+        parts = self._run_segments(spec, k, f64, after, stats_list)
+        if not parts:
+            return np.zeros(0, np.int64), np.zeros(0, np.float64)
+        return wand._topk(np.concatenate([d for d, _ in parts]),
+                          np.concatenate([s for _, s in parts]), k)
 
     def search_with_total(self, query: Query, k: int = 100,
                           f64: bool = False
@@ -307,14 +316,9 @@ class LocalSearcher(PlannerMixin):
                     int(len(ids)), "eq")
         spec = self.plan(q)
         stats: list[dict] = []
-        parts = self._run_segments(spec, k, f64, None, stats_list=stats)
-        total = sum(int(st.get("total", 0)) for st in stats)
-        exact = all(bool(st.get("exact", True)) for st in stats)
-        if not parts:
-            return [], 0, "eq"
-        docs = np.concatenate([d for d, _ in parts])
-        scores = np.concatenate([s for _, s in parts])
-        d, s = wand._topk(docs, scores, k)
+        d, s = self._top_hits(spec, k, f64, None, stats_list=stats)
+        total = sum(st["total"] for st in stats)
+        exact = all(st["exact"] for st in stats)
         return ([(int(a), float(b)) for a, b in zip(d, s)], total,
                 "eq" if exact else "gte")
 
@@ -327,13 +331,7 @@ class LocalSearcher(PlannerMixin):
             return np.zeros(0, np.int64)
         if isinstance(q, (MatchAll, Range)):
             return self._matching_doc_ids(q)
-        spec = self.plan(q, force_tree=True)
-        parts = []
-        for _seg, postings, aux, banned in self._segment_groups(spec):
-            docs, _ = wand.eval_tree(spec["root"], postings,
-                                     spec["params"], aux, False)
-            keep = wand._mask_banned(docs, banned)
-            parts.append(docs[keep] if keep is not None else docs)
+        parts = [ids for _seg, ids in self._match_ids_by_segment(q)]
         if not parts:
             return np.zeros(0, np.int64)
         return np.sort(np.concatenate(parts))
@@ -445,7 +443,6 @@ class LocalSearcher(PlannerMixin):
         """Stored-fields point lookup — diagon_reader_get_document
         analogue: rows of the docs table for the given ids, in the given
         id order (pyarrow scan with a pushed id filter)."""
-        import pyarrow.compute as pc
         ids = [int(d) for d in doc_ids]
         tbl = self._docs_ds.to_table(
             columns=columns,
@@ -460,7 +457,6 @@ class LocalSearcher(PlannerMixin):
         ascending by term for one field, optionally restricted to a
         prefix (seekCeil-style). Reads the term_dict dataset directly —
         a prefix restriction prunes via the pushed-down filter."""
-        import pyarrow.compute as pc
         fld = field or self.default_field
         flt = pc.field("field") == fld
         if prefix:
@@ -515,11 +511,4 @@ class LocalSearcher(PlannerMixin):
             return self.max_doc - len(self.deleted)
         if isinstance(q, Range):
             return int(len(self._matching_doc_ids(q)))
-        spec = self.plan(q, force_tree=True)
-        total = 0
-        for _seg, postings, aux, banned in self._segment_groups(spec):
-            docs, _ = wand.eval_tree(spec["root"], postings, spec["params"],
-                                     aux, False)
-            keep = wand._mask_banned(docs, banned)
-            total += int(keep.sum()) if keep is not None else int(len(docs))
-        return total
+        return sum(len(ids) for _seg, ids in self._match_ids_by_segment(q))

@@ -1,18 +1,23 @@
 """Searcher — the IndexSearcher analogue (search/IndexSearcher.cpp:50-135).
 
-Execution restates the reference's per-segment search as a 3-stage Spark
-plan (SURVEY.md §3.1):
+The reader core is a LocalSearcher over the same catalog (local_reader.py):
+collection stats and term_dict lookups are pyarrow reads, so planning —
+the FST term-seek analogue, each leaf's SimScorer constants computed once
+per query like Weight creation (TermQuery.cpp:184-259) — starts no Spark
+job. After planning a query is routed by the df values it just read:
 
-  stage 1 (driver): look up query (field, term) pairs in term_dict/stats —
-      the FST term-seek analogue; compute each leaf's SimScorer constants
-      once per query like Weight creation (TermQuery.cpp:184-259);
-  stage 2 (executors): scan ONLY the pruned postings rows (partition
-      pruning on bucket + parquet predicate/bloom pushdown on term;
-      positions column read only for phrase queries — column pruning) and
-      run the vectorized block-max scorer per segment group (wand.py),
-      emitting each segment's local top-k;
-  stage 3: one tiny shuffle — global orderBy(score desc, doc_id asc)
-      limit k, the TopScoreDocCollector tie-break.
+  * driver: no Range/MatchAll clause and a summed df of at most
+      _DOCS_PER_SCORE_TASK (the work bound of one Spark scoring task) —
+      the reader core scores it with the kernels the executors run, and
+      the top-k comes back as a LocalRelation DataFrame (no Spark job);
+  * Spark: everything else runs the distributed plan (SURVEY.md §3.1):
+      stage 1: scan ONLY the pruned postings rows (partition pruning on
+        bucket + parquet predicate/bloom pushdown on term; positions
+        column read only for phrase queries — column pruning);
+      stage 2: the vectorized block-max scorer per segment group
+        (wand.py), emitting each segment's local top-k;
+      stage 3: one tiny shuffle — global orderBy(score desc, doc_id asc)
+        limit k, the TopScoreDocCollector tie-break.
 
 Nested query trees (boolean-of-phrase/boolean/range — BooleanQuery.cpp
 rewrite/composition semantics) run through the same stages; Range /
@@ -24,20 +29,24 @@ Deletes are scale-safe: the tombstone table (doc_id, segment_id) is
 cogrouped into the scoring UDF as another aux set and masked before
 top-k selection — never a driver-collected id list, never an `isin`
 literal in the plan, and k is NOT inflated (the live-docs bitmap of
-codecs/LiveDocsFormat.h:18-47 applied at scorer level).
+codecs/LiveDocsFormat.h:18-47 applied at scorer level). The driver
+substrate masks the same tombstones per touched segment.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from diagon_spark.index.builder import IndexCatalog, term_bucket
 from diagon_spark.search import wand
+from diagon_spark.search.local_reader import (BASE_COLS, POS_COLS,
+                                              LocalSearcher, term_filter)
 from diagon_spark.search.planner import PlannerMixin, run_segment_spec
-from diagon_spark.search.query import (Boolean, MatchAll, MatchNone, Phrase,
-                                       Query, Range, Term, rewrite)
+from diagon_spark.search.query import (MatchAll, MatchNone, Query, Range,
+                                       Term, rewrite)
 
 _HIT_SCHEMA = "doc_id long, score double"
 _TOTAL_SCHEMA = ("doc_id long, score double, segment_id int, "
@@ -46,18 +55,12 @@ _TOTAL_SCHEMA = ("doc_id long, score double, segment_id int, "
 _COUNT_SCHEMA = "segment_id int, n long"
 _IDS_SCHEMA = "doc_id long"
 
-_BASE_COLS = ["field", "term", "segment_id", "chunk", "df", "doc_blocks",
-              "tf_blocks", "norm_bytes", "block_first", "block_last",
-              "block_max_tf", "block_max_norm", "block_doc_off",
-              "block_tf_off"]
-_POS_COLS = _BASE_COLS + ["pos_blocks", "block_pos_off"]
-
-_AUX_SCHEMA = "segment_id int, doc_id long, set_id int"
-
 # upper bound on the doc-span one scoring task covers (segments batched
 # per task until their combined maxDoc reaches this): bounds a task's
 # decoded-postings working set to cache scale, and makes the scoring
-# decomposition core-count-independent on large corpora
+# decomposition core-count-independent on large corpora. It is also the
+# routing bound: a query whose postings fit one such task scores on the
+# driver (Searcher._scores_on_driver)
 _DOCS_PER_SCORE_TASK = 100_000
 
 
@@ -94,16 +97,13 @@ class Searcher(PlannerMixin):
         self.spark = spark
         self.cat = catalog
         self.default_field = catalog.default_field
-        # per-field collection stats (FieldInfo analogue)
-        srows = spark.read.parquet(catalog.stats_path).collect()
-        self.field_stats: dict[str, int] = {
-            r.field: int(r.sum_total_term_freq or 0) for r in srows}
-        self.max_doc = max((int(r.max_doc) for r in srows), default=0)
-        self._term_stats_cache: dict[tuple[str, str], tuple[int, int]] = {}
+        # the reader core: stats, term_dict and driver-substrate scoring
+        self._reader = LocalSearcher(catalog, deleted_doc_ids)
+        self.field_stats = self._reader.field_stats
+        self.max_doc = self._reader.max_doc
         # resolve sources once (file listing / schema inference is per-query
         # overhead otherwise); reads stay lazy and pruned
         self._postings_src = spark.read.parquet(catalog.postings_path)
-        self._term_dict_src = spark.read.parquet(catalog.term_dict_path)
         self._docs_src = spark.read.parquet(catalog.docs_path)
 
         # live-docs: durable tombstones + explicit ids, kept DISTRIBUTED
@@ -123,61 +123,72 @@ class Searcher(PlannerMixin):
 
     @property
     def deleted(self) -> np.ndarray:
-        """Collected tombstone ids — test/debug convenience ONLY; the
-        query path masks via the cogrouped delete table."""
-        if self._deleted_df is None:
-            return np.zeros(0, dtype=np.int64)
-        return np.asarray(sorted(int(r.doc_id) for r in
-                                 self._deleted_df.select("doc_id").collect()),
-                          dtype=np.int64)
+        """Tombstone + explicit deleted ids, sorted — test/debug
+        convenience ONLY; queries mask per segment."""
+        return self._reader.deleted
 
-    # ------------------------------------------------ stats (stage 1)
+    # ------------------------------------------------------- routing
 
     def term_stats(self, pairs: list[tuple[str, str]]
                    ) -> dict[tuple[str, str], tuple[int, int]]:
-        """(field, term) -> (df, cttf) from term_dict, partition-pruned."""
-        missing = [p for p in pairs if p not in self._term_stats_cache]
-        if missing:
-            buckets = sorted({term_bucket(t, self.cat.num_buckets, f)
-                              for f, t in missing})
-            cond = None
-            by_field: dict[str, set[str]] = {}
-            for f, t in missing:
-                by_field.setdefault(f, set()).add(t)
-            for f, ts in by_field.items():
-                c = (F.col("field") == f) & F.col("term").isin(sorted(ts))
-                cond = c if cond is None else (cond | c)
-            rows = (self._term_dict_src
-                    .filter(F.col("bucket").isin(buckets))
-                    .filter(cond)
-                    .select("field", "term", "df", "cttf").collect())
-            found = {(r.field, r.term): (int(r.df), int(r.cttf))
-                     for r in rows}
-            for p in missing:
-                self._term_stats_cache[p] = found.get(p, (0, 0))
-        return {p: self._term_stats_cache[p] for p in pairs}
+        """(field, term) -> (df, cttf), read by the reader core."""
+        return self._reader.term_stats(pairs)
 
-    # --------------------------------------------- postings scan (stage 2)
+    def _summed_df(self, spec: dict) -> int:
+        """Postings the spec's distinct terms hold — its scoring work."""
+        return sum(df for df, _ in
+                   self.term_stats(spec["all_terms"]).values())
+
+    def _scores_on_driver(self, spec: dict) -> bool:
+        """The substrate decision: a spec without Range/MatchAll aux
+        clauses whose postings fit one Spark scoring task scores on the
+        driver; three Spark jobs would cost far more than its scoring."""
+        return (not spec.get("aux_specs")
+                and self._summed_df(spec) <= _DOCS_PER_SCORE_TASK)
+
+    def _hits_df(self, docs: np.ndarray, scores: np.ndarray) -> DataFrame:
+        """Driver-scored hits, in collector order, as a DataFrame built
+        from an Arrow table — a LocalRelation, which collects with no
+        Spark job (a Python-list DataFrame runs a parallelize job)."""
+        return self.spark.createDataFrame(pa.table({
+            "doc_id": pa.array(docs.astype(np.int64)),
+            "score": pa.array(scores.astype(np.float64))}))
+
+    def _scored(self, spec: dict, k: int, f64: bool, on_driver: bool
+                ) -> tuple[list[tuple[int, float]], list[dict]]:
+        """Top-k hits plus one counters dict per scored segment (total,
+        exact, blocks_total, blocks_decoded, segment_id) on the given
+        substrate."""
+        if on_driver:
+            stats: list[dict] = []
+            docs, scores = self._reader._top_hits(spec, k, f64, None,
+                                                  stats_list=stats)
+            return (list(zip(docs.tolist(),
+                             scores.astype(np.float64).tolist())), stats)
+        rows = self._run_spec(spec, _TOTAL_SCHEMA, k=k, f64=f64,
+                              after=None).collect()
+        by_seg: dict[int, dict] = {}
+        scored = []
+        for r in rows:
+            if r.doc_id >= 0:  # doc_id -1 = counters-only marker
+                scored.append((r.score, r.doc_id))
+            by_seg.setdefault(r.segment_id, {
+                "segment_id": r.segment_id, "total": r.seg_total,
+                "exact": r.seg_exact, "blocks_total": r.seg_blocks,
+                "blocks_decoded": r.seg_blocks_dec})
+        scored.sort(key=lambda x: (-x[0], x[1]))
+        return [(d, s) for s, d in scored[:k]], list(by_seg.values())
+
+    # --------------------------------------------------- postings scan
 
     def _postings(self, pairs: list[tuple[str, str]],
                   need_positions: bool) -> DataFrame:
-        cols = _POS_COLS if need_positions else _BASE_COLS
+        cols = POS_COLS if need_positions else BASE_COLS
+        src = self._postings_src.select("bucket", *cols)
         if not pairs:
-            return (self._postings_src.select("bucket", *cols)
-                    .filter(F.lit(False)))
-        buckets = sorted({term_bucket(t, self.cat.num_buckets, f)
-                          for f, t in pairs})
-        cond = None
-        by_field: dict[str, set[str]] = {}
-        for f, t in pairs:
-            by_field.setdefault(f, set()).add(t)
-        for f, ts in by_field.items():
-            c = (F.col("field") == f) & F.col("term").isin(sorted(ts))
-            cond = c if cond is None else (cond | c)
-        return (self._postings_src
-                .filter(F.col("bucket").isin(buckets))   # partition pruning
-                .filter(cond)                            # pushed (term bloom)
-                .select("bucket", *cols))
+            return src.filter(F.lit(False))
+        # bucket partition pruning + pushed field/term predicates
+        return src.filter(term_filter(F.col, pairs, self.cat.num_buckets))
 
     # ----------------------------------------------------- aux doc sets
 
@@ -241,6 +252,9 @@ class Searcher(PlannerMixin):
                     .orderBy(F.asc("doc_id")).limit(k))
 
         spec = self.plan(q)
+        if self._scores_on_driver(spec):
+            return self._hits_df(*self._reader._top_hits(spec, k, f64,
+                                                         after))
         hits = self._run_spec(spec, _HIT_SCHEMA, k=k, f64=f64, after=after)
         return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -259,21 +273,11 @@ class Searcher(PlannerMixin):
                     for r in self.search(q, k=k, f64=f64).collect()]
             return hits, n, "eq"
         spec = self.plan(q)
-        rows = self._run_spec(spec, _TOTAL_SCHEMA, k=k, f64=f64,
-                              after=None).collect()
-        total, exact = 0, True
-        seen: set[int] = set()
-        scored = []
-        for r in rows:
-            if int(r.doc_id) >= 0:  # doc_id -1 = counters-only marker
-                scored.append((float(r.score), int(r.doc_id)))
-            if int(r.segment_id) not in seen:
-                seen.add(int(r.segment_id))
-                total += int(r.seg_total)
-                exact &= bool(r.seg_exact)
-        scored.sort(key=lambda x: (-x[0], x[1]))
-        hits = [(d, s) for s, d in scored[:k]]
-        return hits, total, ("eq" if exact else "gte")
+        hits, stats = self._scored(spec, k, f64,
+                                   self._scores_on_driver(spec))
+        exact = all(st["exact"] for st in stats)
+        return (hits, sum(st["total"] for st in stats),
+                "eq" if exact else "gte")
 
     def _run_spec(self, spec: dict, schema: str, *, k: int, f64: bool,
                   after, count_only: bool = False,
@@ -357,10 +361,10 @@ class Searcher(PlannerMixin):
     def profile(self, query: Query, k: int = 100, f64: bool = False) -> dict:
         """Query-side observability — the SearchProfiler / query-metrics
         analogue (util/SearchProfiler.cpp, observability/Metrics.h):
-        returns plan shape + scan pruning facts + per-phase wall times +
-        per-segment match totals for one executed search."""
+        returns plan shape + the substrate `search` routes it to (with the
+        summed df it decided on) + scan pruning facts + per-phase wall
+        times + per-segment match totals for one executed search."""
         import time as _t
-        from diagon_spark.index.builder import term_bucket
         t0 = _t.time()
         q = rewrite(query)
         if isinstance(q, (MatchNone, MatchAll, Range)):
@@ -369,24 +373,18 @@ class Searcher(PlannerMixin):
                     "plan_ms": round((_t.time() - t0) * 1000, 2),
                     "hits_returned": len(hits)}
         spec = self.plan(q)
+        on_driver = self._scores_on_driver(spec)
         plan_ms = (_t.time() - t0) * 1000
         t1 = _t.time()
-        rows = self._run_spec(spec, _TOTAL_SCHEMA, k=k, f64=f64,
-                              after=None).collect()
+        hits, stats = self._scored(spec, k, f64, on_driver)
         exec_ms = (_t.time() - t1) * 1000
-        seg_totals: dict[int, int] = {}
-        seg_blocks: dict[int, tuple[int, int]] = {}
-        exact = True
-        for r in rows:
-            seg_totals.setdefault(int(r.segment_id), int(r.seg_total))
-            seg_blocks.setdefault(int(r.segment_id),
-                                  (int(r.seg_blocks),
-                                   int(r.seg_blocks_dec)))
-            exact &= bool(r.seg_exact)
-        blocks_total = sum(b for b, _ in seg_blocks.values())
-        blocks_decoded = sum(d for _, d in seg_blocks.values())
+        seg_totals = {st["segment_id"]: st["total"] for st in stats}
+        blocks_total = sum(st["blocks_total"] for st in stats)
+        blocks_decoded = sum(st["blocks_decoded"] for st in stats)
         return {
             "kind": spec["kind"],
+            "substrate": "driver" if on_driver else "spark",
+            "summed_df": self._summed_df(spec),
             "leaves": [list(p) for p in spec["all_terms"]],
             "buckets_scanned": sorted(
                 {term_bucket(t, self.cat.num_buckets, f)
@@ -396,14 +394,14 @@ class Searcher(PlannerMixin):
             "segments_matched": sum(1 for v in seg_totals.values() if v > 0),
             "per_segment_matches": seg_totals,
             "total_hits": sum(seg_totals.values()),
-            "total_relation": "eq" if exact else "gte",
+            "total_relation": ("eq" if all(st["exact"] for st in stats)
+                               else "gte"),
             # Block-Max pruning observability: posting blocks the query's
             # terms HAVE vs blocks actually DECODED (skipped = difference)
             "blocks_total": blocks_total,
             "blocks_decoded": blocks_decoded,
             "blocks_skipped": blocks_total - blocks_decoded,
-            "hits_returned": min(k, sum(1 for r in rows
-                                        if int(r.doc_id) >= 0)),
+            "hits_returned": len(hits),
             "plan_ms": round(plan_ms, 2),
             "exec_ms": round(exec_ms, 2),
         }

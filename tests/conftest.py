@@ -19,3 +19,41 @@ def spark():
          .getOrCreate())
     yield s
     s.stop()
+
+
+SUBSTRATES = ("spark", "driver")
+
+
+def pin_substrate(monkeypatch, name: str) -> None:
+    from diagon_spark.search.searcher import Searcher
+    if name == "spark":
+        def pick(self, spec):
+            return False
+    else:  # the df bound lifted; Range/MatchAll clauses stay on Spark
+        def pick(self, spec):
+            return not spec.get("aux_specs")
+    monkeypatch.setattr(Searcher, "_scores_on_driver", pick)
+
+
+@pytest.fixture
+def substrate(request, monkeypatch):
+    """Pin the substrate `Searcher.search` scores on (an indirect
+    parameter, "spark" or "driver"): small fixtures would otherwise all
+    score on the driver and never reach the applyInPandas scorer."""
+    pin_substrate(monkeypatch, request.param)
+    return request.param
+
+
+@pytest.fixture
+def on_spark(monkeypatch):
+    """For tests of the distributed plan itself."""
+    pin_substrate(monkeypatch, "spark")
+
+
+def both_substrates(values):
+    """Parameters `values` x SUBSTRATES for
+    `parametrize("<arg>,substrate", ..., indirect=["substrate"])`: the
+    plain id runs on Spark, `<id>-driver` on the driver."""
+    return [pytest.param(v, sub, id=str(v) if sub == "spark"
+                         else f"{v}-driver")
+            for v in values for sub in SUBSTRATES]

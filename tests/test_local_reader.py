@@ -4,6 +4,7 @@ Spark Searcher on every query kind, and fast (no Spark job)."""
 import time
 
 import pytest
+from conftest import both_substrates
 
 from diagon_spark import build_index, Searcher
 from diagon_spark.corpus import corpus_df, VOCAB
@@ -32,8 +33,9 @@ QS = [
 ]
 
 
-@pytest.mark.parametrize("qi", range(len(QS)))
-def test_local_equals_spark(pair, qi):
+@pytest.mark.parametrize("qi,substrate", both_substrates(range(len(QS))),
+                         indirect=["substrate"])
+def test_local_equals_spark(pair, qi, substrate):
     s_spark, s_local = pair
     want = [(r.doc_id, r.score) for r in s_spark.search(QS[qi], k=50).collect()]
     got = s_local.search(QS[qi], k=50)

@@ -168,7 +168,7 @@ def test_local_searcher_nested_parity(mf):
     assert got_local == got_spark
 
 
-def test_deletes_masked_in_nested_no_isin(mf, spark):
+def test_deletes_masked_in_nested_no_isin(mf, spark, on_spark):
     s, cat, ctx = mf
     q = Boolean(must=[Term("int")], should=[Term("if")])
     top = [int(r.doc_id) for r in s.search(q, k=3).collect()]

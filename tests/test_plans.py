@@ -45,7 +45,7 @@ def test_phrase_scan_reads_positions(searcher):
     assert "pos_blocks" in df.columns
 
 
-def test_scoring_stage_not_coalesced(searcher):
+def test_scoring_stage_not_coalesced(searcher, on_spark):
     """AQE must not byte-coalesce the CPU-heavy scoring stage to one task
     (regression for the 32x serialization bug)."""
     q = Boolean(should=[Term("int"), Term("return")])
@@ -92,20 +92,17 @@ def test_term_granule_skip_bloom_or_dictionary(searcher, spark):
     assert checked == 2
 
 
-def test_term_dict_lookup_is_partition_pruned(searcher):
+def test_term_dict_lookup_is_partition_pruned(searcher, spark):
     """term_dict is hive-partitioned by bucket (round 3): a stats lookup
     must prune to the query terms' bucket partitions, not scan the whole
-    dictionary."""
-    from pyspark.sql import functions as F
-
-    from diagon_spark.index.builder import term_bucket
+    dictionary — checked on a Spark read through the lookup filter both
+    substrates share."""
+    from diagon_spark.search.local_reader import term_filter
 
     fld = searcher.default_field
-    buckets = sorted({term_bucket(t, searcher.cat.num_buckets, fld)
-                      for t in ("int", "return")})
-    df = (searcher._term_dict_src
-          .filter(F.col("bucket").isin(buckets))
-          .filter(F.col("term").isin(["int", "return"]))
+    pairs = [(fld, "int"), (fld, "return")]
+    df = (spark.read.parquet(searcher.cat.term_dict_path)
+          .filter(term_filter(F.col, pairs, searcher.cat.num_buckets))
           .select("field", "term", "df", "cttf"))
     plan = _plan(df)
     scan_line = next(ln for ln in plan.splitlines()

@@ -7,6 +7,7 @@ import random
 
 import numpy as np
 import pytest
+from conftest import both_substrates
 
 from diagon_spark import Searcher, build_index
 from diagon_spark.corpus import generate_pandas
@@ -83,8 +84,9 @@ def _rand_query(rng, depth=0):
         min_should_match=msm)
 
 
-@pytest.mark.parametrize("seed", range(48))
-def test_random_tree_matches_oracle(fz, seed):
+@pytest.mark.parametrize("seed,substrate", both_substrates(range(48)),
+                         indirect=["substrate"])
+def test_random_tree_matches_oracle(fz, seed, substrate):
     s, cat, ctx = fz
     rng = random.Random(seed)
     q = _rand_query(rng)
@@ -100,8 +102,9 @@ def test_random_tree_matches_oracle(fz, seed):
     assert s.count(q) == len(exp_scores), q
 
 
-@pytest.mark.parametrize("seed", range(48, 64))
-def test_random_tree_local_parity(fz, seed):
+@pytest.mark.parametrize("seed,substrate", both_substrates(range(48, 64)),
+                         indirect=["substrate"])
+def test_random_tree_local_parity(fz, seed, substrate):
     """LocalSearcher serves the same nested trees identically — INCLUDING
     Range/MatchAll clauses, which materialize from a pyarrow doc-values
     scan of the docs table (the serving-path parity the reference gets

@@ -6,6 +6,7 @@ LocalSearcher runs the same kernels segment-by-segment and is the
 oracle)."""
 
 import pytest
+from conftest import SUBSTRATES
 
 from diagon_spark import Searcher, build_index
 from diagon_spark.corpus import corpus_df
@@ -34,7 +35,8 @@ QUERIES = [
 ]
 
 
-def test_batched_results_match_serving_path(many_seg):
+@pytest.mark.parametrize("substrate", SUBSTRATES, indirect=True)
+def test_batched_results_match_serving_path(many_seg, substrate):
     s, ls = many_seg
     for q in QUERIES:
         spark_hits = [(int(r.doc_id), round(float(r.score), 5))
@@ -43,7 +45,8 @@ def test_batched_results_match_serving_path(many_seg):
         assert spark_hits == local_hits, q
 
 
-def test_batched_counts_and_totals(many_seg):
+@pytest.mark.parametrize("substrate", SUBSTRATES, indirect=True)
+def test_batched_counts_and_totals(many_seg, substrate):
     s, ls = many_seg
     for q in QUERIES:
         assert s.count(q) == ls.count(q), q
@@ -55,9 +58,11 @@ def test_batched_counts_and_totals(many_seg):
             ] if hasattr(hits, "collect") else True
 
 
-def test_profile_reports_every_matching_segment(many_seg):
+@pytest.mark.parametrize("substrate", SUBSTRATES, indirect=True)
+def test_profile_reports_every_matching_segment(many_seg, substrate):
     s, _ = many_seg
     prof = s.profile(Term("int"), k=10)
+    assert prof["substrate"] == substrate
     # per-segment counters survive batching: every segment with matches
     # reports its own total, and they sum to the global hit count
     assert prof["segments_matched"] > 4  # far more segments than tasks
