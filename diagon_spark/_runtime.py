@@ -93,19 +93,11 @@ def worker_init() -> None:
     kernels: THP off + allocator thresholds pinned. Idempotent.
 
     Call sites are EXPLICIT entry points we own — executor python
-    workers (builder encode fns, corpus gen), bench/scaling harness
-    mains — never library constructors: both tweaks are process-GLOBAL
-    side effects a host application must opt into, so the serving path
-    (LocalSearcher) only applies them under DIAGON_SERVING_TUNE=1
-    (ADVICE r6 #3)."""
+    workers (builder encode and merge fns, corpus gen), bench/scaling
+    harness mains — never library constructors: both tweaks are
+    process-GLOBAL side effects a host application must opt into, so
+    `LocalSearcher` never applies them; a serving host that wants them
+    calls this function itself."""
     disable_thp_once()
     tune_malloc_once()
 
-
-def thp_disabled() -> int:
-    """Current PR_GET_THP_DISABLE flag (observability; -1 on failure)."""
-    try:
-        libc = ctypes.CDLL(None, use_errno=True)
-        return int(libc.prctl(_PR_SET_THP_DISABLE + 1, 0, 0, 0, 0))
-    except Exception:  # noqa: BLE001
-        return -1

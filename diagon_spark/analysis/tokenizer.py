@@ -102,25 +102,6 @@ def _ascii_tokens_bytes(s: str) -> list[bytes]:
     return out
 
 
-def tokenize_series_bytes(texts: pd.Series) -> pd.Series:
-    """Fast-path tokenizer: Series[str] -> Series[list[bytes]] (utf-8).
-
-    Token-for-token identical to tokenize_series, with tokens as bytes —
-    lets downstream factorize/group without building python str objects
-    (decode only the per-group vocabulary). Non-ASCII rows route through
-    the standard path and utf-8-encode.
-    """
-    texts = texts.fillna("")
-    is_ascii = texts.str.match(_IS_ASCII)
-    out = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-    if is_ascii.any():
-        out[is_ascii] = texts[is_ascii].map(_ascii_tokens_bytes)
-    if (~is_ascii).any():
-        out[~is_ascii] = texts[~is_ascii].map(
-            lambda t: [x.encode("utf-8") for x in tokenize(t)])
-    return out
-
-
 _TRANS_NP = np.frombuffer(_TRANS, dtype=np.uint8)
 
 
@@ -130,8 +111,8 @@ def tokenize_group_flat(texts: pd.Series
     Series[str] -> (doc_idx int64, pos int64, tokens fixed-width-bytes,
     all_ascii).
 
-    Token-for-token identical to tokenize_series_bytes (tested), but the
-    token stream lives in numpy arrays end to end: the group's ASCII rows
+    Token-for-token identical to `tokenize` (utf-8 encoded; tested), and
+    the token stream lives in numpy arrays end to end: the group's ASCII rows
     are joined into ONE buffer, translated through the same 256-byte
     table, and tokens become (start, end) spans materialized into a
     fixed-width 'S' array. This removes the ~200 tracked Python objects
@@ -319,9 +300,11 @@ def tokenize_factorize_sliced(texts: pd.Series, slice_docs: int = 16384
 
 
 def count_tokens_series(texts: pd.Series) -> np.ndarray:
-    """Token counts per row (doc_len for norms) via the fast path."""
-    return np.fromiter((len(t) for t in tokenize_series_bytes(texts)),
-                       dtype=np.int64, count=len(texts))
+    """Token counts per row (doc_len for norms): the bytes fast path for
+    ASCII rows, `tokenize` for the rest."""
+    return np.fromiter(
+        (len(_ascii_tokens_bytes(s) if _IS_ASCII.match(s) else tokenize(s))
+         for s in texts.fillna("")), dtype=np.int64, count=len(texts))
 
 
 def tokenize_series(texts: pd.Series) -> pd.Series:

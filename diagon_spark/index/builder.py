@@ -67,7 +67,6 @@ from pyspark.sql.window import Window
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
-from diagon_spark.analysis.tokenizer import tokenize_series
 from diagon_spark.index.norms import encode_norm
 
 CHUNK_DOCS = 16384  # max docs per postings row (salting of heavy hitters)
@@ -207,21 +206,15 @@ POSTINGS_SCHEMA = StructType([
     StructField("block_pos_off", ArrayType(IntegerType())),
 ])
 
+_POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
+
 # parquet bloom filters on the term point-lookup column (granule skip
 # beyond min-max/dictionary stats — SURVEY §2.3 bloom row). Bloom size is
 # ~1.3 B per expected distinct value per row group; 4096 keeps the
 # fixed overhead ~5 KB/row-group (noise at scale, honest at sandbox
-# scale). On a 100 TB corpus set expected.ndv to the per-bucket
-# vocabulary estimate (e.g. 10^5-10^6) via the bloom_ndv build knob.
-DEFAULT_BLOOM_NDV = 4096
+# scale).
 _BLOOM_OPTS = {"parquet.bloom.filter.enabled#term": "true",
-               "parquet.bloom.filter.expected.ndv#term":
-                   str(DEFAULT_BLOOM_NDV)}
-
-
-def bloom_opts(ndv: int = DEFAULT_BLOOM_NDV) -> dict:
-    return {"parquet.bloom.filter.enabled#term": "true",
-            "parquet.bloom.filter.expected.ndv#term": str(int(ndv))}
+               "parquet.bloom.filter.expected.ndv#term": "4096"}
 
 
 @dataclass
@@ -343,6 +336,82 @@ class IndexCatalog:
         self.generation = gen
 
 
+def _postings_frame(fld: str, segment_id: int, terms: list[str],
+                    buckets: list[int], docs: np.ndarray, tfs: np.ndarray,
+                    norms: np.ndarray, t_starts: np.ndarray,
+                    t_ends: np.ndarray, pos_deltas: np.ndarray | None,
+                    td_starts: np.ndarray | None, chunk_docs: int,
+                    chunk_base: int = 0) -> pd.DataFrame:
+    """The POSTINGS_SCHEMA rows of one (segment, field) — the one
+    postings writer behind both the build's flush and the merge (the
+    reference hands a merge's k-way-merged postings to the same
+    FieldsConsumer a flush uses, SegmentMerger.cpp:555-585).
+
+    Inputs are (term, doc)-grouped arrays in (term, doc) order: one
+    `docs/tfs/norms` entry per (term, doc) pair, `t_starts/t_ends` the
+    bounds of term i (named `terms[i]`, stored under `buckets[i]`) in that
+    space. With positions, `pos_deltas` is the value-space delta stream
+    (first position of each (term, doc) absolute, the rest gaps) and
+    `td_starts` the value-space start of each (term, doc) pair (both None
+    without positions). Every term splits into chunks of <= `chunk_docs`
+    docs, numbered from `chunk_base`; all of them encode in one
+    `codec.encode_segment_batch` call.
+
+    Callers pass `chunk_docs` from inside their Spark closures, so the
+    CHUNK_DOCS a driver sees ships with the closure."""
+    from diagon_spark.index.codec import encode_segment_batch
+    recs = encode_segment_batch(docs, tfs, norms, t_starts, t_ends,
+                                chunk_docs, pos_deltas, td_starts)
+    rows = []
+    for rec in recs:
+        ti = rec["term_i"]
+        rows.append({
+            "field": fld,
+            "term": terms[ti],
+            "bucket": buckets[ti],
+            "segment_id": segment_id,
+            "chunk": chunk_base + int(rec["chunk"]),
+            "df": int(rec["df"]),
+            "ttf": int(rec["ttf"]),
+            "doc_blocks": rec["doc_blocks"],
+            "tf_blocks": rec["tf_blocks"],
+            "norm_bytes": rec["norm_bytes"],
+            "block_first": rec["block_first"].tolist(),
+            "block_last": rec["block_last"].tolist(),
+            "block_max_tf": rec["block_max_tf"].tolist(),
+            "block_max_norm": rec["block_max_norm"].tolist(),
+            "block_doc_off": rec["block_doc_off"].tolist(),
+            "block_tf_off": rec["block_tf_off"].tolist(),
+            "pos_blocks": rec["pos_blocks"],
+            "block_pos_off": (None if rec["block_pos_off"] is None
+                              else rec["block_pos_off"].tolist()),
+        })
+    return pd.DataFrame(rows, columns=_POSTINGS_COLS)
+
+
+def _analyze_flat(analyzer, texts: pd.Series):
+    """A custom analyzer's output as the flat arrays
+    `tokenize_factorize_sliced` emits: (row, pos, term_id, sorted_vocab).
+    Analyzers marked `emits_positions` return (token, position) pairs
+    (same-position synonym semantics, SynonymFilter.cpp); for the others a
+    token's position is its ordinal within its row."""
+    from itertools import chain
+    tok_lists = analyzer(texts).tolist()
+    lens = np.fromiter(map(len, tok_lists), dtype=np.int64,
+                       count=len(tok_lists))
+    flat = list(chain.from_iterable(tok_lists))
+    rows = np.repeat(np.arange(len(tok_lists), dtype=np.int64), lens)
+    if getattr(analyzer, "emits_positions", False):
+        poss = np.fromiter((p for _, p in flat), dtype=np.int64,
+                           count=len(flat))
+        flat = [t for t, _ in flat]
+    else:
+        starts = np.cumsum(lens) - lens
+        poss = np.arange(len(flat), dtype=np.int64) - starts[rows]
+    term_ids, vocab = pd.factorize(np.array(flat, dtype=object), sort=True)
+    return rows, poss, term_ids, vocab
+
+
 def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
     """applyInPandas over ONE (segment, field) group of compact
     (doc_id, __content) rows — the DWPT flush analogue. Tokenization,
@@ -352,137 +421,81 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
     computed runs on its map side: fusing even the tokenizer UDF into the
     shuffle-write stage measured negatively-scaling (python-worker +
     shuffle-writer contention), and shuffling token arrays moved tens of
-    millions of small objects through UnsafeRow/Arrow/pandas boundaries."""
+    millions of small objects through UnsafeRow/Arrow/pandas boundaries.
 
-    # default path tokenizes to BYTES (no python str churn; only the
-    # per-segment vocabulary is decoded); custom analyzers use str lists.
-    # Analyzers marked emits_positions return (token, position) pairs
-    # (same-position synonym semantics, SynonymFilter.cpp) — positions
-    # come from the analyzer instead of enumeration.
-    from diagon_spark.analysis.tokenizer import tokenize_series_bytes
-    tok_fn = analyzer or tokenize_series_bytes
-    bytes_tokens = analyzer is None
-    positioned = bool(getattr(analyzer, "emits_positions", False))
+    The default tokenizer and a custom `analyzer` both reduce the group to
+    the same flat (row, pos, term_id, sorted_vocab) arrays over rows
+    pre-sorted by doc_id; from there one sort, one grouping and one
+    `_postings_frame` call serve both."""
 
     def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _os
-        import time as _time
-
-        from diagon_spark._runtime import thp_disabled, worker_init
+        from diagon_spark._runtime import worker_init
         worker_init()
-        _prof_path = _os.environ.get("DIAGON_ENCODE_PROF")
-        _ph: dict = {"enter": _time.time(), "n_docs": len(pdf),
-                     "thp_off": thp_disabled()}
+        if len(pdf) == 0:
+            return pd.DataFrame(columns=_POSTINGS_COLS)
         segment_id = int(key[0])
         fld = str(key[1])
         # sub-batch chunk namespace: sub order == doc-range order, so
         # chunk values stay docID-ordered across sub-batches
         chunk_base = (int(key[2]) << 20) if len(key) > 2 else 0
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in POSTINGS_SCHEMA.fields])
-        if bytes_tokens:
-            # default fast path: the WHOLE group tokenizes into flat numpy
-            # arrays — zero per-token Python objects. Large groups were
-            # superlinear purely from allocator/GC pressure over tens of
-            # millions of bytes objects (measured 3-4x s/doc at 150k-doc
-            # groups under 8-way concurrency, scripts/encode_profile.py);
-            # this path holds s/doc flat across group sizes.
+        row_doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        row_order = np.argsort(row_doc_ids, kind="stable")
+        texts = pdf["__content"].iloc[row_order]
+        if analyzer is None:
+            # the WHOLE group tokenizes into flat numpy arrays — zero
+            # per-token Python objects. Large groups were superlinear
+            # purely from allocator/GC pressure over tens of millions of
+            # bytes objects (measured 3-4x s/doc at 150k-doc groups under
+            # 8-way concurrency, scripts/encode_profile.py); this path
+            # holds s/doc flat across group sizes. Only the per-segment
+            # vocabulary is decoded to str.
             from diagon_spark.analysis.tokenizer import \
                 tokenize_factorize_sliced
-            row_doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            row_order = np.argsort(row_doc_ids, kind="stable")
-            doc_idx, poss, term_ids, sorted_vocab, all_ascii = \
-                tokenize_factorize_sliced(pdf["__content"].iloc[row_order])
-            _ph["tokfact"] = _time.time()
-            total = len(term_ids)
-            if total == 0:
-                return pd.DataFrame(
-                    columns=[f.name for f in POSTINGS_SCHEMA.fields])
-            docs_per_row = row_doc_ids[row_order]
-            lens = np.bincount(doc_idx, minlength=len(pdf))
-            norms_per_row = encode_norm(lens).astype(np.int64)
-            if (len(pdf) < (1 << 20) and int(poss.max()) < (1 << 16)
-                    and len(sorted_vocab) < (1 << 28)):
-                # the (term, doc, pos) sort as ONE in-place u64 sort of
-                # packed keys — term(28b) | row(20b) | pos(16b), keys
-                # unique since a doc has one token per position. Replaces
-                # the 3-key lexsort + FOUR 250MB random-read permute
-                # gathers (the two phases left DRAM-latency-bound after
-                # slicing — phase probe in scripts/encode_profile.py)
-                # with sequential shift/mask passes and two gathers into
-                # the per-ROW tables (cache-resident). Row order is doc_id
-                # order (rows pre-sorted), so row-ascending == doc-
-                # ascending and the packed order IS (term, doc, pos).
-                packed = ((term_ids.astype(np.uint64) << np.uint64(36))
-                          | (doc_idx.astype(np.uint64) << np.uint64(16))
-                          | poss.astype(np.uint64))
-                del term_ids, doc_idx, poss
-                packed.sort()
-                term_ids = (packed >> np.uint64(36)).astype(np.int32)
-                doc_local = ((packed >> np.uint64(16))
-                             & np.uint64(0xFFFFF)).astype(np.int64)
-                poss = (packed & np.uint64(0xFFFF)).astype(np.int64)
-                del packed
-                docs = docs_per_row[doc_local]
-                norms = norms_per_row[doc_local]
-                del doc_local
-            else:
-                # guard fallback (≥1M-row group, ≥64k-token doc, or ≥256M
-                # vocab): classic lexsort + permute
-                docs = docs_per_row[doc_idx]
-                norms = norms_per_row[doc_idx]
-                order = np.lexsort((poss, docs, term_ids))
-                term_ids, docs, norms, poss = (
-                    term_ids[order], docs[order], norms[order],
-                    poss[order])
+            doc_idx, poss, term_ids, sorted_vocab, _ = \
+                tokenize_factorize_sliced(texts)
+            term_strs = [v.decode("utf-8") for v in sorted_vocab]
         else:
-            tok_lists = tok_fn(pdf["__content"]).tolist()
-            lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64,
-                               count=len(tok_lists))
-            total = int(lens.sum())
-            if total == 0:
-                return pd.DataFrame(
-                    columns=[f.name for f in POSTINGS_SCHEMA.fields])
-            from itertools import chain
-            if positioned:
-                flat_tokens = np.fromiter(
-                    (tp[0] for tp in chain.from_iterable(tok_lists)),
-                    dtype=object, count=total)
-            else:
-                flat_tokens = np.fromiter(chain.from_iterable(tok_lists),
-                                          dtype=object, count=total)
-            # hash-factorize token strings once (O(n)); all heavy sorting
-            # and grouping then runs on int ids — string comparisons only
-            # over the (small) per-segment vocabulary
-            codes, uniques = pd.factorize(flat_tokens, sort=False)
-            vocab_order = np.argsort(uniques)
-            rank = np.empty(len(vocab_order), dtype=np.int64)
-            rank[vocab_order] = np.arange(len(vocab_order))
-            term_ids = rank[codes]
-            sorted_vocab = uniques[vocab_order]
-
-            docs = np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), lens)
-            norms = np.repeat(encode_norm(lens).astype(np.int64), lens)
-            if positioned:
-                # analyzer-supplied positions (same-position synonyms
-                # share one)
-                poss = np.fromiter(
-                    (tp[1] for tp in chain.from_iterable(tok_lists)),
-                    dtype=np.int64, count=total)
-            else:
-                # position of each token within its doc: arange minus the
-                # doc's start offset
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                poss = (np.arange(total, dtype=np.int64)
-                        - np.repeat(starts, lens))
-
-            # sort by (term, doc, pos) — the deferred term sort of
-            # FreqProx flush
+            doc_idx, poss, term_ids, term_strs = _analyze_flat(analyzer,
+                                                               texts)
+        if len(term_ids) == 0:
+            return pd.DataFrame(columns=_POSTINGS_COLS)
+        docs_per_row = row_doc_ids[row_order]
+        lens = np.bincount(doc_idx, minlength=len(pdf))
+        norms_per_row = encode_norm(lens).astype(np.int64)
+        if (len(pdf) < (1 << 20) and 0 <= int(poss.min())
+                and int(poss.max()) < (1 << 16)
+                and len(term_strs) < (1 << 28)):
+            # the (term, doc, pos) sort as ONE in-place u64 sort of
+            # packed keys — term(28b) | row(20b) | pos(16b). Replaces
+            # the 3-key lexsort + FOUR 250MB random-read permute
+            # gathers (the two phases left DRAM-latency-bound after
+            # slicing — phase probe in scripts/encode_profile.py)
+            # with sequential shift/mask passes and two gathers into
+            # the per-ROW tables (cache-resident). Row order is doc_id
+            # order (rows pre-sorted), so row-ascending == doc-
+            # ascending and the packed order IS (term, doc, pos).
+            packed = ((term_ids.astype(np.uint64) << np.uint64(36))
+                      | (doc_idx.astype(np.uint64) << np.uint64(16))
+                      | poss.astype(np.uint64))
+            del term_ids, doc_idx, poss
+            packed.sort()
+            term_ids = (packed >> np.uint64(36)).astype(np.int32)
+            doc_local = ((packed >> np.uint64(16))
+                         & np.uint64(0xFFFFF)).astype(np.int64)
+            poss = (packed & np.uint64(0xFFFF)).astype(np.int64)
+            del packed
+            docs = docs_per_row[doc_local]
+            norms = norms_per_row[doc_local]
+            del doc_local
+        else:
+            # guard fallback (≥1M-row group, a position outside
+            # [0, 64k), or ≥256M vocab): classic lexsort + permute
+            docs = docs_per_row[doc_idx]
+            norms = norms_per_row[doc_idx]
             order = np.lexsort((poss, docs, term_ids))
-            term_ids, docs, norms, poss = (term_ids[order], docs[order],
-                                           norms[order], poss[order])
+            term_ids, docs, norms, poss = (
+                term_ids[order], docs[order], norms[order], poss[order])
 
-        _ph["sort"] = _time.time()
         # group boundaries at (term, doc) change → tf per (term, doc)
         new_td = np.empty(len(term_ids), dtype=bool)
         new_td[0] = True
@@ -491,8 +504,6 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
         td_ends = np.append(td_starts[1:], len(term_ids))
         tfs = (td_ends - td_starts).astype(np.int64)
         g_term_ids = term_ids[td_starts]
-        g_docs = docs[td_starts]
-        g_norms = norms[td_starts]
 
         # term boundaries over the (term, doc) groups
         new_t = np.empty(len(g_term_ids), dtype=bool)
@@ -501,88 +512,25 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
         t_starts = np.flatnonzero(new_t)
         t_ends = np.append(t_starts[1:], len(g_term_ids))
 
+        pos_deltas = None
         if has_positions:
             # flat delta stream over the WHOLE group in one vectorized
             # pass: first position of each (term, doc) absolute, the rest
-            # gaps — sliced per term chunk below, varint-encoded in one
-            # call per chunk (the per-doc python loop was 77% of encode CPU)
-            pos_deltas_all = np.empty_like(poss)
-            pos_deltas_all[0] = poss[0]
-            pos_deltas_all[1:] = poss[1:] - poss[:-1]
-            pos_deltas_all[td_starts] = poss[td_starts]
+            # gaps (the per-doc python loop was 77% of encode CPU)
+            pos_deltas = np.empty_like(poss)
+            pos_deltas[0] = poss[0]
+            pos_deltas[1:] = poss[1:] - poss[:-1]
+            pos_deltas[td_starts] = poss[td_starts]
 
-        _ph["bounds"] = _time.time()
-        # batched encode: every term's blocks/tails/positions in ~3
-        # vectorized codec passes total (see codec.encode_segment_batch)
-        from diagon_spark.index.codec import encode_segment_batch
-        recs = encode_segment_batch(
-            g_docs, tfs, g_norms, t_starts, t_ends, CHUNK_DOCS,
-            pos_deltas_all if has_positions else None,
-            td_starts if has_positions else None)
-        _ph["codec"] = _time.time()
-        term_strs = [v.decode("utf-8") if bytes_tokens else str(v)
-                     for v in sorted_vocab]
-        term_buckets = [term_bucket(t, num_buckets, fld) for t in term_strs]
-        # term index of each group start -> per-chunk term string
-        g_tid_at_start = g_term_ids[t_starts]
-        out_rows = []
-        for rec in recs:
-            tid = int(g_tid_at_start[rec["term_i"]])
-            out_rows.append({
-                "field": fld,
-                "term": term_strs[tid],
-                "bucket": term_buckets[tid],
-                "segment_id": segment_id,
-                "chunk": chunk_base + int(rec["chunk"]),
-                "df": int(rec["df"]),
-                "ttf": int(rec["ttf"]),
-                "doc_blocks": rec["doc_blocks"],
-                "tf_blocks": rec["tf_blocks"],
-                "norm_bytes": rec["norm_bytes"],
-                "block_first": rec["block_first"].tolist(),
-                "block_last": rec["block_last"].tolist(),
-                "block_max_tf": rec["block_max_tf"].tolist(),
-                "block_max_norm": rec["block_max_norm"].tolist(),
-                "block_doc_off": rec["block_doc_off"].tolist(),
-                "block_tf_off": rec["block_tf_off"].tolist(),
-                "pos_blocks": rec["pos_blocks"],
-                "block_pos_off": (rec["block_pos_off"].tolist()
-                                  if has_positions else None),
-            })
-        out_df = pd.DataFrame(out_rows,
-                              columns=[f.name for f in POSTINGS_SCHEMA.fields])
-        if _prof_path:
-            # build-path observability (env-gated, off by default): per-
-            # group wall timestamps of each encode phase, appended from
-            # the worker — lets scripts/encode_profile.py attribute
-            # in-Spark time to tokfact/sort/bounds/codec/rows vs the
-            # Spark machinery between group calls
-            import json as _json
-            _ph["exit"] = _time.time()
-            try:
-                with open(_prof_path, "a") as f:
-                    f.write(_json.dumps({
-                        "pid": _os.getpid(), "segment": segment_id,
-                        "field": fld, **{k: round(v, 3) if k != "n_docs"
-                                         else v for k, v in _ph.items()},
-                    }) + "\n")
-            except OSError:
-                pass
-        return out_df
+        terms = [term_strs[i] for i in g_term_ids[t_starts]]
+        return _postings_frame(
+            fld, segment_id, terms,
+            [term_bucket(t, num_buckets, fld) for t in terms],
+            docs[td_starts], tfs, norms[td_starts], t_starts, t_ends,
+            pos_deltas, td_starts if has_positions else None, CHUNK_DOCS,
+            chunk_base)
 
     return encode
-
-
-def _tokenize_udf(analyzer=None):
-    from pyspark.sql.functions import pandas_udf
-
-    fn = analyzer or tokenize_series
-
-    @pandas_udf(ArrayType(StringType()))
-    def tok(texts: pd.Series) -> pd.Series:
-        return fn(texts)
-
-    return tok
 
 
 def prepare_docs(df: DataFrame, key_cols: list[str] | None, id_col: str | None,
@@ -688,11 +636,9 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                       positions: bool = True,
                       segment_batches: int = 1, max_batches: int | None = None,
                       resume: bool = False, analyzer=None,
-                      persist_tokens: bool = False, append: bool = False,
-                      segment_base: int = 0,
+                      append: bool = False, segment_base: int = 0,
                       store_content: bool = True,
                       commit_extra: dict | None = None,
-                      bloom_ndv: int = DEFAULT_BLOOM_NDV,
                       encode_group_docs: int = 20_000) -> IndexCatalog:
     """Build (or resume) the full index. Returns a committed IndexCatalog.
 
@@ -717,20 +663,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     """
     from diagon_spark._ship import ensure_shipped
     ensure_shipped(spark)
-    # env-gated phase walls on stderr (DIAGON_BUILD_PHASES=1) — the
-    # builder-side analogue of DIAGON_ENCODE_PROF, for attributing build
-    # wall time to docs-write / encode waves / dict+stats refresh
-    import os as _os
-    import sys as _sys
-    _phase_t = [time.time()]
-
-    def _phase(name: str) -> None:
-        if _os.environ.get("DIAGON_BUILD_PHASES"):
-            now = time.time()
-            print(f"BUILD-PHASE {name} {now - _phase_t[0]:.3f}",
-                  file=_sys.stderr, flush=True)
-            _phase_t[0] = now
-
     # Scale-adaptive input parallelism (guide §2.5 input skew): a one-
     # file source otherwise runs the whole doc-prep stage (sha256 +
     # per-field token-count UDFs + docs write) in ONE task; no-op when
@@ -741,7 +673,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     # core-count tasks (measured 2 s -> 5.6 s at 5k docs doing so).
     from diagon_spark.parallel import ensure_min_parallelism
     df = ensure_min_parallelism(df, bytes_per_partition=4 << 20)
-    _phase("input_ready")
     if key_cols is None and id_col is None:
         key_cols = ["repo", "path", "commit"]
     field_cols = list(fields) if fields else [content_col]
@@ -764,16 +695,12 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
             if p.exists():
                 shutil.rmtree(p)
 
-    # Tokenization feeds both the docs table and the postings build.
-    # Deterministic recompute (persist_tokens=False, default) measured
-    # FASTER than caching: JVM columnar caching of array<string> token
-    # columns costs more in memory/GC than re-running the vectorized
-    # tokenizer. persist_tokens=True flips to caching for expensive
-    # custom analyzers.
+    # Tokenization feeds both the docs table and the postings build; the
+    # postings stage re-runs it rather than caching `docs` (measured
+    # faster: JVM columnar caching of token columns costs more in
+    # memory/GC than the vectorized tokenizer).
     docs = prepare_docs(df, key_cols, id_col, field_cols, num_segments,
                         analyzer, segment_base)
-    if persist_tokens:
-        docs = docs.persist()
     # store_content=True keeps the original field columns in the docs
     # table — the stored-fields (.fdt) analogue
     # (codecs/StoredFieldsWriter.h:19-63); it also lets the postings stage
@@ -804,7 +731,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     if not docs_written:
         docs.select(*[F.col(_bq(c)) for c in docs_cols]).write \
             .mode("append" if append else "overwrite").parquet(cat.docs_path)
-    _phase("docs_write")
 
     docs_idx = spark.read.parquet(cat.docs_path)  # re-read: stable doc ids
     new_docs_idx = (docs_idx.filter(F.col("segment_id") >= segment_base)
@@ -885,7 +811,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                          .alias("input_fingerprint"),
                          F.sum(total_len).alias("n_postings"),
                          *per_field_sums).collect())
-        _phase(f"seg_rows_b{bi}")
         if not seg_rows:
             continue  # no docs in these segments: nothing to encode
         seg_lo = {int(r.segment_id): int(r.lo) for r in seg_rows}
@@ -970,13 +895,10 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         # compact by bucket before writing: without this every segment
         # task writes one file into every bucket dir (segments × buckets
         # small files); the shuffle moves already-encoded compact bytes
-        w = (postings.repartition(num_buckets, F.col("bucket"))
-             .write.mode("append"))
-        for k_, v_ in bloom_opts(bloom_ndv).items():
-            w = w.option(k_, v_)
-        w.partitionBy("bucket").parquet(cat.postings_path)
+        (postings.repartition(num_buckets, F.col("bucket"))
+         .write.mode("append").options(**_BLOOM_OPTS)
+         .partitionBy("bucket").parquet(cat.postings_path))
         wall_ms = int((time.time() - t0) * 1000)
-        _phase(f"postings_b{bi}")
 
         # lineage rows (fingerprint = sum of crc32 of doc keys per
         # segment): assembled DRIVER-SIDE from the pre-encode seg_rows
@@ -1000,7 +922,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
             stats_acc["n"] += int(r.n)
             for i_, fn_ in enumerate(field_names):
                 stats_acc["sttf"][fn_] += int(r[f"sum_len__{i_}"] or 0)
-        _phase(f"lineage_b{bi}")
 
     covered_all = (not resume and max_batches is None and not done)
     from diagon_spark.index.publish import Publish
@@ -1009,10 +930,7 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         spark, cat, pub, new_docs_idx=new_docs_idx, append=append,
         segment_base=segment_base,
         stats_acc=stats_acc if covered_all else None)
-    _phase("dict_stats_refresh")
 
-    if persist_tokens:
-        docs.unpersist()
     # a custom analyzer bypasses the standard tokenizer entirely — stamp
     # the manifest so check_index skips the icu/regex comparison instead
     # of degrading a perfectly consistent analyzer-built index

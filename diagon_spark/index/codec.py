@@ -215,13 +215,14 @@ def encode_term_postings(doc_ids: np.ndarray, tfs: np.ndarray, norms: np.ndarray
                          pos_deltas: np.ndarray | None = None) -> dict:
     """Encode one term-chunk's postings (doc_ids must be sorted ascending).
 
+    The per-term reference encoder: the index writers encode through the
+    batched `encode_segment_batch`, and tests compare its output (and the
+    build's and merge's postings rows) against this function.
+
     Positions can be given either as a per-doc list of absolute-position
-    arrays (`positions`, convenience for tests) or as one flat
-    delta-encoded array (`pos_deltas`: within each doc the first value is
-    absolute, the rest are gaps; docs concatenated in doc order — the
-    vectorized fast path used by the index builder). With pos_deltas the
-    whole chunk is varint-encoded in ONE call and per-block byte offsets
-    are derived from vectorized varint lengths."""
+    arrays (`positions`) or as one flat delta-encoded array (`pos_deltas`:
+    within each doc the first value is absolute, the rest are gaps; docs
+    concatenated in doc order)."""
     if positions is not None and pos_deltas is None:
         parts = []
         for p in positions:
@@ -471,8 +472,9 @@ def _encode_segment_batch_impl(g_docs: np.ndarray, tfs: np.ndarray,
     The per-term python loop shrinks to slicing + bytes joins — this was
     the dominant encode cost (~0.5 ms/term of numpy-call overhead).
 
-    Inputs are the post-sort (term, doc)-group arrays produced by the
-    segment encoder: `g_docs/tfs/g_norms` one entry per (term, doc) pair
+    Inputs are the (term, doc)-group arrays of one (segment, field), as
+    the build and the merge hand them to builder._postings_frame:
+    `g_docs/tfs/g_norms` one entry per (term, doc) pair
     in (term, doc) order; `t_starts/t_ends` term boundaries in group
     space; `pos_deltas_all` the value-space delta stream (first position
     of each group absolute, rest gaps) with `td_starts` the value-space

@@ -5,10 +5,13 @@ The reference merges segments with a min-heap k-way merge over sorted
 per-segment TermsEnums, concatenating postings with a docBase remap. Our
 doc ids are globally deterministic (builder.py), so no remap is needed;
 the k-way merge *is* Spark's shuffle: group every (field, term)'s chunk
-rows onto one task, decode, merge-sort by doc id in numpy, re-encode into
-maximal chunks. Output is a single-segment index — forceMerge(1) — which
-is the reference's preferred serving layout (BASELINE.md: all query
-numbers are forceMerge(1)).
+rows onto one task, decode, merge-sort by doc id in numpy, then hand the
+merged arrays of each (new segment, field) to the build's own postings
+writer (builder._postings_frame: one batched codec call, maximal chunks)
+— as the reference hands a merge to the FieldsConsumer a flush uses.
+Output is a single-segment index — forceMerge(1) — which is the
+reference's preferred serving layout (BASELINE.md: all query numbers are
+forceMerge(1)).
 
 Scale notes:
 * merge parallelism is NOT capped at num_buckets: groups are salted by
@@ -24,12 +27,16 @@ Scale notes:
 
 from __future__ import annotations
 
+from itertools import groupby
+from operator import itemgetter
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from diagon_spark.index.builder import (CHUNK_DOCS, IndexCatalog,
                                         POSTINGS_SCHEMA, _BLOOM_OPTS,
+                                        _POSTINGS_COLS, _postings_frame,
                                         _refresh_term_dict_and_stats)
 from diagon_spark.index.codec import decode_all, decode_block_flat
 
@@ -100,8 +107,9 @@ def _merge_group_fn(has_positions: bool, num_segments: int):
     """Cogrouped merge fn: (postings rows of one (bucket, salt) group,
     tombstone rows replicated to that group). Tombstones arrive through
     the shuffle — never a driver collect, never a pickled closure array
-    (the scale-safe pattern of searcher.py's delete cogroup)."""
-    from diagon_spark.index.codec import encode_term_postings
+    (the scale-safe pattern of searcher.py's delete cogroup). Each
+    (field, term) merges through `_merge_term_rows`; each (new segment,
+    field) then encodes through the build's own `_postings_frame`."""
 
     def merge(key, pdf: pd.DataFrame, tomb_pdf: pd.DataFrame | None
               ) -> pd.DataFrame:
@@ -111,46 +119,36 @@ def _merge_group_fn(has_positions: bool, num_segments: int):
             tombstones = np.unique(tomb_pdf["doc_id"].to_numpy(np.int64))
         else:
             tombstones = np.zeros(0, dtype=np.int64)
-        out_rows = []
         if len(pdf) == 0:
-            return pd.DataFrame(
-                out_rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
-        pdf = pdf.assign(_new_seg=pdf["segment_id"] % num_segments)
-        for (new_seg, fld, term), grp in pdf.groupby(
-                ["_new_seg", "field", "term"], sort=False):
-            bucket = int(grp["bucket"].iloc[0])
-            docs, tfs, norms, deltas = _merge_term_rows(
-                grp.to_dict("records"), has_positions, tombstones)
-            if len(docs) == 0:
+            return pd.DataFrame(columns=_POSTINGS_COLS)
+        pdf = (pdf.assign(_new_seg=pdf["segment_id"] % num_segments)
+               .sort_values(["_new_seg", "field", "term"], kind="stable"))
+        frames = []
+        for (new_seg, fld), seg_recs in groupby(
+                pdf.to_dict("records"), key=itemgetter("_new_seg", "field")):
+            terms, buckets, merged = [], [], []
+            for term, recs in groupby(seg_recs, key=itemgetter("term")):
+                recs = list(recs)
+                m = _merge_term_rows(recs, has_positions, tombstones)
+                if len(m[0]):
+                    terms.append(term)
+                    buckets.append(int(recs[0]["bucket"]))
+                    merged.append(m)
+            if not terms:
                 continue
-            tf_cum = np.concatenate(([0], np.cumsum(tfs)))
-            for ci, lo in enumerate(range(0, len(docs), CHUNK_DOCS)):
-                hi = min(lo + CHUNK_DOCS, len(docs))
-                chunk_pos = (deltas[tf_cum[lo]:tf_cum[hi]]
-                             if has_positions else None)
-                enc = encode_term_postings(
-                    docs[lo:hi], tfs[lo:hi], norms[lo:hi].astype(np.uint8),
-                    pos_deltas=chunk_pos)
-                out_rows.append({
-                    "field": fld, "term": term, "bucket": bucket,
-                    "segment_id": int(new_seg),
-                    "chunk": ci, "df": int(enc["df"]),
-                    "ttf": int(tfs[lo:hi].sum()),
-                    "doc_blocks": enc["doc_blocks"],
-                    "tf_blocks": enc["tf_blocks"],
-                    "norm_bytes": enc["norm_bytes"],
-                    "block_first": enc["block_first"].tolist(),
-                    "block_last": enc["block_last"].tolist(),
-                    "block_max_tf": enc["block_max_tf"].tolist(),
-                    "block_max_norm": enc["block_max_norm"].tolist(),
-                    "block_doc_off": enc["block_doc_off"].tolist(),
-                    "block_tf_off": enc["block_tf_off"].tolist(),
-                    "pos_blocks": enc["pos_blocks"] if has_positions else None,
-                    "block_pos_off": (enc["block_pos_off"].tolist()
-                                      if has_positions else None),
-                })
-        return pd.DataFrame(out_rows,
-                            columns=[f.name for f in POSTINGS_SCHEMA.fields])
+            docs, tfs, norms, deltas = zip(*merged)
+            t_lens = np.array([len(d) for d in docs], dtype=np.int64)
+            t_ends = np.cumsum(t_lens)
+            tfs = np.concatenate(tfs)
+            frames.append(_postings_frame(
+                fld, int(new_seg), terms, buckets, np.concatenate(docs),
+                tfs, np.concatenate(norms), t_ends - t_lens, t_ends,
+                np.concatenate(deltas) if has_positions else None,
+                _exclusive_cumsum(tfs) if has_positions else None,
+                CHUNK_DOCS))
+        if not frames:
+            return pd.DataFrame(columns=_POSTINGS_COLS)
+        return pd.concat(frames, ignore_index=True)
 
     return merge
 

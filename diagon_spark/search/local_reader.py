@@ -33,8 +33,6 @@ fuzz parity suite with aux clauses).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -65,17 +63,10 @@ def term_filter(col, pairs: list[tuple[str, str]], num_buckets: int):
 class LocalSearcher(PlannerMixin):
     def __init__(self, catalog: IndexCatalog,
                  deleted_doc_ids: list[int] | None = None):
-        # Process-level runtime tuning (THP off + glibc malloc-threshold
-        # pinning, diagon_spark._runtime) is OPT-IN here: a library
-        # constructor must not silently mutate a host application's
-        # global allocator state (ADVICE r6 #3). Long-running serving
-        # hosts that want the executor-grade tuning set
-        # DIAGON_SERVING_TUNE=1; the executor/bench/harness entry points
-        # (builder encode fns, corpus gen, bench.py, scaling_run.py)
-        # call worker_init() explicitly and are unaffected.
-        if os.environ.get("DIAGON_SERVING_TUNE"):
-            from diagon_spark._runtime import worker_init
-            worker_init()
+        # no process-level runtime tuning here (diagon_spark._runtime):
+        # a library constructor must not mutate a host application's
+        # global allocator state; a serving host that wants it calls
+        # _runtime.worker_init() itself
         self.cat = catalog
         # snapshot the opened-at commit generation: the caller may keep
         # using `catalog` as a writer handle (commit() advances its

@@ -1,16 +1,15 @@
 """tokenize_group_flat / factorize_tokens — the no-Python-objects group
 tokenizer used by the segment encoder must be token-for-token identical
-to tokenize_series_bytes (the reference-semantics fast path it replaced
-in the hot loop), across ASCII, non-ASCII, apostrophe, and empty rows."""
+to `tokenize` (the per-string reference semantics, utf-8 encoded),
+across ASCII, non-ASCII, apostrophe, and empty rows."""
 
 import numpy as np
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from diagon_spark.analysis.tokenizer import (factorize_tokens,
-                                             tokenize_group_flat,
-                                             tokenize_series_bytes)
+from diagon_spark.analysis.tokenizer import (factorize_tokens, tokenize,
+                                             tokenize_group_flat)
 
 
 def _regroup(texts: pd.Series):
@@ -25,7 +24,7 @@ def _regroup(texts: pd.Series):
 
 
 def _oracle(texts: pd.Series):
-    return [list(x) for x in tokenize_series_bytes(texts)]
+    return [[t.encode() for t in tokenize(s)] for s in texts]
 
 
 def test_mixed_fixture_rows():
