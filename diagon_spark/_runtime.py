@@ -16,14 +16,12 @@ free memory fragments.
 `PR_SET_THP_DISABLE` turns THP off for the calling process only (no
 root, no sysfs writes, overrides numpy's madvise at the kernel level,
 inherited by forks) — the per-process form of the THP-off guidance
-ClickHouse and Elasticsearch ship for their servers. Hosts where THP
-measurably helps can opt out with DIAGON_KEEP_THP=1.
+ClickHouse and Elasticsearch ship for their servers.
 """
 
 from __future__ import annotations
 
 import ctypes
-import os
 
 _PR_SET_THP_DISABLE = 41
 _done = False
@@ -31,15 +29,12 @@ _done = False
 
 def disable_thp_once() -> None:
     """Disable transparent huge pages for this process (idempotent,
-    best-effort, no-op off Linux or with DIAGON_KEEP_THP=1). Called at
-    the top of every heavy numpy kernel that runs inside executor
-    python workers."""
+    best-effort, no-op off Linux). Called at the top of every heavy
+    numpy kernel that runs inside executor python workers."""
     global _done
     if _done:
         return
     _done = True
-    if os.environ.get("DIAGON_KEEP_THP"):
-        return
     try:
         libc = ctypes.CDLL(None, use_errno=True)
         libc.prctl(_PR_SET_THP_DISABLE, 1, 0, 0, 0)
@@ -55,7 +50,7 @@ _malloc_done = False
 
 def tune_malloc_once() -> None:
     """Pin glibc's dynamic mmap/trim thresholds (idempotent,
-    best-effort, no-op off glibc or with DIAGON_KEEP_MALLOC=1).
+    best-effort, no-op off glibc).
 
     Why: glibc RAISES M_MMAP_THRESHOLD dynamically (up to 32 MiB) every
     time an mmap'd block is freed, so a long-lived worker that churns
@@ -78,8 +73,6 @@ def tune_malloc_once() -> None:
     if _malloc_done:
         return
     _malloc_done = True
-    if os.environ.get("DIAGON_KEEP_MALLOC"):
-        return
     try:
         libc = ctypes.CDLL(None, use_errno=True)
         libc.mallopt(_M_MMAP_THRESHOLD, 1 << 20)

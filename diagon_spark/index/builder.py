@@ -637,7 +637,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                       segment_batches: int = 1, max_batches: int | None = None,
                       resume: bool = False, analyzer=None,
                       append: bool = False, segment_base: int = 0,
-                      store_content: bool = True,
                       commit_extra: dict | None = None,
                       encode_group_docs: int = 20_000) -> IndexCatalog:
     """Build (or resume) the full index. Returns a committed IndexCatalog.
@@ -701,12 +700,11 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     # memory/GC than the vectorized tokenizer).
     docs = prepare_docs(df, key_cols, id_col, field_cols, num_segments,
                         analyzer, segment_base)
-    # store_content=True keeps the original field columns in the docs
-    # table — the stored-fields (.fdt) analogue
-    # (codecs/StoredFieldsWriter.h:19-63); it also lets the postings stage
-    # read docs parquet instead of re-running the sha/window doc-id chain.
-    keep = (key_cols or []) + ([id_col] if id_col else []) \
-        + (field_cols if store_content else [])
+    # the docs table keeps the original field columns — the stored-fields
+    # (.fdt) analogue (codecs/StoredFieldsWriter.h:19-63); it also lets the
+    # postings stage read docs parquet instead of re-running the
+    # sha/window doc-id chain.
+    keep = (key_cols or []) + ([id_col] if id_col else []) + field_cols
     per_field_cols = [c for fn_ in field_names
                       for c in (doc_len_col(fn_), norm_col(fn_))]
     docs_cols = list(dict.fromkeys(
@@ -763,8 +761,7 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
             # range-sampling pass. key_cols builds still read the docs
             # parquet: re-deriving ids there re-runs the sha/window
             # chain (a shuffle + sort).
-            src = docs if (id_col is not None or not store_content) \
-                else docs_idx
+            src = docs if id_col is not None else docs_idx
             fstructs = [F.struct(F.lit(fn_).alias("field"),
                                  F.col(c).cast("string").alias("__content"))
                         for fn_, c in zip(field_names, field_cols)]

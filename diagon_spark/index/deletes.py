@@ -11,10 +11,10 @@ Searcher masks them SCALE-SAFELY: the tombstone table is cogrouped with
 the postings scan per segment (one extra tiny shuffle input — never a
 driver collect, never an `isin` literal in the plan, and top-k is not
 inflated), and match candidates are masked inside the scoring UDF before
-top-k selection. merge_segments purges tombstoned postings for good
-(compaction — Iceberg equality-delete compaction analogue). The
-LocalSearcher serving path keeps an in-memory delete set (top-k-sized
-serving indexes).
+top-k selection. The LocalSearcher serving path loads the tombstones of
+the segments a query touches, lazily, with a pushed segment_id filter.
+merge_segments purges tombstoned postings for good (compaction — Iceberg
+equality-delete compaction analogue).
 """
 
 from __future__ import annotations
@@ -77,14 +77,6 @@ def deleted_docs_df(spark: SparkSession, cat: IndexCatalog) -> DataFrame | None:
     return df.select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.col("segment_id").cast("int").alias("segment_id")) \
              .distinct()
-
-
-def load_deleted_ids(spark: SparkSession, cat: IndexCatalog) -> list[int]:
-    """Collected tombstone ids — LocalSearcher serving path only."""
-    df = deleted_docs_df(spark, cat)
-    if df is None:
-        return []
-    return [int(r.doc_id) for r in df.select("doc_id").collect()]
 
 
 def update_documents(spark: SparkSession, cat: IndexCatalog,

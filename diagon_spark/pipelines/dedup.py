@@ -221,12 +221,9 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     buckets = sig.select(
         "doc_id", F.posexplode(F.array(*band_cols))
         .alias("band", "band_hash"))
-    # materialize the bucket table once: the self-join would otherwise run
-    # the whole shingle→md5→min pipeline twice (broadcast planning defeats
-    # ReuseExchange). On a cluster this is the "write the signature table,
-    # bucket by band_hash" step; in-session, MEMORY_AND_DISK persist.
-    from pyspark import StorageLevel
-    buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
+    # no persist: the adaptive plan reuses the signature aggregation's
+    # exchange on both sides of the self-join (ReusedExchange), so the
+    # minhash kernel runs once per action and no cached block outlives it
     pairs = (buckets.alias("a").join(buckets.alias("b"), ["band", "band_hash"])
              .filter(F.col("a.doc_id") < F.col("b.doc_id"))
              .select(F.col("a.doc_id").alias("doc_a"),

@@ -5,9 +5,13 @@ The index tables are plain parquet; a query needs only the rows of its
 (field, term) pairs (bucket partition pruning + term filter). For
 serving-style point queries, going through a Spark job costs ~0.5 s of
 scheduling; this reader uses pyarrow.dataset directly (zero JVM round
-trips) and runs the SAME planning (planner.py) and numpy scoring kernels
-(wand.py) the Spark executors run — one code path, two execution
-substrates:
+trips) and runs the SAME planning (planner.py), per-segment loop and
+numpy scoring kernels (wand.py) the Spark executors run — one code path,
+two execution substrates. The loop is three module functions below:
+`segment_groups` groups postings rows, aux doc sets and tombstones per
+segment, `segment_hits` scores each segment's local top-k with its
+counters, and `segment_ids` yields each segment's live match set; the
+Spark scoring UDF calls them on its cogrouped frames.
 
 * driver (this reader): millisecond BM25 top-k over the committed
   tables, for a serving tier that mounts the index (how the reference
@@ -49,6 +53,7 @@ BASE_COLS = ["field", "term", "segment_id", "chunk", "df", "doc_blocks",
              "block_max_tf", "block_max_norm", "block_doc_off",
              "block_tf_off"]
 POS_COLS = BASE_COLS + ["pos_blocks", "block_pos_off"]
+_NO_IDS = np.zeros(0, np.int64)
 
 
 def term_filter(col, pairs: list[tuple[str, str]], num_buckets: int):
@@ -58,6 +63,51 @@ def term_filter(col, pairs: list[tuple[str, str]], num_buckets: int):
     return (col("bucket").isin(buckets)
             & col("field").isin(sorted({f for f, _ in pairs}))
             & col("term").isin(sorted({t for _, t in pairs})))
+
+
+# ------------------------------------------------ the per-segment loop
+# Both substrates run a planned spec through these three functions: the
+# LocalSearcher over pyarrow reads, the Spark Searcher inside its scoring
+# UDF over one task's cogrouped frames. Segments run sequentially: scoring
+# is many small numpy calls, and a thread pool GIL-thrashed here (8
+# threads ran 8x slower than one); a serving tier gets concurrency from
+# parallel processes, like the reference's one-thread-per-search model.
+
+def segment_groups(rows, aux_by_seg: dict, banned_by_seg: dict):
+    """Yield (segment_id, postings, aux_sets, banned) for each segment,
+    ascending, that holds postings `rows` or aux docs; `postings` maps
+    (field, term) to the segment's decoded-on-demand postings, `banned`
+    is the segment's live-docs mask input (tombstones + ad-hoc ids)."""
+    by_seg: dict[int, dict[tuple[str, str], list[dict]]] = {}
+    for r in rows:
+        by_seg.setdefault(int(r["segment_id"]), {}) \
+            .setdefault((r["field"], r["term"]), []).append(r)
+    for seg in sorted(set(by_seg) | set(aux_by_seg)):
+        postings = {key: wand._SegmentPostings(rs)
+                    for key, rs in by_seg.get(seg, {}).items()}
+        yield (seg, postings, aux_by_seg.get(seg, {}),
+               banned_by_seg.get(seg, _NO_IDS))
+
+
+def segment_hits(spec: dict, groups, k: int, f64: bool, after):
+    """Yield each segment's local top-k (docs, scores, counters);
+    counters: segment_id, total, exact, blocks_total, blocks_decoded."""
+    for seg, postings, aux, banned in groups:
+        st = {"segment_id": seg, "total": 0, "exact": True,
+              "blocks_total": 0, "blocks_decoded": 0}
+        docs, scores = run_segment_spec(spec, postings, aux, k, f64, after,
+                                        banned, stats_out=st)
+        yield docs, scores, st
+
+
+def segment_ids(spec: dict, groups):
+    """Yield (segment_id, live matching doc ids asc) of a tree spec — the
+    count / match-set form: no scoring order, no top-k."""
+    for seg, postings, aux, banned in groups:
+        docs, _ = wand.eval_tree(spec["root"], postings, spec["params"],
+                                 aux, False)
+        keep = wand._mask_banned(docs, banned)
+        yield seg, (docs[keep] if keep is not None else docs)
 
 
 class LocalSearcher(PlannerMixin):
@@ -192,21 +242,6 @@ class LocalSearcher(PlannerMixin):
                 flt = c if flt is None else (flt & c)
         return self._docs_ds.to_table(columns=columns, filter=flt)
 
-    def _matching_doc_ids(self, q: Query) -> np.ndarray:
-        """doc_ids matching a top-level Range/MatchAll (deletes masked,
-        sorted asc). Tombstones load per matched segment only."""
-        tbl = self._docs_scan(q, columns=["doc_id", "segment_id"])
-        ids = tbl.column("doc_id").to_numpy().astype(np.int64)
-        if self._has_tombstones and len(ids):
-            segs = np.unique(tbl.column("segment_id").to_numpy()
-                             .astype(np.int64))
-            tomb = self._tomb_for_segments(segs)
-            banned = np.unique(np.concatenate(
-                [self._extra_tomb, *tomb.values()]))
-            if len(banned):
-                ids = ids[~np.isin(ids, banned)]
-        return np.sort(ids)
-
     def _aux_by_segment(self, aux_specs) -> dict[int, dict[int, np.ndarray]]:
         """Materialize each Range/MatchAll clause's doc set, split per
         segment — the pyarrow analogue of the Spark path's cogrouped aux
@@ -223,51 +258,20 @@ class LocalSearcher(PlannerMixin):
     # ----------------------------------------------------------- search
 
     def _segment_groups(self, spec: dict):
-        """Yield (segment_id, postings, aux_sets, banned) per segment for
-        a planned spec — the one place postings rows are fetched and
-        grouped (shared by search / search_with_total / count /
-        date_histogram). `banned` is the SEGMENT's tombstones (+ ad-hoc
-        ids), fetched in one pushed scan for exactly the touched
-        segments."""
+        """The shared `segment_groups` over this reader's tables: the
+        spec's postings rows, its aux doc sets, and the tombstones (+
+        ad-hoc ids) of exactly the touched segments, fetched in one
+        pushed scan."""
         rows = self._postings_rows(spec["all_terms"],
                                    spec["need_positions"])
-        by_seg: dict[int, dict[tuple[str, str], list[dict]]] = {}
-        for r in rows:
-            by_seg.setdefault(r["segment_id"], {}) \
-                .setdefault((r["field"], r["term"]), []).append(r)
         aux_by_seg = (self._aux_by_segment(spec["aux_specs"])
                       if spec.get("aux_specs") else {})
-        segs = sorted(set(by_seg) | set(aux_by_seg))
-        tomb = (self._tomb_for_segments(segs) if self._has_tombstones
-                else {})
-        for seg in segs:
-            postings = {key: wand._SegmentPostings(rs)
-                        for key, rs in by_seg.get(seg, {}).items()}
-            banned = self._banned_for(tomb.get(seg, np.zeros(0, np.int64)))
-            yield seg, postings, aux_by_seg.get(seg, {}), banned
-
-    def _run_segments(self, spec: dict, k: int, f64: bool, after,
-                      stats_list: list | None = None):
-        """Per-segment execution of a planned spec (postings + aux sets).
-
-        Sequential over segments: measured that a thread pool GIL-thrashes
-        here (scoring is many small numpy calls, not GIL-releasing bulk
-        kernels) — 8 threads ran 8x SLOWER than one. Concurrency for a
-        serving tier comes from running many queries in parallel
-        processes, like the reference's one-thread-per-search model.
-        `stats_list`, when given, gets one counters dict per segment
-        (segment_id, total, exact, blocks_total, blocks_decoded)."""
-        results = []
-        for seg, postings, aux, banned in self._segment_groups(spec):
-            st = ({"segment_id": seg, "total": 0, "exact": True,
-                   "blocks_total": 0, "blocks_decoded": 0}
-                  if stats_list is not None else None)
-            results.append(run_segment_spec(spec, postings, aux, k, f64,
-                                            after, banned,
-                                            stats_out=st))
-            if stats_list is not None:
-                stats_list.append(st)
-        return results
+        banned_by_seg = {}
+        if self._has_tombstones:
+            segs = {int(r["segment_id"]) for r in rows} | set(aux_by_seg)
+            banned_by_seg = {s: self._banned_for(t) for s, t in
+                             self._tomb_for_segments(segs).items()}
+        return segment_groups(rows, aux_by_seg, banned_by_seg)
 
     def search(self, query: Query, k: int = 100, f64: bool = False,
                after: tuple[float, int] | None = None
@@ -277,21 +281,24 @@ class LocalSearcher(PlannerMixin):
         if isinstance(q, MatchNone):
             return []
         if isinstance(q, (MatchAll, Range)):
-            ids = self._matching_doc_ids(q)[:k]
+            ids = self.matching_doc_ids(q)[:k]
             return [(int(d), float(q.boost)) for d in ids]
-        spec = self.plan(q)
-        d, s = self._top_hits(spec, k, f64, after)
+        d, s, _ = self._top_hits(self.plan(q), k, f64, after)
         return [(int(a), float(b)) for a, b in zip(d, s)]
 
-    def _top_hits(self, spec: dict, k: int, f64: bool, after,
-                  stats_list: list | None = None):
-        """Global top-k (docs, scores) of a planned spec, collector
-        order — also the Spark Searcher's driver substrate."""
-        parts = self._run_segments(spec, k, f64, after, stats_list)
+    def _top_hits(self, spec: dict, k: int, f64: bool, after):
+        """Global top-k (docs, scores) of a planned spec in collector
+        order, plus one counters dict per scored segment — also the
+        Spark Searcher's driver substrate."""
+        parts = list(segment_hits(spec, self._segment_groups(spec), k, f64,
+                                  after))
+        counters = [c for _, _, c in parts]
         if not parts:
-            return np.zeros(0, np.int64), np.zeros(0, np.float64)
-        return wand._topk(np.concatenate([d for d, _ in parts]),
-                          np.concatenate([s for _, s in parts]), k)
+            return np.zeros(0, np.int64), np.zeros(0, np.float64), counters
+        docs, scores = wand._topk(np.concatenate([d for d, _, _ in parts]),
+                                  np.concatenate([s for _, s, _ in parts]),
+                                  k)
+        return docs, scores, counters
 
     def search_with_total(self, query: Query, k: int = 100,
                           f64: bool = False
@@ -302,12 +309,10 @@ class LocalSearcher(PlannerMixin):
         if isinstance(q, MatchNone):
             return [], 0, "eq"
         if isinstance(q, (MatchAll, Range)):
-            ids = self._matching_doc_ids(q)
+            ids = self.matching_doc_ids(q)
             return ([(int(d), float(q.boost)) for d in ids[:k]],
                     int(len(ids)), "eq")
-        spec = self.plan(q)
-        stats: list[dict] = []
-        d, s = self._top_hits(spec, k, f64, None, stats_list=stats)
+        d, s, stats = self._top_hits(self.plan(q), k, f64, None)
         total = sum(st["total"] for st in stats)
         exact = all(st["exact"] for st in stats)
         return ([(int(a), float(b)) for a, b in zip(d, s)], total,
@@ -320,8 +325,6 @@ class LocalSearcher(PlannerMixin):
         q = rewrite(query)
         if isinstance(q, MatchNone):
             return np.zeros(0, np.int64)
-        if isinstance(q, (MatchAll, Range)):
-            return self._matching_doc_ids(q)
         parts = [ids for _seg, ids in self._match_ids_by_segment(q)]
         if not parts:
             return np.zeros(0, np.int64)
@@ -406,28 +409,10 @@ class LocalSearcher(PlannerMixin):
         """Yield (segment_id, matching doc_ids) — the per-segment form of
         matching_doc_ids: each segment's match set is produced, consumed,
         and dropped independently, so analytics over a many-segment index
-        never hold the full match set in one array."""
-        if isinstance(q, (MatchAll, Range)):
-            tbl = self._docs_scan(q, columns=["doc_id", "segment_id"])
-            sa = tbl.column("segment_id").to_numpy().astype(np.int64)
-            da = tbl.column("doc_id").to_numpy().astype(np.int64)
-            segs_u = np.unique(sa)
-            tomb = (self._tomb_for_segments(segs_u)
-                    if self._has_tombstones else {})
-            for s in segs_u:
-                ids = da[sa == s]
-                banned = self._banned_for(
-                    tomb.get(int(s), np.zeros(0, np.int64)))
-                if len(banned):
-                    ids = ids[~np.isin(ids, banned)]
-                yield int(s), np.sort(ids)
-            return
+        never hold the full match set in one array. A top-level
+        Range/MatchAll plans as a one-aux-clause tree."""
         spec = self.plan(q, force_tree=True)
-        for seg, postings, aux, banned in self._segment_groups(spec):
-            docs, _ = wand.eval_tree(spec["root"], postings,
-                                     spec["params"], aux, False)
-            m = wand._mask_banned(docs, banned)
-            yield int(seg), (docs[m] if m is not None else docs)
+        return segment_ids(spec, self._segment_groups(spec))
 
     def fetch(self, doc_ids: list[int],
               columns: list[str] | None = None) -> list[dict]:
@@ -500,6 +485,4 @@ class LocalSearcher(PlannerMixin):
             # the one genuinely global tombstone consumer (documented in
             # the `deleted` property)
             return self.max_doc - len(self.deleted)
-        if isinstance(q, Range):
-            return int(len(self._matching_doc_ids(q)))
         return sum(len(ids) for _seg, ids in self._match_ids_by_segment(q))

