@@ -428,7 +428,7 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
     pre-sorted by doc_id; from there one sort, one grouping and one
     `_postings_frame` call serve both."""
 
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         from diagon_spark._runtime import worker_init
         worker_init()
         if len(pdf) == 0:

@@ -121,8 +121,8 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     8.4 s at 50k docs / 32 cores, vs ~1 s for this kernel (guide §4.2:
     hand whole batches to native code when the JVM expression path is
     not codegen-friendly). The kernel is value-identical: tokens =
-    TOKEN_RE over lower(text) (the same regex the JVM/ oracle path
-    uses), shingles deduped per doc (MIN over a multiset equals MIN
+    `pipeline_tokens` (TOKEN_RE over lower(text), the JVM / oracle
+    rule), shingles deduped per doc (MIN over a multiset equals MIN
     over its set), h_i read as big-endian u32 windows of the digest
     bytes — exactly int(hex_window, 16). Docs with < k tokens emit no
     signature row, as in the explode form (they have no shingles). The
@@ -139,39 +139,25 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     text crosses only the under-parallel input repartition.
     """
     from diagon_spark._ship import ensure_shipped
-    from diagon_spark.pipelines.textstats import TOKEN_RE
     ensure_shipped(df.sparkSession)  # kernel imports diagon_spark on
     # executors — self-ship like every public entry point
     n_digests = (num_hashes + 3) // 4
     schema = ("doc_id long, "
               + ", ".join(f"mh_{i} long" for i in range(num_hashes)))
-    tok_pattern = TOKEN_RE
 
     def kernel(batches):
-        import re
         from hashlib import md5
         import numpy as np
         import pandas as pd
-        from diagon_spark.analysis.tokenizer import (_IS_ASCII,
-                                                     _ascii_tokens_bytes)
-        tok_re = re.compile(tok_pattern)
+        from diagon_spark.analysis.tokenizer import pipeline_tokens
         prefixes = tuple(f"{g}:".encode() for g in range(n_digests))
-        is_ascii = _IS_ASCII.match
         _md5 = md5
         for pdf in batches:
             ids: list[int] = []
             mins: list = []
             for did, text in zip(pdf["doc_id"].tolist(),
                                  pdf["__text"].tolist()):
-                text = text or ""
-                if is_ascii(text):
-                    # byte-translate fast path: token-for-token equal to
-                    # TOKEN_RE over lower(text) for ASCII input
-                    # (analysis/tokenizer.py), ~4x faster than findall
-                    toks = _ascii_tokens_bytes(text)
-                else:
-                    toks = [t.encode() for t in
-                            tok_re.findall(text.lower())]
+                toks = pipeline_tokens(text or "")
                 if len(toks) < k:
                     continue
                 sh = {b" ".join(toks[i:i + k])
@@ -232,30 +218,95 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     return pairs
 
 
+def _simhash_kernel(bits: int):
+    """mapInArrow body over (doc_id, text) rows sorted by doc_id within
+    the partition -> (doc_id, simhash). Each doc's signed sums
+    s_j = sum over tokens of tf * (+1 if hash bit j is set else -1) are
+    carried across its rows and Arrow batches until the next doc_id, so
+    a repeated doc_id is one doc, as in a groupBy(doc_id, token)."""
+
+    def kernel(batches):
+        from collections import Counter
+        from hashlib import md5
+        import numpy as np
+        import pyarrow as pa
+        from diagon_spark.analysis.tokenizer import pipeline_tokens
+        n_bits = min(bits, 32)  # _h32 has 32 bits; higher s_j are < 0
+        place = np.left_shift(np.int64(1), np.arange(n_bits, dtype=np.int64))
+        h32: dict[bytes, int] = {}
+
+        def finished(ids, sums, n_tok):
+            keep = n_tok > 0  # a doc without tokens has no row
+            return pa.RecordBatch.from_arrays(
+                [pa.array([d for d, k in zip(ids, keep) if k], pa.int64()),
+                 pa.array(((sums[keep] > 0) * place).sum(axis=1),
+                          pa.int64())],
+                names=["doc_id", "simhash"])
+
+        carry = None  # ([doc_id], sums[1, n_bits], n_tok[1]) of the last doc
+        for batch in batches:
+            if len(h32) > 1 << 20:  # bound the token-hash cache
+                h32.clear()
+            run_ids: list = []
+            run_of, hs, tfs = [], [], []
+            for did, text in zip(batch.column(0).to_pylist(),
+                                 batch.column(1).to_pylist()):
+                if not run_ids or did != run_ids[-1]:
+                    run_ids.append(did)
+                r = len(run_ids) - 1
+                for tok, tf in Counter(pipeline_tokens(text or "")).items():
+                    h = h32.get(tok)
+                    if h is None:
+                        h = h32[tok] = int.from_bytes(md5(tok).digest()[:4],
+                                                      "big")
+                    run_of.append(r)
+                    hs.append(h)
+                    tfs.append(tf)
+            if not run_ids:
+                continue
+            n = len(run_ids)
+            run_of = np.asarray(run_of, np.int64)
+            h = np.asarray(hs, np.uint32)
+            tf = np.asarray(tfs, np.int64)
+            n_tok = np.bincount(run_of, tf, n).astype(np.int64)
+            sums = np.empty((n, n_bits), np.int64)
+            for j in range(n_bits):
+                sums[:, j] = np.bincount(
+                    run_of, np.where((h >> j) & 1, tf, -tf), n)
+            if carry is not None:
+                if carry[0][0] == run_ids[0]:
+                    sums[0] += carry[1][0]
+                    n_tok[0] += carry[2][0]
+                else:
+                    yield finished(*carry)
+            yield finished(run_ids[:-1], sums[:-1], n_tok[:-1])
+            carry = (run_ids[-1:], sums[-1:], n_tok[-1:])
+        if carry is not None:
+            yield finished(*carry)
+
+    return kernel
+
+
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             bits: int = 32) -> DataFrame:
     """SimHash over tokens: sign-sum of per-token hash bits, weighted by tf.
 
-    Bit j of simhash = 1 iff Σ_tokens tf * (±1 for hash bit j) > 0.
-    Expressed as JVM-side bit ops (no UDF). The narrow input is hash-
-    repartitioned by doc_id when under-parallel (parallel.py): both
-    downstream groupBys ((doc_id, token) and (doc_id)) reuse that one
-    exchange — two shuffles of the exploded token stream removed.
+    Bit j of simhash = 1 iff Σ_tokens tf * (±1 for hash bit j) > 0, with
+    the md5-derived token hash `_h32` the SQL oracle also uses. A doc_id
+    repeated across rows is one doc; a doc with no token has no row.
+
+    One Arrow-batched kernel (`_simhash_kernel`): the narrow (doc_id,
+    text) rows are hash-partitioned on doc_id (sized by parallel.py) and
+    sorted within partitions, so each doc's rows are adjacent and the
+    kernel carries its 32 signed sums across rows and batches. No token
+    row crosses a shuffle and no 32-column aggregate runs.
     """
-    t = ensure_min_parallelism(
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col)), "doc_id")
-    t = with_tokens(t, text_col).select(
-        "doc_id", F.explode("tokens").alias("token"))
-    tf = t.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    h = tf.withColumn("h", _h32(F.col("token")))
-    per_bit = [
-        F.sum(F.when(F.shiftright(F.col("h"), j).bitwiseAND(1) == 1,
-                     F.col("tf")).otherwise(-F.col("tf"))).alias(f"s_{j}")
-        for j in range(bits)]
-    agg = h.groupBy("doc_id").agg(*per_bit)
-    sim = agg.select(
-        "doc_id",
-        sum((F.when(F.col(f"s_{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-             for j in range(bits)), F.lit(0)).cast("long").alias("simhash"))
-    return sim
+    from diagon_spark._ship import ensure_shipped
+    ensure_shipped(df.sparkSession)  # the kernel imports diagon_spark
+    src = df.select(F.col(id_col).cast("long").alias("doc_id"),
+                    F.col(text_col).alias("__text"))
+    t = ensure_min_parallelism(src, "doc_id")
+    if t is src:  # left as it is: a doc's rows must still share a partition
+        t = src.repartition("doc_id")
+    return (t.sortWithinPartitions("doc_id")
+            .mapInArrow(_simhash_kernel(bits), "doc_id long, simhash long"))

@@ -1,20 +1,34 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All JVM-side (built-in pyspark.sql.functions — whole-stage codegen, no
-Python in the hot path) and each reproducible by an ANSI-SQL oracle.
-Tokenization matches the engine's ASCII fast path:
-lower(text) → runs of `[a-z0-9][a-z0-9']*`.
+Tokens are TOKEN_RE (`[a-z0-9][a-z0-9']*`) over the lowercased text, the
+rule the engine's ASCII fast path and the SQL oracle share.
+
+`token_counts`, `quality_scores` and `language_id` read one Arrow-batched
+kernel (`_text_facts`): it tokenizes each row once with the pipelines'
+tokenizer (`analysis.tokenizer.pipeline_tokens`) and emits integer facts
+per row. The operators derive their columns from those facts with JVM
+`round`/`greatest` arithmetic, so Spark's HALF_UP rounding is kept. The
+expression form tokenizes twice and folds with an interpreted `aggregate`
+HOF; on small inputs its cost is mostly plan codegen and JIT, not rows.
+`fingerprints` (and `shingles`, `sparse`) still explode the JVM
+`with_tokens` array into rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-TOKEN_RE = "[a-z0-9][a-z0-9']*"
+from diagon_spark.analysis.tokenizer import TOKEN_RE
+from diagon_spark.parallel import ensure_min_parallelism
 
 # small fixed stopword list (quality/lang-id heuristics)
 STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "it", "for", "on",
              "with", "as", "this", "that", "by", "be", "or", "an", "are"]
+
+# per-row facts of `_facts_kernel`; all NULL for a NULL text
+_FACTS = ("n_chars", "n_tokens", "n_distinct", "n_stop", "token_chars",
+          "alnum_chars")
+_FACTS_SCHEMA = "doc_id long, " + ", ".join(f"{c} long" for c in _FACTS)
 
 
 def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -23,14 +37,58 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0))
 
 
+def _facts_kernel(batches):
+    """mapInArrow body: (doc_id, text) batches -> (doc_id, *_FACTS).
+    n_chars counts code points (Spark's `length`); n_stop counts distinct
+    stopword tokens; token_chars sums token lengths; alnum_chars counts
+    [a-z0-9] in the lowercased text. Every such char lies in a token, so
+    it is token_chars less the tokens' apostrophes."""
+    import pyarrow as pa
+    from diagon_spark.analysis.tokenizer import pipeline_tokens
+    stop = frozenset(w.encode() for w in STOPWORDS)
+    for batch in batches:
+        cols: list[list] = [[] for _ in _FACTS]
+        for text in batch.column(1).to_pylist():
+            if text is None:
+                for c in cols:
+                    c.append(None)
+                continue
+            toks = pipeline_tokens(text)
+            distinct = set(toks)
+            joined = b"".join(toks)
+            for c, v in zip(cols, (len(text), len(toks), len(distinct),
+                                   len(distinct & stop), len(joined),
+                                   len(joined) - joined.count(b"'"))):
+                c.append(v)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0)] + [pa.array(c, pa.int64()) for c in cols],
+            names=["doc_id", *_FACTS])
+
+
+def _text_facts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    from diagon_spark._ship import ensure_shipped
+    ensure_shipped(df.sparkSession)  # the kernel imports diagon_spark
+    src = ensure_min_parallelism(
+        df.select(F.col(id_col).cast("long").alias("doc_id"),
+                  F.col(text_col).alias("__text")), "doc_id")
+    return src.mapInArrow(_facts_kernel, _FACTS_SCHEMA)
+
+
+def _sized(fact: str):
+    """A size() fact: a NULL text has no token array, and size() of one
+    follows the session's ANSI / legacy sizeOfNull setting (NULL or -1)."""
+    return F.coalesce(F.col(fact),
+                      F.size(F.lit(None).cast("array<string>")))
+
+
 def token_counts(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """Per-doc token count + distinct-token count (BPE-ish regex counting)."""
-    t = with_tokens(df, text_col)
-    return t.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.size("tokens").cast("long").alias("n_tokens"),
-        F.size(F.array_distinct("tokens")).cast("long").alias("n_distinct"),
+    f = _text_facts(df, id_col, text_col)
+    return f.select(
+        "doc_id",
+        _sized("n_tokens").alias("n_tokens"),
+        _sized("n_distinct").alias("n_distinct"),
     )
 
 
@@ -38,23 +96,18 @@ def quality_scores(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """Heuristic quality metrics: length, alnum ratio, stopword ratio,
     mean token length — the usual pretraining-data quality features."""
-    t = with_tokens(df, text_col)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_tok = F.size("tokens")
-    n_stop = F.size(F.array_intersect(F.array_distinct("tokens"), stop_arr))
-    alnum_chars = F.length(F.regexp_replace(F.lower(F.col(text_col)),
-                                            "[^a-z0-9]", ""))
-    return t.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.length(text_col).cast("long").alias("n_chars_raw"),
-        n_tok.cast("long").alias("n_tokens"),
-        F.round(alnum_chars.cast("double") /
-                F.greatest(F.length(text_col), F.lit(1)), 6).alias("alnum_ratio"),
-        F.round(n_stop.cast("double") /
-                F.greatest(F.size(F.array_distinct("tokens")), F.lit(1)), 6)
+    f = _text_facts(df, id_col, text_col)
+    n_tok = _sized("n_tokens")
+    return f.select(
+        "doc_id",
+        F.col("n_chars").alias("n_chars_raw"),
+        n_tok.alias("n_tokens"),
+        F.round(F.col("alnum_chars").cast("double") /
+                F.greatest("n_chars", F.lit(1)), 6).alias("alnum_ratio"),
+        F.round(_sized("n_stop").cast("double") /
+                F.greatest(_sized("n_distinct"), F.lit(1)), 6)
         .alias("stopword_ratio"),
-        F.round((F.aggregate("tokens", F.lit(0).cast("long"),
-                             lambda acc, x: acc + F.length(x)).cast("double"))
+        F.round(F.col("token_chars").cast("double")
                 / F.greatest(n_tok, F.lit(1)), 6).alias("mean_token_len"),
     )
 
@@ -64,13 +117,11 @@ def language_id(df: DataFrame, id_col: str = "doc_id",
     """n-gram/stopword-heuristic language ID: docs whose distinct-token
     overlap with an English stopword list exceeds a threshold -> 'en',
     else 'unknown'. (Real model swapped in where fasttext/cld3 exists.)"""
-    t = with_tokens(df, text_col)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    ratio = (F.size(F.array_intersect(F.array_distinct("tokens"), stop_arr))
-             .cast("double")
-             / F.greatest(F.size(F.array_distinct("tokens")), F.lit(1)))
-    return t.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+    f = _text_facts(df, id_col, text_col)
+    ratio = (_sized("n_stop").cast("double")
+             / F.greatest(_sized("n_distinct"), F.lit(1)))
+    return f.select(
+        "doc_id",
         F.when(ratio >= 0.05, F.lit("en")).otherwise(F.lit("unknown"))
         .alias("lang_pred"),
         F.round(ratio, 6).alias("stopword_ratio"),
