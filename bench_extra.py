@@ -5,7 +5,7 @@ plan captures can be iterated on quickly (guide §1: measure first,
 noop-sink isolation, labelled jobs).
 
 Usage:
-  python bench_extra.py suite            # time build/queries/minhash/quality/simhash/knn at $SPARK_GRAFT_SF_DIR
+  python bench_extra.py suite            # time build/queries/minhash/text pipelines/knn at $SPARK_GRAFT_SF_DIR
   python bench_extra.py suite --big      # same but over a generated 50k-doc corpus (driver sf1.0 shape)
   python bench_extra.py plans <outdir>   # dump .explain('formatted') for the touched queries
   python bench_extra.py jobs             # per-phase Spark job/stage counts (scheduler-overhead audit)
@@ -84,7 +84,7 @@ def _noop(df):
 def suite(sf_dir: str) -> None:
     from pyspark.sql import functions as F
     from diagon_spark import build_index, Searcher
-    from diagon_spark.pipelines import dedup, similarity, textstats
+    from diagon_spark.pipelines import dedup, similarity, sparse, textstats
     from diagon_spark.search.query import Boolean, Phrase, Term
     from diagon_spark._runtime import worker_init
     worker_init()
@@ -151,7 +151,10 @@ def suite(sf_dir: str) -> None:
     # a full collect: a count() would let the optimizer prune the columns
     # of a JVM expression plan and time none of its work
     for name, op in (("quality_scores", textstats.quality_scores),
-                     ("simhash", dedup.simhash)):
+                     ("simhash", dedup.simhash),
+                     ("jaccard_pairs", dedup.jaccard_pairs),
+                     ("fingerprints", textstats.fingerprints),
+                     ("build_value_postings", sparse.build_value_postings)):
         sc.setJobDescription(f"extra: {name}")
         t = time.time()
         op(docs, "doc_id", "text").collect()

@@ -17,8 +17,18 @@ Public API (analogue of the reference C API, c_api/diagon_c_api.h:28-160):
     top = s.search(Boolean(should=[Term("oil"), Term("price")]), k=100)
 """
 
-from diagon_spark.index.builder import build_index, IndexCatalog
-from diagon_spark.search.searcher import Searcher
-
 __all__ = ["build_index", "IndexCatalog", "Searcher"]
 __version__ = "0.1.0"
+
+# The exports load on first use (PEP 562), so a Python worker that
+# unpickles a pipeline kernel imports neither the builder nor the searcher.
+_EXPORTS = {"build_index": "diagon_spark.index.builder",
+            "IndexCatalog": "diagon_spark.index.builder",
+            "Searcher": "diagon_spark.search.searcher"}
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    from importlib import import_module
+    return getattr(import_module(_EXPORTS[name]), name)

@@ -9,7 +9,7 @@ compaction, whose zone-lock stalls SERIALIZE across concurrently
 faulting worker processes. Measured effect at 5 concurrent 156k-doc
 encode groups: mean task 203 s with THP madvise vs 30-32 s with it
 disabled (6.5x) — this single switch was the round-4 "encode-group
-superlinearity" (scripts/encode_profile.py probes). It also explains
+superlinearity". It also explains
 the multi-x run-to-run drift on long sessions: compaction cost grows as
 free memory fragments.
 

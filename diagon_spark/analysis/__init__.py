@@ -1,3 +1,3 @@
-from diagon_spark.analysis.tokenizer import tokenize, tokenize_series
+from diagon_spark.analysis.tokenizer import tokenize
 
-__all__ = ["tokenize", "tokenize_series"]
+__all__ = ["tokenize"]

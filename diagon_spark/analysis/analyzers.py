@@ -20,7 +20,7 @@ from typing import Callable
 
 import pandas as pd
 
-from diagon_spark.analysis.tokenizer import tokenize_series
+from diagon_spark.analysis.tokenizer import tokenize
 
 Analyzer = Callable[[pd.Series], pd.Series]
 
@@ -47,7 +47,7 @@ def simple_analyzer(texts: pd.Series) -> pd.Series:
 
 def standard_analyzer(texts: pd.Series) -> pd.Series:
     """The indexing-path default (StandardTokenizer, §1.4)."""
-    return tokenize_series(texts)
+    return texts.fillna("").map(tokenize)
 
 
 # ------------------------------------------------------------- filters
@@ -168,7 +168,6 @@ def _cjk_bigrams(run: str) -> list[str]:
 def _mixed_tokenize(text: str, segmenter=None) -> list[str]:
     """Split text into CJK runs (segmented) and non-CJK spans
     (standard-tokenized), preserving order."""
-    from diagon_spark.analysis.tokenizer import tokenize
     out: list[str] = []
     last = 0
     for m in _CJK_RE.finditer(text):

@@ -103,8 +103,8 @@ def _ascii_tokens_bytes(s: str) -> list[bytes]:
 
 
 # The pipelines' token rule (textstats, dedup, sparse): TOKEN_RE over the
-# lowercased text. The JVM `with_tokens` regex and the SQL oracle use it
-# as written; `pipeline_tokens` is its Python form for the Arrow kernels.
+# lowercased text, as the SQL oracle writes it. `pipeline_tokens` is the
+# one implementation in the package; every pipeline kernel calls it.
 TOKEN_RE = "[a-z0-9][a-z0-9']*"
 _PIPELINE_TOKEN = re.compile(TOKEN_RE)
 
@@ -119,6 +119,12 @@ def pipeline_tokens(text: str) -> list[bytes]:
     if text.isascii():
         return _ascii_tokens_bytes(text)
     return [t.encode("ascii") for t in _PIPELINE_TOKEN.findall(text.lower())]
+
+
+def shingle_set(toks: list[bytes], k: int) -> set[bytes]:
+    """The distinct k-shingles of a token list: k consecutive tokens
+    joined by one space. Fewer than k tokens give none."""
+    return {b" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
 
 
 _TRANS_NP = np.frombuffer(_TRANS, dtype=np.uint8)
@@ -138,7 +144,7 @@ def tokenize_group_flat(texts: pd.Series
     per document that made large encode groups superlinear under
     concurrency (round-4 10M ladder: 156k-doc groups ~4x worse s/doc than
     15.6k ones — GC/allocator pressure over tens of millions of bytes
-    objects, reproduced without Spark by scripts/encode_profile.py).
+    objects, reproduced without Spark).
 
     Non-ASCII rows (≈1% of the fixture corpus) still route through the
     per-row standard path; their tokens are appended to the same arrays.
@@ -284,7 +290,7 @@ def tokenize_factorize_sliced(texts: pd.Series, slice_docs: int = 16384
     doc searchsorted, vocabulary unique) are DRAM-latency-bound once the
     group's buffers outgrow the LLC — measured 4-5x per-task inflation at
     8 concurrent 150k-doc groups vs NO inflation for the cache-resident
-    phases (scripts/encode_profile.py phase probe). Tokenizing ~16k docs
+    phases (round-4 per-phase probe). Tokenizing ~16k docs
     at a time keeps each slice's buffer + token arrays cache-warm; the
     slice vocabularies then merge two-level (np.unique over the SMALL
     per-slice vocabs, searchsorted remap of each slice's ids — the
@@ -324,20 +330,3 @@ def count_tokens_series(texts: pd.Series) -> np.ndarray:
     return np.fromiter(
         (len(_ascii_tokens_bytes(s) if _IS_ASCII.match(s) else tokenize(s))
          for s in texts.fillna("")), dtype=np.int64, count=len(texts))
-
-
-def tokenize_series(texts: pd.Series) -> pd.Series:
-    """Vectorized tokenizer for pandas-UDF use: Series[str] -> Series[list[str]].
-
-    ASCII rows take the regex fast path via pandas .str accessor
-    (C-level); rare non-ASCII rows fall back per-row.
-    """
-    texts = texts.fillna("")
-    is_ascii = texts.str.match(_IS_ASCII)
-    out = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-    if is_ascii.any():
-        asc = texts[is_ascii].str.lower().str.findall(_ASCII_TOKEN)
-        out[is_ascii] = asc
-    if (~is_ascii).any():
-        out[~is_ascii] = texts[~is_ascii].map(tokenize)
-    return out

@@ -70,6 +70,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
 from diagon_spark.index.norms import encode_norm
 
 CHUNK_DOCS = 16384  # max docs per postings row (salting of heavy hitters)
+ENCODE_GROUP_DOCS = 20_000  # docs per encode sub-batch (driver-side)
 # encode-group routing: above this many groups the literal salt map would
 # bloat the plan — fall back to repartitionByRange (see _partition_salts)
 _SALT_ROUTE_MAX_GROUPS = 4096
@@ -446,7 +447,7 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
             # per-token Python objects. Large groups were superlinear
             # purely from allocator/GC pressure over tens of millions of
             # bytes objects (measured 3-4x s/doc at 150k-doc groups under
-            # 8-way concurrency, scripts/encode_profile.py); this path
+            # 8-way concurrency, round-4 group-size probes); this path
             # holds s/doc flat across group sizes. Only the per-segment
             # vocabulary is decoded to str.
             from diagon_spark.analysis.tokenizer import \
@@ -469,7 +470,7 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
             # packed keys — term(28b) | row(20b) | pos(16b). Replaces
             # the 3-key lexsort + FOUR 250MB random-read permute
             # gathers (the two phases left DRAM-latency-bound after
-            # slicing — phase probe in scripts/encode_profile.py)
+            # slicing — round-4 per-phase probe)
             # with sequential shift/mask passes and two gathers into
             # the per-ROW tables (cache-resident). Row order is doc_id
             # order (rows pre-sorted), so row-ascending == doc-
@@ -637,8 +638,7 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                       segment_batches: int = 1, max_batches: int | None = None,
                       resume: bool = False, analyzer=None,
                       append: bool = False, segment_base: int = 0,
-                      commit_extra: dict | None = None,
-                      encode_group_docs: int = 20_000) -> IndexCatalog:
+                      commit_extra: dict | None = None) -> IndexCatalog:
     """Build (or resume) the full index. Returns a committed IndexCatalog.
 
     `fields` lists the document columns to index, each as its own field
@@ -773,14 +773,14 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         part = tok_docs.filter(F.col("segment_id").isin(todo))
         # ENCODE GROUP SIZE is decoupled from segment size: each
         # (segment, field) splits into doc-id-RANGE sub-batches of
-        # ~encode_group_docs docs (`sub` column below; the postings
+        # ~ENCODE_GROUP_DOCS docs (`sub` column below; the postings
         # format already supports many chunks per term — sub-batch b
         # emits chunks at base b<<20, and sub order == doc order, so
         # rows sorted by chunk stay docID-ordered exactly as
         # _SegmentPostings requires). Measured: the encode kernel's
         # s/doc is flat at 15-20k-doc groups and inflates 3-10x at 156k
         # under concurrent workers (cache + fresh-page-fault working
-        # set, scripts/encode_profile.py) — sub-batching makes a
+        # set, round-4 group-size probes) — sub-batching makes a
         # big-segment layout build like a small-segment one while
         # keeping the segment COUNT a pure layout choice. The doc-id
         # range split uses per-segment (min, max) collected from the
@@ -816,7 +816,7 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         n_groups = 0
         for r in seg_rows:
             # cap: sub<<20 must fit the int32 chunk column (sub <= 2047)
-            n_subs = max(1, min(2000, int(r.n) // max(encode_group_docs, 1)))
+            n_subs = max(1, min(2000, int(r.n) // ENCODE_GROUP_DOCS))
             seg_nsubs[int(r.segment_id)] = n_subs
             seg_span[int(r.segment_id)] = max(
                 1, -(-(int(r.hi) - int(r.lo) + 1) // n_subs))

@@ -9,14 +9,18 @@ Exact (hash groupBy), n-gram Jaccard (shingle self-join), MinHash+LSH
   doc×doc cross join; hot shingles (boilerplate lines) are capped with a
   max-df filter before the join, the standard web-dedup skew guard;
 * all hashes derive from md5 so an ANSI-SQL oracle can reproduce them.
+
+Shingles, MinHash and SimHash are Arrow-batched kernels on the pipeline
+tokenizer (`analysis.tokenizer.pipeline_tokens`); no token array is
+exploded into rows on the JVM.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from diagon_spark.parallel import ensure_min_parallelism
-from diagon_spark.pipelines.textstats import with_tokens
+from diagon_spark.analysis.tokenizer import shingle_set
+from diagon_spark.pipelines.textstats import _kernel_input, _token_rows
 
 # md5-derived 32-bit hash, reproducible in DuckDB:
 #   CAST(concat('0x', substr(md5(s),1,8)) AS BIGINT)
@@ -36,38 +40,15 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
 
 
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             k: int = 3, distinct: bool = True) -> DataFrame:
-    """Token k-gram shingles per doc: (doc_id, shingle).
+             k: int = 3) -> DataFrame:
+    """Distinct token k-gram shingles per doc: (doc_id, shingle), the k
+    tokens joined by one space. A doc with fewer than k tokens has none.
 
-    distinct=True (set semantics — required by Jaccard) costs a shuffle;
-    MinHash passes distinct=False because MIN over a multiset equals MIN
-    over its set — one whole shuffle of the shingle stream saved.
-
-    The narrow (doc_id, text) input is hash-repartitioned by doc_id
-    BEFORE tokenize/explode when under-parallel (see parallel.py): the
-    tokenize → k-gram → md5 work then runs at full parallelism, and the
-    downstream distinct / per-doc signature aggregation reuses this
-    exchange (their key sets contain doc_id) instead of adding one —
-    same shuffle count, the exchange just sits below the cheap rows
-    instead of above the exploded ones."""
-    t = ensure_min_parallelism(
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col)), "doc_id")
-    t = with_tokens(t, text_col).select("doc_id", "tokens")
-    n = F.size("tokens")
-    # docs with < k tokens have NO shingles (empty start index array).
-    # The old greatest(n-k, -1) form made sequence(0, -1) STEP DOWN to
-    # the two-element [0, -1], whose i = -1 branch hit the illegal
-    # slice(tokens, 0, k) — any short/empty doc crashed the whole query
-    # (latent: the fixture corpora have no such docs).
-    idxs = F.when(n >= k, F.sequence(F.lit(0), n - k)) \
-        .otherwise(F.array().cast("array<int>"))
-    sh = t.select(
-        "doc_id",
-        F.explode(F.transform(idxs, lambda i:
-                              F.concat_ws(" ", F.slice("tokens", i + 1, k))))
-        .alias("shingle"))
-    return sh.distinct() if distinct else sh
+    One Arrow-batched kernel emits each row's distinct shingles; the
+    global distinct merges a doc_id repeated across rows."""
+    return _token_rows(df, id_col, text_col,
+                       lambda toks: (shingle_set(toks, k),),
+                       [("shingle", "string")]).distinct()
 
 
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -113,34 +94,18 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     ceil(num_hashes/4) md5 calls per shingle:
     h_i = int(md5((i//4) || ':' || shingle)[8*(i%4) : 8*(i%4)+8], 16).
 
-    Implemented as ONE Arrow-batched kernel (mapInPandas) instead of the
-    explode → md5-expression → groupBy plan: the expression pipeline
-    materialized the 10M-row shingle stream through interpreted
-    higher-order functions (transform/slice HOFs are CodegenFallback)
-    and ran 4 md5 + 16 min-updates per shingle OCCURRENCE — measured
-    8.4 s at 50k docs / 32 cores, vs ~1 s for this kernel (guide §4.2:
-    hand whole batches to native code when the JVM expression path is
-    not codegen-friendly). The kernel is value-identical: tokens =
-    `pipeline_tokens` (TOKEN_RE over lower(text), the JVM / oracle
-    rule), shingles deduped per doc (MIN over a multiset equals MIN
-    over its set), h_i read as big-endian u32 windows of the digest
-    bytes — exactly int(hex_window, 16). Docs with < k tokens emit no
-    signature row, as in the explode form (they have no shingles). The
-    per-doc aggregation happens inside the kernel, so the trailing
-    groupBy reduces doc-count-sized rows (one per doc per batch) — it
-    exists to merge rows of a DOC_ID REPEATED across input rows/batches
-    (min over the union of their shingles, the old groupBy semantics
-    and the oracle's). mapInPandas emits fresh attribute ids, so the
-    planner cannot prove the kernel preserved HashPartitioning(doc_id)
-    and the groupBy plans its own exchange — but a partial aggregate
-    runs below it, so that exchange moves ~one 17-long row per
-    (doc_id, partition), the same tiny width the old expression plan
-    shuffled. The exploded shingle stream crosses no shuffle; the raw
-    text crosses only the under-parallel input repartition.
+    One Arrow-batched kernel (mapInPandas) hashes each row's distinct
+    shingles (`shingle_set`: MIN over a multiset equals MIN over its
+    set) and reads h_i as big-endian u32 windows of the digest bytes,
+    exactly int(hex_window, 16). It replaced an explode → md5-expression
+    → groupBy plan whose transform/slice HOFs are CodegenFallback
+    (measured 8.4 s at 50k docs / 32 cores, against ~1 s). A doc with
+    < k tokens has no signature row. The trailing groupBy merges a
+    doc_id repeated across rows or batches (MIN over the union of their
+    shingles, as the SQL oracle's GROUP BY); a partial aggregate runs
+    below its exchange, so it moves about one 17-long row per (doc_id,
+    partition), and the shingle stream crosses no shuffle.
     """
-    from diagon_spark._ship import ensure_shipped
-    ensure_shipped(df.sparkSession)  # kernel imports diagon_spark on
-    # executors — self-ship like every public entry point
     n_digests = (num_hashes + 3) // 4
     schema = ("doc_id long, "
               + ", ".join(f"mh_{i} long" for i in range(num_hashes)))
@@ -157,11 +122,9 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
             mins: list = []
             for did, text in zip(pdf["doc_id"].tolist(),
                                  pdf["__text"].tolist()):
-                toks = pipeline_tokens(text or "")
-                if len(toks) < k:
+                sh = shingle_set(pipeline_tokens(text or ""), k)
+                if not sh:
                     continue
-                sh = {b" ".join(toks[i:i + k])
-                      for i in range(len(toks) - k + 1)}
                 buf = b"".join(
                     b"".join(_md5(p + s).digest() for p in prefixes)
                     for s in sh)
@@ -175,13 +138,11 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                 "doc_id": np.asarray(ids, dtype=np.int64),
                 **{f"mh_{i}": m[:, i] for i in range(num_hashes)}})
 
-    src = ensure_min_parallelism(
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col).alias("__text")), "doc_id")
     # merge repeated doc_ids (split across rows or Arrow batches): MIN
     # per hash over the union of their shingles — identical to the old
     # groupBy-over-shingles semantics and the SQL oracle's GROUP BY
-    return (src.mapInPandas(kernel, schema=schema)
+    return (_kernel_input(df, id_col, text_col)
+            .mapInPandas(kernel, schema=schema)
             .groupBy("doc_id")
             .agg(*[F.min(f"mh_{i}").alias(f"mh_{i}")
                    for i in range(num_hashes)]))
@@ -301,12 +262,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     kernel carries its 32 signed sums across rows and batches. No token
     row crosses a shuffle and no 32-column aggregate runs.
     """
-    from diagon_spark._ship import ensure_shipped
-    ensure_shipped(df.sparkSession)  # the kernel imports diagon_spark
-    src = df.select(F.col(id_col).cast("long").alias("doc_id"),
-                    F.col(text_col).alias("__text"))
-    t = ensure_min_parallelism(src, "doc_id")
-    if t is src:  # left as it is: a doc's rows must still share a partition
-        t = src.repartition("doc_id")
-    return (t.sortWithinPartitions("doc_id")
+    return (_kernel_input(df, id_col, text_col, by_doc=True)
+            .sortWithinPartitions("doc_id")
             .mapInArrow(_simhash_kernel(bits), "doc_id long, simhash long"))

@@ -8,14 +8,23 @@ Spark-first restatement: the value postings are a plain DataFrame
 `groupBy(doc_id).sum(q_w * weight)`, whole-stage-codegen'd by Catalyst,
 no UDF at all. Weights here are deterministic tf·idf (double) standing in
 for learned-sparse weights (SPLADE-style models emit exactly this shape);
-swap the weight column for model outputs and nothing else changes.
+swap the weight column for model outputs and nothing else changes. The
+term frequencies come from an Arrow-batched kernel on the pipeline
+tokenizer (`analysis.tokenizer.pipeline_tokens`).
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, functions as F
 
-from diagon_spark.pipelines.textstats import with_tokens
+from diagon_spark.pipelines.textstats import _token_rows
+
+
+def _term_counts(toks):
+    tf = Counter(toks)
+    return tf.keys(), tf.values()
 
 
 def build_value_postings(df: DataFrame, id_col: str = "doc_id",
@@ -25,17 +34,12 @@ def build_value_postings(df: DataFrame, id_col: str = "doc_id",
     weight = tf * ln(1 + (N - df + 0.5)/(df + 0.5)) in double — the same
     idf form the BM25 engine uses, so the two paths share semantics.
 
-    The narrow input is hash-repartitioned by doc_id when under-parallel
-    (parallel.py): tokenize/explode run at full parallelism and the tf
-    groupBy on (doc_id, term) reuses the exchange.
+    A kernel counts each row's tokens; the sum over (doc_id, term) merges
+    a doc_id repeated across rows.
     """
-    from diagon_spark.parallel import ensure_min_parallelism
-    t = ensure_min_parallelism(
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col)), "doc_id")
-    t = with_tokens(t, text_col).select(
-        "doc_id", F.explode("tokens").alias("term"))
-    tf = t.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = (_token_rows(df, id_col, text_col, _term_counts,
+                      [("term", "string"), ("tf", "int64")])
+          .groupBy("doc_id", "term").agg(F.sum("tf").alias("tf")))
     n_docs = df.count()
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     return (tf.join(dfreq, "term")

@@ -1,24 +1,25 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
 Tokens are TOKEN_RE (`[a-z0-9][a-z0-9']*`) over the lowercased text, the
-rule the engine's ASCII fast path and the SQL oracle share.
+rule the engine's ASCII fast path and the SQL oracle share. Every
+pipeline operator (these, and the shingles, simhash, minhash and sparse
+value postings) tokenizes with its one implementation,
+`analysis.tokenizer.pipeline_tokens`, inside an Arrow-batched kernel fed
+by `_kernel_input`: each pipeline pays one Python boundary per batch.
 
-`token_counts`, `quality_scores` and `language_id` read one Arrow-batched
-kernel (`_text_facts`): it tokenizes each row once with the pipelines'
-tokenizer (`analysis.tokenizer.pipeline_tokens`) and emits integer facts
-per row. The operators derive their columns from those facts with JVM
-`round`/`greatest` arithmetic, so Spark's HALF_UP rounding is kept. The
-expression form tokenizes twice and folds with an interpreted `aggregate`
-HOF; on small inputs its cost is mostly plan codegen and JIT, not rows.
-`fingerprints` (and `shingles`, `sparse`) still explode the JVM
-`with_tokens` array into rows.
+`token_counts`, `quality_scores` and `language_id` read one kernel
+(`_text_facts`) that emits integer facts per row. The operators derive
+their columns from those facts with JVM `round`/`greatest` arithmetic,
+so Spark's HALF_UP rounding is kept. `fingerprints` hashes each row's
+token stream in its own kernel.
 """
 
 from __future__ import annotations
 
+from hashlib import md5
+
 from pyspark.sql import DataFrame, functions as F
 
-from diagon_spark.analysis.tokenizer import TOKEN_RE
 from diagon_spark.parallel import ensure_min_parallelism
 
 # small fixed stopword list (quality/lang-id heuristics)
@@ -31,10 +32,50 @@ _FACTS = ("n_chars", "n_tokens", "n_distinct", "n_stop", "token_chars",
 _FACTS_SCHEMA = "doc_id long, " + ", ".join(f"{c} long" for c in _FACTS)
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn(
-        "tokens",
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0))
+def _kernel_input(df: DataFrame, id_col: str, text_col: str,
+                  by_doc: bool = False) -> DataFrame:
+    """The input of every pipeline kernel: (doc_id long, __text) rows,
+    sized by parallel.py, which hash-partitions them on doc_id when it
+    splits them. With `by_doc`, an input it leaves as it is is
+    hash-partitioned on doc_id too, so each doc's rows share a partition.
+    Ships the package: the kernels import diagon_spark on executors."""
+    from diagon_spark._ship import ensure_shipped
+    ensure_shipped(df.sparkSession)
+    src = df.select(F.col(id_col).cast("long").alias("doc_id"),
+                    F.col(text_col).alias("__text"))
+    t = ensure_min_parallelism(src, "doc_id")
+    if by_doc and t is src:
+        t = src.repartition("doc_id")
+    return t
+
+
+def _token_rows(df: DataFrame, id_col: str, text_col: str, cols_of,
+                fields: list[tuple[str, str]]) -> DataFrame:
+    """An Arrow-batched kernel over each row's pipeline tokens:
+    `cols_of(tokens)` gives the row's output as one equal-length
+    collection per (name, Arrow type) of `fields`; each output row is
+    prefixed with the row's doc_id."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+    schema = pa.schema([("doc_id", pa.int64())]
+                       + [(n, pa.type_for_alias(t)) for n, t in fields])
+
+    def kernel(batches):
+        from diagon_spark.analysis.tokenizer import pipeline_tokens
+        for batch in batches:
+            cols: list[list] = [[] for _ in schema]
+            for did, text in zip(batch.column(0).to_pylist(),
+                                 batch.column(1).to_pylist()):
+                out = cols_of(pipeline_tokens(text or ""))
+                cols[0] += [did] * len(out[0])
+                for c, v in zip(cols[1:], out):
+                    c += v
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)],
+                schema=schema)
+
+    return _kernel_input(df, id_col, text_col).mapInArrow(
+        kernel, from_arrow_schema(schema))
 
 
 def _facts_kernel(batches):
@@ -66,12 +107,8 @@ def _facts_kernel(batches):
 
 
 def _text_facts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    from diagon_spark._ship import ensure_shipped
-    ensure_shipped(df.sparkSession)  # the kernel imports diagon_spark
-    src = ensure_min_parallelism(
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col).alias("__text")), "doc_id")
-    return src.mapInArrow(_facts_kernel, _FACTS_SCHEMA)
+    return _kernel_input(df, id_col, text_col).mapInArrow(_facts_kernel,
+                                                          _FACTS_SCHEMA)
 
 
 def _sized(fact: str):
@@ -131,9 +168,8 @@ def language_id(df: DataFrame, id_col: str = "doc_id",
 def fingerprints(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """Document fingerprint = md5 over the normalized token stream (the
-    content-defined analogue of a rolling hash at doc granularity)."""
-    t = with_tokens(df, text_col)
-    return t.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.md5(F.concat_ws(" ", "tokens")).alias("fingerprint"),
-    )
+    content-defined analogue of a rolling hash at doc granularity): the
+    tokens joined by one space, so a NULL text gives md5("")."""
+    return _token_rows(df, id_col, text_col,
+                       lambda toks: ([md5(b" ".join(toks)).hexdigest()],),
+                       [("fingerprint", "string")])

@@ -74,10 +74,8 @@ def run(cpus: int, input_dir: str, out_dir: str,
     # concurrency once buffers outgrow the LLC share) and fixed the
     # kernel: zero-object flat tokenization + cache-sized internal
     # slices for tokenize/factorize/codec (tokenizer.
-    # tokenize_factorize_sliced, codec.encode_segment_batch slice_groups)
-    # — see scripts/encode_profile.py for the standalone and in-Spark
-    # group-size probes. Segment count is now a layout choice, not a
-    # survival knob.
+    # tokenize_factorize_sliced, codec.encode_segment_batch slice_groups).
+    # Segment count is now a layout choice, not a survival knob.
     t0 = time.time()
     cat = build_index(spark, df, out_dir, num_segments=num_segments,
                       num_buckets=16, positions=True)

@@ -7,6 +7,7 @@ import pytest
 
 from diagon_spark import Searcher, build_index
 from diagon_spark.corpus import corpus_df
+from diagon_spark.index import builder
 from diagon_spark.search.local_reader import LocalSearcher
 from diagon_spark.search.query import Boolean, Phrase, Range, Term
 
@@ -19,8 +20,10 @@ def pair(spark, tmp_path_factory):
     cat_a = build_index(spark, df, base, num_segments=2, num_buckets=4,
                         positions=True)
     # force ~10 sub-batches per segment
-    cat_b = build_index(spark, df, subbed, num_segments=2, num_buckets=4,
-                        positions=True, encode_group_docs=25)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(builder, "ENCODE_GROUP_DOCS", 25)
+        cat_b = build_index(spark, df, subbed, num_segments=2,
+                            num_buckets=4, positions=True)
     return Searcher(spark, cat_a), Searcher(spark, cat_b)
 
 

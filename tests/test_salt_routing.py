@@ -42,9 +42,10 @@ def test_salts_cover_all_partitions(n):
     assert parts == set(range(n))
 
 
-def test_salt_routed_layouts_query_identical(spark, tmp_path):
+def test_salt_routed_layouts_query_identical(spark, tmp_path, monkeypatch):
     import pandas as pd
     from diagon_spark import build_index, Searcher
+    from diagon_spark.index import builder
     from diagon_spark.search.query import Boolean, Term
 
     n = 3000
@@ -52,12 +53,14 @@ def test_salt_routed_layouts_query_identical(spark, tmp_path):
     df = spark.createDataFrame(pd.DataFrame(
         {"doc_id": list(range(n)), "text": texts}))
 
+    monkeypatch.setattr(builder, "ENCODE_GROUP_DOCS", 500)
     cat_a = build_index(spark, df, str(tmp_path / "a"), num_segments=4,
                         num_buckets=4, id_col="doc_id", content_col="text",
-                        positions=False, encode_group_docs=500)
+                        positions=False)
+    monkeypatch.setattr(builder, "ENCODE_GROUP_DOCS", 100)
     cat_b = build_index(spark, df, str(tmp_path / "b"), num_segments=4,
                         num_buckets=4, id_col="doc_id", content_col="text",
-                        positions=False, encode_group_docs=100)
+                        positions=False)
     sa = Searcher(spark, cat_a)
     sb = Searcher(spark, cat_b)
     q = Boolean(should=[Term("alpha"), Term("w3"), Term("t2")])

@@ -1,11 +1,13 @@
 """The Arrow kernels behind `token_counts`, `quality_scores`,
-`language_id` and `simhash` against the JVM expression plans they
-replaced, restated below as the reference: equal rows (as a multiset) and
-equal schema (names and types).
+`language_id`, `simhash`, `shingles`, `fingerprints` and
+`build_value_postings` against the JVM expression plans they replaced,
+restated below as the reference: equal rows (as a multiset) and equal
+schema (names and types).
 
 Arrow batches hold 2 records and every input has at least 2 partitions,
-so a doc_id repeated across rows reaches the simhash kernel in several
-batches and its signed sums must be carried across them."""
+so a doc_id repeated across rows reaches the kernels in several batches:
+the simhash kernel must carry its signed sums across them, and the
+shingle and value-postings plans must merge the doc's rows."""
 
 import os
 import sys
@@ -20,9 +22,10 @@ from pyspark.sql import functions as F
 
 from diagon_spark.corpus import generate_pandas
 from diagon_spark.parallel import ensure_min_parallelism
-from diagon_spark.pipelines import dedup, textstats
+from diagon_spark.analysis.tokenizer import TOKEN_RE
+from diagon_spark.pipelines import dedup, sparse, textstats
 from diagon_spark.pipelines.dedup import _h32
-from diagon_spark.pipelines.textstats import STOPWORDS, TOKEN_RE
+from diagon_spark.pipelines.textstats import STOPWORDS
 from tests.test_entry_oracle import SF_DIR
 
 
@@ -97,10 +100,60 @@ def ref_simhash(df, id_col="doc_id", text_col="text", bits=32):
              for j in range(bits)), F.lit(0)).cast("long").alias("simhash"))
 
 
+def ref_shingles(df, id_col="doc_id", text_col="text", k=3):
+    t = df.select(F.col(id_col).cast("long").alias("doc_id"),
+                  F.col(text_col))
+    t = _ref_tokens(t, text_col).select("doc_id", "tokens")
+    n = F.size("tokens")
+    idxs = F.when(n >= k, F.sequence(F.lit(0), n - k)) \
+        .otherwise(F.array().cast("array<int>"))
+    return t.select(
+        "doc_id",
+        F.explode(F.transform(idxs, lambda i:
+                              F.concat_ws(" ", F.slice("tokens", i + 1, k))))
+        .alias("shingle")).distinct()
+
+
+def ref_fingerprints(df, id_col="doc_id", text_col="text"):
+    t = _ref_tokens(df, text_col)
+    return t.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.md5(F.concat_ws(" ", "tokens")).alias("fingerprint"),
+    )
+
+
+def ref_build_value_postings(df, id_col="doc_id", text_col="text"):
+    t = df.select(F.col(id_col).cast("long").alias("doc_id"),
+                  F.col(text_col))
+    t = _ref_tokens(t, text_col).select(
+        "doc_id", F.explode("tokens").alias("term"))
+    tf = t.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    n_docs = df.count()
+    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    return (tf.join(dfreq, "term")
+            .select("term", "doc_id",
+                    (F.col("tf") *
+                     F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df")
+                                         + F.lit(0.5)) / (F.col("df") + F.lit(0.5))))
+                    .alias("weight")))
+
+
+def shingles_3(df, id_col, text_col):
+    return dedup.shingles(df, id_col, text_col, k=3)
+
+
+def shingles_5(df, id_col, text_col):
+    return dedup.shingles(df, id_col, text_col, k=5)
+
+
 PAIRS = [(textstats.token_counts, ref_token_counts),
          (textstats.quality_scores, ref_quality_scores),
          (textstats.language_id, ref_language_id),
-         (dedup.simhash, ref_simhash)]
+         (dedup.simhash, ref_simhash),
+         (shingles_3, ref_shingles),
+         (shingles_5, lambda df, i, t: ref_shingles(df, i, t, k=5)),
+         (textstats.fingerprints, ref_fingerprints),
+         (sparse.build_value_postings, ref_build_value_postings)]
 
 # ------------------------------------------------------------- inputs
 
@@ -126,11 +179,13 @@ def tiny_batches(spark):
 
 
 def _adversarial(spark):
-    # doc 7 repeats across 5 rows (one of them empty), so its rows span
-    # several 2-record batches; doc 8 has only token-less rows
+    # doc 7 repeats across 6 more rows (one of them empty), so its rows
+    # span several 2-record batches, and two of them share shingles;
+    # doc 8 has only token-less rows
     texts = ADVERSARIAL + ["The cat", "", "the dog of it", "a cat",
-                           "\u0130 the", "   ", None]
-    ids = list(range(len(ADVERSARIAL))) + [7, 7, 7, 7, 7, 8, 8]
+                           "\u0130 the", "   ", None,
+                           "The dog of it, the cat"]
+    ids = list(range(len(ADVERSARIAL))) + [7, 7, 7, 7, 7, 8, 8, 7]
     return spark.createDataFrame(
         pd.DataFrame({"doc_id": ids, "text": texts}),
         "doc_id long, text string").repartition(3)

@@ -1,9 +1,7 @@
 """Tokenizer behavior vs the reference ASCII fast path
 (util/StandardTokenizer.h:100-150)."""
 
-import pandas as pd
-
-from diagon_spark.analysis.tokenizer import tokenize, tokenize_series
+from diagon_spark.analysis.tokenizer import tokenize
 
 
 def test_ascii_basic():
@@ -37,9 +35,3 @@ def test_non_ascii_fallback():
     assert "café" in toks or "café_x" in toks  # unicode word run
     assert all(t == t.lower() for t in toks)
 
-
-def test_series_matches_scalar():
-    texts = ["int main() {}", "Foo don't 42", "", "café_7 test", None]
-    got = tokenize_series(pd.Series(texts)).tolist()
-    want = [tokenize(t) for t in texts]
-    assert got == want
