@@ -9,6 +9,7 @@ Usage:
   python bench_extra.py suite --big      # same but over a generated 50k-doc corpus (driver sf1.0 shape)
   python bench_extra.py plans <outdir>   # dump .explain('formatted') for the touched queries
   python bench_extra.py jobs             # per-phase Spark job/stage counts (scheduler-overhead audit)
+  python bench_extra.py flush_crossover  # driver vs Spark append flush, CPU and wall, by size
 
 Prints one JSON line per phase; nothing here is read by the driver.
 """
@@ -77,6 +78,88 @@ def _big_dir() -> str:
     return out
 
 
+def _append_input(src: str, n: int, idx_dir: str) -> str:
+    """The first `n` rows of the documents parquet `src` under fresh
+    doc_ids, written as one parquet file beside the index."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    t = pq.read_table(src)
+    ids = t.column("doc_id")
+    top = pc.max(ids).as_py() + 1
+    t = t.slice(0, n)
+    t = t.set_column(t.schema.get_field_index("doc_id"), "doc_id",
+                     pc.add(t.column("doc_id"), top))
+    path = f"{idx_dir}_append_{n}.parquet"
+    pq.write_table(t, path)
+    return path
+
+
+def flush_crossover() -> None:
+    """Driver vs Spark flush of one append, CPU and wall, at 20 / 200 /
+    2,000 docs and at the byte bound of builder._flushes_on_driver
+    (input + term_dict = DOC_PREP_BYTES_PER_PARTITION): one JSON line per
+    (docs, substrate), the median of BENCH_REPEAT runs on copies of one
+    Spark-built 2,000-doc base index (key_cols, 4 segments, 4 buckets,
+    positions — perfbench ingest's layout). CPU is this process and its
+    descendants (the JVM and its Python workers). Set SPARK_GRAFT_CPUS."""
+    import statistics
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from diagon_spark import build_index
+    from diagon_spark.corpus import generate_pandas
+    from diagon_spark.index import builder
+    from perfbench.harness import descendants, tree_cpu_s
+
+    def cpu_s():
+        return tree_cpu_s([os.getpid(), *descendants(os.getpid())])
+
+    spark = _session(reuse_workers=False)
+    spark.sparkContext.setLogLevel("ERROR")
+    work = tempfile.mkdtemp(prefix="diagon_extra_xo_")
+    kw = dict(num_buckets=4, key_cols=["repo", "path"], positions=True)
+    src = f"{work}/base.parquet"
+    generate_pandas(0, 2000).to_parquet(src, index=False)
+    base = f"{work}/base"
+    build_index(spark, spark.read.parquet(src), base, num_segments=4, **kw)
+    td_bytes = sum(f.stat().st_size for f in
+                   Path(base, "term_dict").rglob("*") if f.is_file())
+    probe = f"{work}/probe.parquet"
+    generate_pandas(10**6, 10**6 + 2000).to_parquet(probe, index=False)
+    per_doc = os.path.getsize(probe) / 2000
+    at_bound = int((builder.DOC_PREP_BYTES_PER_PARTITION - td_bytes)
+                   / per_doc)
+    route = builder._flushes_on_driver
+    for n in (20, 200, 2000, at_bound):
+        add = f"{work}/add_{n}.parquet"
+        pq.write_table(pa.Table.from_pandas(
+            generate_pandas(10**6, 10**6 + n), preserve_index=False), add)
+        runs: dict[str, list] = {"driver": [], "spark": []}
+        for rep in range(REPEAT):
+            for sub in ("spark", "driver"):
+                root = f"{work}/{sub}_{n}_{rep}"
+                shutil.copytree(base, root)
+                builder._flushes_on_driver = (
+                    lambda *a, _d=(sub == "driver"), **k: _d)
+                t0, c0 = time.time(), cpu_s()
+                build_index(spark, spark.read.parquet(add), root,
+                            num_segments=1, append=True, segment_base=4,
+                            **kw)
+                runs[sub].append((time.time() - t0, cpu_s() - c0))
+                builder._flushes_on_driver = route
+                shutil.rmtree(root)
+        for sub, rs in runs.items():
+            print(json.dumps({
+                "docs": n, "input_bytes": os.path.getsize(add),
+                "term_dict_bytes": td_bytes, "substrate": sub,
+                "wall_s": round(statistics.median(r[0] for r in rs), 3),
+                "cpu_s": round(statistics.median(r[1] for r in rs), 3)}))
+    shutil.rmtree(work, ignore_errors=True)
+    spark.stop()
+
+
 def _noop(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -103,6 +186,17 @@ def suite(sf_dir: str) -> None:
                       num_buckets=16, id_col="doc_id", content_col="text",
                       positions=True)
     out["index_build"] = round(time.time() - t0, 4)
+
+    # a 20-file append routed as build_index routes it (a driver flush
+    # while input + term_dict fit one doc-prep task)
+    add = _append_input(f"{sf_dir}/documents.parquet", 20, idx_dir)
+    sc.setJobDescription("extra: append_small")
+    t0 = time.time()
+    build_index(spark, spark.read.parquet(add), idx_dir, num_segments=1,
+                num_buckets=16, id_col="doc_id", content_col="text",
+                positions=True, append=True, segment_base=cat.num_segments)
+    out["append_small"] = round(time.time() - t0, 4)
+    os.remove(add)
 
     spark.stop()
     spark = _session(reuse_workers=True)
@@ -276,5 +370,7 @@ if __name__ == "__main__":
         plans(sys.argv[2] if len(sys.argv) > 2 else "plans/r08", sf)
     elif cmd == "jobs":
         jobs(sf)
+    elif cmd == "flush_crossover":
+        flush_crossover()
     else:
         raise SystemExit(f"unknown cmd {cmd}")

@@ -24,9 +24,19 @@ block-encoded postings + norms + stored) → atomic commit. Here:
   swapped in with the manifest commit file (index/publish.py — the
   parquet analogue of segments_N, index/IndexWriter.cpp:208-247);
 * recommended session config for builds: spark.python.worker.reuse=false —
-  the encode tasks run seconds each and long-lived python workers degrade
-  ~60% over sequential heavy tasks (allocator growth); worker spawn cost
-  is noise at this task granularity;
+  the encode tasks of a large build run seconds each and long-lived
+  python workers degrade ~60% over sequential heavy tasks (allocator
+  growth). Worker spawn cost is noise at that task granularity, but not
+  for a small commit: there it, plan compilation and JIT dominate;
+* **two flush substrates**, routed by one predicate,
+  `_flushes_on_driver` (the write-side twin of
+  `Searcher._scores_on_driver`): an append whose input files plus the
+  live term_dict fit one doc-prep task (DOC_PREP_BYTES_PER_PARTITION)
+  flushes on the driver — one Spark job for the JVM doc-id step, then
+  doc_len/norm, the same encode kernel and the term_dict merge-add in
+  process, parts written with pyarrow (`_flush_on_driver`, the
+  reference's in-process DWPT flush). Fresh builds, resume, large
+  appends and in-memory inputs flush on Spark. Both write the same rows;
 * **segment-granular resume**: a `lineage` table records per segment-batch
   (fingerprint, status, n_docs, n_postings, wall_ms); on resume, completed
   segments are skipped (north_rule checkpoint requirement);
@@ -75,6 +85,14 @@ ENCODE_GROUP_DOCS = 20_000  # docs per encode sub-batch (driver-side)
 # bloat the plan — fall back to repartitionByRange (see _partition_salts)
 _SALT_ROUTE_MAX_GROUPS = 4096
 DOC_ID_SEGMENT_SHIFT = 40  # doc_id = segment_id << 40 | local_id
+# doc-prep work density: one input partition per this many parquet
+# bytes. The doc-prep UDF costs ~0.1 s of CPU per input MB, and under the
+# build session's worker.reuse=false every extra task pays a fresh fork +
+# pandas import — small inputs must NOT fan out to core-count tasks
+# (measured 2 s -> 5.6 s at 5k docs doing so). An append whose whole
+# commit is below one such task flushes on the driver
+# (_flushes_on_driver).
+DOC_PREP_BYTES_PER_PARTITION = 4 << 20
 
 
 def _lineage_arrow_schema(n_fields: int):
@@ -91,32 +109,46 @@ def _lineage_arrow_schema(n_fields: int):
            pa.field("ts", pa.timestamp("us", tz="UTC"))])
 
 
+def _write_part(path: str, table) -> None:
+    """Add `table` to the parquet dir `path` as one pyarrow part file,
+    written to a tmp name and atomically renamed in, so a reader listing
+    the dir never sees a partial file. The `term` column of a postings or
+    term_dict part is fully dictionary-encoded (no fallback to PLAIN):
+    pyarrow writes no bloom filters, and the page dictionary gives the
+    same row-group skip (tests/test_plans.py)."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    d = Path(path)
+    d.mkdir(parents=True, exist_ok=True)
+    name = f"part-driver-{uuid.uuid4().hex}.parquet"
+    tmp = d / f".{name}.tmp"
+    if "term" in table.column_names:
+        pq.write_table(table, tmp, use_dictionary=["field", "term"],
+                       dictionary_pagesize_limit=1 << 30)
+    else:
+        pq.write_table(table, tmp)
+    tmp.rename(d / name)
+
+
 def _append_tiny_parquet(spark, path: str, rows: list[dict],
                          schema) -> None:
     """Append a driver-known handful of metadata rows to a parquet dir
-    WITHOUT a Spark job: one pyarrow part file, written to a tmp name
-    and atomically renamed in, so a reader listing the dir never sees a
-    partial file. Types are pinned by `schema` so files from different
-    waves/rounds always merge. A `ts` column, when present in the
-    schema but absent from the rows, is stamped with the current time."""
-    import uuid
+    WITHOUT a Spark job (`_write_part`). Types are pinned by `schema` so
+    files from different waves/rounds always merge. A `ts` column, when
+    present in the schema but absent from the rows, is stamped with the
+    current time."""
     from datetime import datetime, timezone
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     if not rows:
         return
     if "ts" in schema.names and "ts" not in rows[0]:
         now = datetime.now(timezone.utc)
         rows = [{**r, "ts": now} for r in rows]
-    table = pa.Table.from_pylist(rows, schema=schema)
-    d = Path(path)
-    d.mkdir(parents=True, exist_ok=True)
-    name = f"part-driver-{uuid.uuid4().hex}.parquet"
-    tmp = d / f".{name}.tmp"
-    pq.write_table(table, tmp)
-    tmp.rename(d / name)
+    _write_part(path, pa.Table.from_pylist(rows, schema=schema))
     spark.catalog.refreshByPath(path)
 
 
@@ -414,7 +446,7 @@ def _analyze_flat(analyzer, texts: pd.Series):
 
 
 def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
-    """applyInPandas over ONE (segment, field) group of compact
+    """The encode kernel of ONE (segment, field) group of compact
     (doc_id, __content) rows — the DWPT flush analogue. Tokenization,
     norms, the token-level explode, (term, doc) aggregation, term sort,
     and block encode ALL happen in numpy inside the UDF. The only shuffle
@@ -427,11 +459,10 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
     The default tokenizer and a custom `analyzer` both reduce the group to
     the same flat (row, pos, term_id, sorted_vocab) arrays over rows
     pre-sorted by doc_id; from there one sort, one grouping and one
-    `_postings_frame` call serve both."""
+    `_postings_frame` call serve both. The Spark flush runs it through
+    `_in_worker`, the driver flush in the driver process."""
 
     def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from diagon_spark._runtime import worker_init
-        worker_init()
         if len(pdf) == 0:
             return pd.DataFrame(columns=_POSTINGS_COLS)
         segment_id = int(key[0])
@@ -534,11 +565,9 @@ def _encode_segment_fn(num_buckets: int, has_positions: bool, analyzer=None):
     return encode
 
 
-def prepare_docs(df: DataFrame, key_cols: list[str] | None, id_col: str | None,
-                 field_cols: list[str], num_segments: int, analyzer=None,
-                 segment_base: int = 0) -> DataFrame:
-    """Assign deterministic doc ids + segments, per-field doc_len/norm,
-    content sha256.
+def _doc_ids(df: DataFrame, key_cols: list[str] | None, id_col: str | None,
+             num_segments: int, segment_base: int = 0) -> DataFrame:
+    """`df` with deterministic `segment_id` and `doc_id` columns.
 
     Deterministic doc_id (north_rule): with key_cols, docs are ordered by
     sha256(key) inside their hash-assigned segment and numbered — identical
@@ -546,50 +575,73 @@ def prepare_docs(df: DataFrame, key_cols: list[str] | None, id_col: str | None,
     index/SegmentMerger.cpp:45-63). With id_col, the given unique id is
     used as-is and the segment derives from it.
     """
-    default_col = field_cols[0]
     if id_col is not None:
         base = df.withColumn("doc_id", F.col(id_col).cast("long"))
-        base = base.withColumn(
+        return base.withColumn(
             "segment_id",
             (F.pmod(F.col("doc_id"), F.lit(num_segments))
              + F.lit(segment_base)).cast("int"))
-    else:
-        key = F.concat_ws("\x00", *[F.col(c) for c in key_cols])
-        base = df.withColumn("_key_sha", F.sha2(key, 256))
-        base = base.withColumn(
-            "segment_id",
-            (F.pmod(F.xxhash64(F.col("_key_sha")), F.lit(num_segments))
-             + F.lit(segment_base)).cast("int"))
-        w = Window.partitionBy("segment_id").orderBy("_key_sha")
-        base = base.withColumn(
-            "doc_id",
-            (F.col("segment_id").cast("long") * F.lit(1 << DOC_ID_SEGMENT_SHIFT)
-             + F.row_number().over(w) - 1))
-        base = base.drop("_key_sha")
+    key = F.concat_ws("\x00", *[F.col(c) for c in key_cols])
+    base = df.withColumn("_key_sha", F.sha2(key, 256))
+    base = base.withColumn(
+        "segment_id",
+        (F.pmod(F.xxhash64(F.col("_key_sha")), F.lit(num_segments))
+         + F.lit(segment_base)).cast("int"))
+    w = Window.partitionBy("segment_id").orderBy("_key_sha")
+    base = base.withColumn(
+        "doc_id",
+        (F.col("segment_id").cast("long") * F.lit(1 << DOC_ID_SEGMENT_SHIFT)
+         + F.row_number().over(w) - 1))
+    return base.drop("_key_sha")
 
+
+def _content_sha(field_cols: list[str]):
+    """content_sha256 (north_rule per-row invariant): single-field ==
+    sha256(content) of the source row; multi-field hashes the NUL-joined
+    field values."""
+    if len(field_cols) == 1:
+        return F.sha2(F.col(field_cols[0]), 256)
+    return F.sha2(F.concat_ws("\x00", *[F.coalesce(F.col(c).cast("string"),
+                                                   F.lit(""))
+                                        for c in field_cols]), 256)
+
+
+def _doc_lens(texts: pd.Series, analyzer=None) -> np.ndarray:
+    """Per-row token counts of one field (doc_len, the norm's input): the
+    body of the doc-prep UDF and of the driver flush."""
     if analyzer is None:
         # fast path: count tokens without materializing token lists
         from diagon_spark.analysis.tokenizer import count_tokens_series
+        return count_tokens_series(texts).astype(np.int32)
+    return analyzer(texts).map(len).to_numpy(dtype=np.int32)
 
-        @F.pandas_udf(IntegerType())
-        def doc_len_udf(texts: pd.Series) -> pd.Series:
-            return pd.Series(count_tokens_series(texts).astype(np.int32))
-    else:
-        @F.pandas_udf(IntegerType())
-        def doc_len_udf(texts: pd.Series) -> pd.Series:  # noqa: F811
-            return pd.Series(analyzer(texts).map(len).astype(np.int32))
 
-    def norm_expr(dl):
-        # JVM restatement of norms.encode_norm, bit-identical for the
-        # int domain: n <= 0 -> 127, else trunc(127.0/sqrt(double(n)))
-        # (floor == trunc for positives; IEEE double sqrt/divide match
-        # numpy's). Removes one ArrowEvalPython node per field from the
-        # doc-prep stage — with the build session's worker.reuse=false,
-        # that is one python-worker spawn per task per field (guide §4.1:
-        # built-ins over UDFs when an exact expression exists).
-        return (F.when(dl <= 0, F.lit(127))
-                .otherwise(F.floor(F.lit(127.0) / F.sqrt(dl.cast("double")))
-                           .cast("int"))).cast("int")
+def norm_expr(dl):
+    """JVM restatement of norms.encode_norm, bit-identical for the int
+    domain: n <= 0 -> 127, else trunc(127.0/sqrt(double(n))) (floor ==
+    trunc for positives; IEEE double sqrt/divide match numpy's).
+    tests/test_norm_expr.py pins the two on 0..2^20, large ints and
+    n <= 0.
+    Removes one ArrowEvalPython node per field from the doc-prep stage —
+    with the build session's worker.reuse=false, that is one
+    python-worker spawn per task per field (guide §4.1: built-ins over
+    UDFs when an exact expression exists)."""
+    return (F.when(dl <= 0, F.lit(127))
+            .otherwise(F.floor(F.lit(127.0) / F.sqrt(dl.cast("double")))
+                       .cast("int"))).cast("int")
+
+
+def prepare_docs(df: DataFrame, key_cols: list[str] | None, id_col: str | None,
+                 field_cols: list[str], num_segments: int, analyzer=None,
+                 segment_base: int = 0) -> DataFrame:
+    """The Spark flush's doc prep: `_doc_ids`, then per-field doc_len/norm
+    and content_sha256."""
+    default_col = field_cols[0]
+    base = _doc_ids(df, key_cols, id_col, num_segments, segment_base)
+
+    @F.pandas_udf(IntegerType())
+    def doc_len_udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(_doc_lens(texts, analyzer))
 
     for col in field_cols:
         fname = _field_name(col)
@@ -601,19 +653,229 @@ def prepare_docs(df: DataFrame, key_cols: list[str] | None, id_col: str | None,
                            F.col(_bq(doc_len_col(_field_name(default_col)))))
     base = base.withColumn("norm",
                            F.col(_bq(norm_col(_field_name(default_col)))))
-    # per-row invariant (north_rule): single-field content_sha256 ==
-    # sha256(content) of the source row; multi-field hashes the NUL-joined
-    # field values
-    if len(field_cols) == 1:
-        base = base.withColumn("content_sha256",
-                               F.sha2(F.col(field_cols[0]), 256))
-    else:
-        base = base.withColumn(
-            "content_sha256",
-            F.sha2(F.concat_ws("\x00", *[F.coalesce(F.col(c).cast("string"),
-                                                    F.lit(""))
-                                         for c in field_cols]), 256))
-    return base
+    return base.withColumn("content_sha256", _content_sha(field_cols))
+
+
+def _in_worker(encode):
+    """The Spark side of an encode kernel: `_runtime.worker_init` first.
+    Its process-global tweaks belong in the Python workers Spark starts,
+    never in the driver, which is a host application's process."""
+
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        from diagon_spark._runtime import worker_init
+        worker_init()
+        return encode(key, pdf)
+
+    return kernel
+
+
+def _segment_facts(r, n_fields: int) -> dict:
+    """One segment's lineage facts and encode-group bounds, from a row of
+    the per-segment aggregate (segment_id, lo, hi, n, input_fingerprint
+    = sum of crc32(content_sha256), n_postings, sum_len__i)."""
+    return {"segment_id": int(r["segment_id"]), "lo": int(r["lo"]),
+            "hi": int(r["hi"]), "n_docs": int(r["n"]),
+            "input_fingerprint": int(r["input_fingerprint"] or 0),
+            "n_postings": int(r["n_postings"] or 0),
+            **{f"sum_len__{i}": int(r[f"sum_len__{i}"] or 0)
+               for i in range(n_fields)}}
+
+
+def _sub_batches(facts: list[dict]) -> dict[int, tuple[int, int, int]]:
+    """segment_id -> (lo, span, n_subs): each (segment, field) encodes in
+    doc-id-range sub-batches of ~ENCODE_GROUP_DOCS docs, sub-batch
+    `_sub(doc_id, lo, span)`. Capped so sub<<20 fits the int32 chunk
+    column (sub <= 2047)."""
+    out = {}
+    for f in facts:
+        n_subs = max(1, min(2000, f["n_docs"] // ENCODE_GROUP_DOCS))
+        out[f["segment_id"]] = (f["lo"], max(
+            1, -(-(f["hi"] - f["lo"] + 1) // n_subs)), n_subs)
+    return out
+
+
+def _sub(doc_id, lo, span, floor):
+    """The encode sub-batch of a doc — one expression over Spark columns
+    (floor=F.floor) or numpy arrays (floor=np.floor)."""
+    return floor((doc_id - lo) / span)
+
+
+def _record_segments(spark, cat: IndexCatalog, facts: list[dict],
+                     wall_ms: int, batch: int, stats_acc: dict) -> None:
+    """Lineage rows of one wave's segments, appended as one tiny parquet
+    part (no Spark job), and their doc/len sums added to `stats_acc` —
+    the stats refresh then needs no docs scan."""
+    n_fields = len(cat.fields)
+    _append_tiny_parquet(
+        spark, cat.lineage_path,
+        [{**{k: f[k] for k in ("segment_id", "n_docs", "input_fingerprint",
+                               "n_postings")},
+          **{f"sum_len__{i}": f[f"sum_len__{i}"] for i in range(n_fields)},
+          "status": "done", "wall_ms": wall_ms, "batch": batch}
+         for f in facts],
+        _lineage_arrow_schema(n_fields))
+    for f in facts:
+        stats_acc["n"] += f["n_docs"]
+        for i, fn_ in enumerate(cat.fields):
+            stats_acc["sttf"][fn_] += f[f"sum_len__{i}"]
+
+
+def _flushes_on_driver(df: DataFrame, cat: IndexCatalog, *, append: bool,
+                       resume: bool, max_batches: int | None) -> bool:
+    """Whether a build flushes on the driver: a plain append whose input
+    files plus the live term_dict (which the append merge-adds into) fit
+    one doc-prep task, DOC_PREP_BYTES_PER_PARTITION — so the whole commit
+    is less than one Spark task of work, where a Spark flush spends its
+    time in plan compilation and Python-worker start-up. Fresh builds,
+    resume, capped builds and inputs without known file bytes (in-memory
+    frames) flush on Spark. The same routing as
+    `Searcher._scores_on_driver` on the read side."""
+    from diagon_spark.parallel import _input_bytes
+    if not append or resume or max_batches is not None:
+        return False
+    files = df.inputFiles()
+    n = _input_bytes(files) if files else None
+    if n is None:
+        return False
+    td = Path(cat.term_dict_path)
+    td_bytes = (sum(f.stat().st_size for f in td.rglob("*") if f.is_file())
+                if td.exists() else 0)
+    return n + td_bytes <= DOC_PREP_BYTES_PER_PARTITION
+
+
+def _flush_on_driver(spark, df: DataFrame, cat: IndexCatalog, pub, *,
+                     key_cols, id_col, field_cols: list[str],
+                     docs_cols: list[str], num_segments: int,
+                     segment_base: int, batches: list[list[int]],
+                     analyzer) -> None:
+    """Flush a small append on the driver — the in-process segment flush
+    of the reference's DocumentsWriterPerThread (SURVEY §3.2). One Spark
+    job collects the JVM id step (`_doc_ids`), content_sha256 and the
+    lineage crc32 as Arrow over the input coalesced to one partition (so
+    the doc-id window needs no exchange); doc_len/norm, the encode
+    (`_encode_segment_fn` per (segment, field, sub) group) and the
+    term_dict merge-add run in this process, and every part is written
+    with pyarrow. The tables equal a Spark flush's row for row
+    (tests/test_flush_substrate.py); stats and the commit take the same
+    path."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    t0 = time.time()
+    field_names = cat.fields
+    computed = {"doc_len", "norm", *(c for fn_ in field_names
+                                     for c in (doc_len_col(fn_),
+                                               norm_col(fn_)))}
+    tbl = (_doc_ids(df.coalesce(1), key_cols, id_col, num_segments,
+                    segment_base)
+           .withColumn("content_sha256", _content_sha(field_cols))
+           .select(*[F.col(_bq(c)) for c in docs_cols if c not in computed],
+                   F.crc32(F.col("content_sha256")).alias("__crc"))
+           .toArrow())
+    seg = tbl.column("segment_id").to_numpy()
+    doc = tbl.column("doc_id").to_numpy()
+    crc = tbl.column("__crc").fill_null(0).to_numpy()  # NULL content
+    texts = {fn_: tbl.column(fn_).to_pandas() for fn_ in field_names}
+    lens = {fn_: _doc_lens(texts[fn_], analyzer) for fn_ in field_names}
+    for fn_ in field_names:
+        tbl = tbl.append_column(doc_len_col(fn_), pa.array(lens[fn_]))
+        tbl = tbl.append_column(norm_col(fn_), pa.array(
+            encode_norm(lens[fn_]).astype(np.int32)))
+    tbl = (tbl.append_column("doc_len", tbl.column(doc_len_col(field_names[0])))
+           .append_column("norm", tbl.column(norm_col(field_names[0]))))
+    docs_tbl = tbl.select([_field_name(c) for c in docs_cols])
+    if len(docs_tbl):
+        # the live table's column order and types; Spark writes every
+        # column nullable
+        live = (ds.dataset(cat.docs_path, format="parquet").schema
+                if Path(cat.docs_path).exists() else None)
+        if live is None or sorted(live.names) != sorted(docs_tbl.column_names):
+            live = pa.schema([f.with_nullable(True) for f in docs_tbl.schema])
+        _write_part(cat.docs_path, docs_tbl.select(live.names).cast(live))
+        spark.catalog.refreshByPath(cat.docs_path)
+
+    total = sum(lens[fn_].astype(np.int64) for fn_ in field_names)
+    facts = []
+    for s in np.unique(seg).tolist():
+        m = seg == s
+        facts.append(_segment_facts({
+            "segment_id": s, "lo": doc[m].min(), "hi": doc[m].max(),
+            "n": int(m.sum()), "input_fingerprint": int(crc[m].sum()),
+            "n_postings": int(total[m].sum()),
+            **{f"sum_len__{i}": int(lens[fn_][m].sum(dtype=np.int64))
+               for i, fn_ in enumerate(field_names)}}, len(field_names)))
+    subs = _sub_batches(facts)
+    sub = _sub(doc, np.array([subs[s][0] for s in seg.tolist()], np.int64),
+               np.array([subs[s][1] for s in seg.tolist()], np.int64),
+               np.floor).astype(np.int64)
+    encode = _encode_segment_fn(cat.num_buckets, cat.has_positions,
+                                analyzer)
+    frames = []
+    for fn_ in field_names:
+        for s in sorted(subs):
+            for b in range(subs[s][2]):
+                m = (seg == s) & (sub == b)
+                if m.any():
+                    frames.append(encode((s, fn_, b), pd.DataFrame({
+                        "doc_id": doc[m],
+                        "__content": texts[fn_][m].reset_index(drop=True)})))
+    frames = [f for f in frames if len(f)]
+    post = pa.Table.from_pandas(
+        pd.concat(frames, ignore_index=True) if frames
+        else pd.DataFrame(columns=_POSTINGS_COLS),
+        schema=to_arrow_schema(POSTINGS_SCHEMA), preserve_index=False)
+    touched = sorted(set(post.column("bucket").to_pylist()))
+    for b in touched:
+        _write_part(f"{cat.postings_path}/bucket={b}",
+                    post.filter(pc.equal(post.column("bucket"), b))
+                    .drop_columns(["bucket"]))
+    if touched:
+        spark.catalog.refreshByPath(cat.postings_path)
+    wall_ms = int((time.time() - t0) * 1000)
+    stats_acc = {"n": 0, "sttf": {fn_: 0 for fn_ in field_names}}
+    for bi, seg_ids in enumerate(batches):
+        wave = [f for f in facts if f["segment_id"] in seg_ids]
+        if wave:
+            _record_segments(spark, cat, wave, wall_ms, bi, stats_acc)
+
+    sdf = _merge_term_dict_parts(cat, pub, post, touched)
+    _stage_stats(spark, cat, pub, append=True, n_new=stats_acc["n"],
+                 sttf_new=stats_acc["sttf"], sdf=sdf, additive=True)
+
+
+def _merge_term_dict_parts(cat: IndexCatalog, pub, post, touched: list[int]
+                           ) -> dict[str, int]:
+    """The driver flush's term_dict refresh: merge-add the new postings'
+    per-(field, term) df/cttf into each touched `bucket=N` partition
+    (read the live one, sum) and stage those partitions into `pub`.
+    Returns the per-field df delta, for sum_doc_freq."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    new = (post.group_by(["field", "term", "bucket"])
+           .aggregate([("df", "sum"), ("ttf", "sum")])
+           .rename_columns(["field", "term", "bucket", "df", "cttf"]))
+    sdf = {r["field"]: int(r["df_sum"]) for r in
+           new.group_by("field").aggregate([("df", "sum")]).to_pylist()}
+    if not touched:  # docs without postings leave term_dict as it is
+        return sdf
+    staged = pub.stage("term_dict", parts=[f"bucket={b}" for b in touched])
+    for b in touched:
+        add = (new.filter(pc.equal(new.column("bucket"), b))
+               .drop_columns(["bucket"]))
+        live = Path(cat.term_dict_path, f"bucket={b}")
+        if live.exists():
+            old = pq.read_table(live)
+            add = pa.concat_tables([old, add.cast(old.schema)])
+        merged = (add.group_by(["field", "term"])
+                  .aggregate([("df", "sum"), ("cttf", "sum")])
+                  .rename_columns(["field", "term", "df", "cttf"])
+                  .sort_by([("field", "ascending"), ("term", "ascending")]))
+        _write_part(f"{staged}/bucket={b}", merged.cast(add.schema))
+    return sdf
 
 
 def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -659,19 +921,14 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     stats are maintained incrementally: only the new segments are
     aggregated and merge-added (additive sums) — no rescan of old
     postings.
+
+    Where a commit flushes: an append smaller than one doc-prep task
+    (`_flushes_on_driver`) flushes on the driver in one Spark job
+    (`_flush_on_driver`); everything else runs the Spark plan below. The
+    commit records which (`"flush": "driver"|"spark"`).
     """
     from diagon_spark._ship import ensure_shipped
     ensure_shipped(spark)
-    # Scale-adaptive input parallelism (guide §2.5 input skew): a one-
-    # file source otherwise runs the whole doc-prep stage (sha256 +
-    # per-field token-count UDFs + docs write) in ONE task; no-op when
-    # the source already arrives in enough splits. 4 MB/partition: the
-    # doc-prep UDF costs ~0.1 s of CPU per input MB, and under the
-    # build session's worker.reuse=false every extra task pays a fresh
-    # fork + pandas import — small inputs must NOT fan out to
-    # core-count tasks (measured 2 s -> 5.6 s at 5k docs doing so).
-    from diagon_spark.parallel import ensure_min_parallelism
-    df = ensure_min_parallelism(df, bytes_per_partition=4 << 20)
     if key_cols is None and id_col is None:
         key_cols = ["repo", "path", "commit"]
     field_cols = list(fields) if fields else [content_col]
@@ -682,6 +939,40 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                        fields=field_names)
     root = Path(out_dir)
     root.mkdir(parents=True, exist_ok=True)
+    # the stored-fields (.fdt) analogue (codecs/StoredFieldsWriter.h:19-63)
+    # keeps the original field columns; it also lets the postings stage
+    # read docs parquet instead of re-running the sha/window doc-id chain.
+    keep = (key_cols or []) + ([id_col] if id_col else []) + field_cols
+    per_field_cols = [c for fn_ in field_names
+                      for c in (doc_len_col(fn_), norm_col(fn_))]
+    docs_cols = list(dict.fromkeys(
+        ["segment_id", "doc_id", *keep, "content_sha256",
+         *per_field_cols, "doc_len", "norm"]))
+    all_segments = list(range(segment_base, segment_base + num_segments))
+    batches: list[list[int]] = [
+        [s for s in all_segments[i::segment_batches]]
+        for i in range(segment_batches)
+    ]
+    from diagon_spark.index.publish import Publish
+    pub = Publish(spark, out_dir)
+
+    if _flushes_on_driver(df, cat, append=append, resume=resume,
+                          max_batches=max_batches):
+        _flush_on_driver(spark, df, cat, pub, key_cols=key_cols,
+                         id_col=id_col, field_cols=field_cols,
+                         docs_cols=docs_cols, num_segments=num_segments,
+                         segment_base=segment_base, batches=batches,
+                         analyzer=analyzer)
+        return _commit_build(cat, pub, analyzer, sum(map(bool, batches)),
+                             "driver", commit_extra)
+
+    # Scale-adaptive input parallelism (guide §2.5 input skew): a one-
+    # file source otherwise runs the whole doc-prep stage (sha256 +
+    # per-field token-count UDFs + docs write) in ONE task; no-op when
+    # the source already arrives in enough splits.
+    from diagon_spark.parallel import ensure_min_parallelism
+    df = ensure_min_parallelism(
+        df, bytes_per_partition=DOC_PREP_BYTES_PER_PARTITION)
 
     if not append and not resume:
         # Fresh build into an existing out_dir: the postings write below is
@@ -700,16 +991,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     # memory/GC than the vectorized tokenizer).
     docs = prepare_docs(df, key_cols, id_col, field_cols, num_segments,
                         analyzer, segment_base)
-    # the docs table keeps the original field columns — the stored-fields
-    # (.fdt) analogue (codecs/StoredFieldsWriter.h:19-63); it also lets the
-    # postings stage read docs parquet instead of re-running the
-    # sha/window doc-id chain.
-    keep = (key_cols or []) + ([id_col] if id_col else []) + field_cols
-    per_field_cols = [c for fn_ in field_names
-                      for c in (doc_len_col(fn_), norm_col(fn_))]
-    docs_cols = list(dict.fromkeys(
-        ["segment_id", "doc_id", *keep, "content_sha256",
-         *per_field_cols, "doc_len", "norm"]))
 
     done: set[int] = set()
     if resume:
@@ -719,11 +1000,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
             done = {r.segment_id for r in
                     ldf.filter(F.col("status") == "done").select("segment_id").collect()}
 
-    all_segments = list(range(segment_base, segment_base + num_segments))
-    batches: list[list[int]] = [
-        [s for s in all_segments[i::segment_batches]]
-        for i in range(segment_batches)
-    ]
     docs_written = resume and Path(cat.docs_path, "_SUCCESS").exists()
 
     if not docs_written:
@@ -810,25 +1086,16 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                          *per_field_sums).collect())
         if not seg_rows:
             continue  # no docs in these segments: nothing to encode
-        seg_lo = {int(r.segment_id): int(r.lo) for r in seg_rows}
-        seg_span = {}
-        seg_nsubs = {}
-        n_groups = 0
-        for r in seg_rows:
-            # cap: sub<<20 must fit the int32 chunk column (sub <= 2047)
-            n_subs = max(1, min(2000, int(r.n) // ENCODE_GROUP_DOCS))
-            seg_nsubs[int(r.segment_id)] = n_subs
-            seg_span[int(r.segment_id)] = max(
-                1, -(-(int(r.hi) - int(r.lo) + 1) // n_subs))
-            n_groups += n_subs * len(field_names)
-        lo_map = F.create_map(*[F.lit(x) for kv in seg_lo.items()
-                                for x in kv])
-        span_map = F.create_map(*[F.lit(x) for kv in seg_span.items()
-                                  for x in kv])
+        facts = [_segment_facts(r, len(field_names)) for r in seg_rows]
+        subs = _sub_batches(facts)
+        seg_nsubs = {s: n for s, (_lo, _span, n) in subs.items()}
+        n_groups = sum(seg_nsubs.values()) * len(field_names)
+        lo_map, span_map = (
+            F.create_map(*[F.lit(x) for s, v in subs.items()
+                           for x in (s, v[i])]) for i in (0, 1))
         part = part.withColumn(
-            "sub",
-            F.floor((F.col("doc_id") - lo_map[F.col("segment_id")])
-                    / span_map[F.col("segment_id")]).cast("int"))
+            "sub", _sub(F.col("doc_id"), lo_map[F.col("segment_id")],
+                        span_map[F.col("segment_id")], F.floor).cast("int"))
         # Explicit partition count = one task per encode group: AQE's
         # byte-based coalescing would otherwise merge these CPU-heavy
         # groups, and with n_partitions ~= n_keys plain hash-partitioning
@@ -846,7 +1113,8 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         # the salt is appended LAST so key[0..2] keep their meaning in
         # the encode fn. Builds with pathologically many groups fall
         # back to range partitioning (literal-map plan-size guard).
-        enc_fn = _encode_segment_fn(num_buckets, positions, analyzer)
+        enc_fn = _in_worker(_encode_segment_fn(num_buckets, positions,
+                                               analyzer))
         group_keys = [(s, fi, b) for s in sorted(seg_nsubs)
                       for fi in range(len(field_names))
                       for b in range(seg_nsubs[s])]
@@ -895,45 +1163,25 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         (postings.repartition(num_buckets, F.col("bucket"))
          .write.mode("append").options(**_BLOOM_OPTS)
          .partitionBy("bucket").parquet(cat.postings_path))
-        wall_ms = int((time.time() - t0) * 1000)
-
-        # lineage rows (fingerprint = sum of crc32 of doc keys per
-        # segment): assembled DRIVER-SIDE from the pre-encode seg_rows
-        # collect (same schema as before — segment_id, n_docs,
-        # input_fingerprint, n_postings, sum_len__i, status, wall_ms,
-        # batch, ts) and appended as one tiny parquet part file written
-        # directly with pyarrow — a segments-count metadata row set
-        # needs no Spark job (the old post-encode lineage aggregation
-        # was a full docs scan + write job per wave).
-        _append_tiny_parquet(
-            spark, cat.lineage_path,
-            [{"segment_id": int(r.segment_id), "n_docs": int(r.n),
-              "input_fingerprint": int(r.input_fingerprint or 0),
-              "n_postings": int(r.n_postings or 0),
-              **{f"sum_len__{i_}": int(r[f"sum_len__{i_}"] or 0)
-                 for i_ in range(len(field_names))},
-              "status": "done", "wall_ms": wall_ms, "batch": bi}
-             for r in seg_rows],
-            _lineage_arrow_schema(len(field_names)))
-        for r in seg_rows:
-            stats_acc["n"] += int(r.n)
-            for i_, fn_ in enumerate(field_names):
-                stats_acc["sttf"][fn_] += int(r[f"sum_len__{i_}"] or 0)
+        _record_segments(spark, cat, facts, int((time.time() - t0) * 1000),
+                         bi, stats_acc)
 
     covered_all = (not resume and max_batches is None and not done)
-    from diagon_spark.index.publish import Publish
-    pub = Publish(spark, out_dir)
     _refresh_term_dict_and_stats(
         spark, cat, pub, new_docs_idx=new_docs_idx, append=append,
         segment_base=segment_base,
         stats_acc=stats_acc if covered_all else None)
+    return _commit_build(cat, pub, analyzer, n_run, "spark", commit_extra)
 
+
+def _commit_build(cat: IndexCatalog, pub, analyzer, n_run: int, flush: str,
+                  commit_extra: dict | None) -> IndexCatalog:
     # a custom analyzer bypasses the standard tokenizer entirely — stamp
     # the manifest so check_index skips the icu/regex comparison instead
     # of degrading a perfectly consistent analyzer-built index
     tok_extra = ({"tokenizer": "custom-analyzer"} if analyzer is not None
                  else {})
-    pub.commit(cat, {"batches_run": n_run, **tok_extra,
+    pub.commit(cat, {"batches_run": n_run, "flush": flush, **tok_extra,
                      **(commit_extra or {})})
     return cat
 
@@ -1048,11 +1296,9 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
                   options=_BLOOM_OPTS)
 
     # per-field stats: (field, max_doc, doc_count, sum_total_term_freq,
-    # sum_doc_freq). max_doc/doc_count are global doc counts (the
-    # reference pins docCount := maxDoc, TermQuery.cpp:220-223). Sums
-    # come from the lineage aggregation accumulated during the build
-    # (no extra docs scan) when the caller covered every new segment;
-    # resume/merge/scrub paths fall back to a docs scan.
+    # sum_doc_freq). Sums come from the lineage aggregation accumulated
+    # during the build (no extra docs scan) when the caller covered every
+    # new segment; resume/merge/scrub paths fall back to a docs scan.
     if stats_acc is not None:
         n_new = int(stats_acc["n"])
         sttf_new = {fn_: int(stats_acc["sttf"][fn_]) for fn_ in field_names}
@@ -1064,22 +1310,41 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
         n_new = int(row["__n"])
         sttf_new = {fn_: int(row[f"__s_{i}"] or 0)
                     for i, fn_ in enumerate(field_names)}
+    if obs is not None:
+        got = obs.get  # blocks until the write action finished (it has)
+        sdf_delta = {fn_: int(got[f"sdf_{i}"] or 0)
+                     for i, fn_ in enumerate(field_names)}
+    _stage_stats(spark, cat, pub, append=append, n_new=n_new,
+                 sttf_new=sttf_new, sdf=sdf_delta,
+                 additive=append and td_exists)
+
+
+def _stage_stats(spark: SparkSession, cat: IndexCatalog, pub, *,
+                 append: bool, n_new: int, sttf_new: dict[str, int],
+                 sdf: dict[str, int], additive: bool) -> None:
+    """Stage the per-field stats table (field, max_doc, doc_count,
+    sum_total_term_freq, sum_doc_freq) into `pub`: an append adds `n_new`
+    docs, `sttf_new` and, when `additive`, the df delta `sdf` to the live
+    stats; otherwise `sdf` is the whole sum_doc_freq. max_doc/doc_count
+    are global doc counts (the reference pins docCount := maxDoc,
+    TermQuery.cpp:220-223)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    field_names = cat.fields
     old_stats: dict[str, dict] = {}
     if append and Path(cat.stats_path).exists():
-        for r in spark.read.parquet(cat.stats_path).collect():
-            old_stats[r.field] = r.asDict()
-
-    if append and td_exists:
+        for r in pq.read_table(cat.stats_path).to_pylist():
+            old_stats[r["field"]] = r
+    if additive:
         # additive: merged df sums = old sums + this epoch's df sums —
         # no O(vocabulary) term_dict rescan per micro-batch
-        sum_doc_freq = {f: int(p.get("sum_doc_freq", 0)) + sdf_delta.get(f, 0)
+        sum_doc_freq = {f: int(p.get("sum_doc_freq", 0)) + sdf.get(f, 0)
                         for f, p in old_stats.items()}
-        for f, d in sdf_delta.items():
+        for f, d in sdf.items():
             sum_doc_freq.setdefault(f, d)
     else:
-        got = obs.get  # blocks until the write action finished (it has)
-        sum_doc_freq = {fn_: int(got[f"sdf_{i}"] or 0)
-                        for i, fn_ in enumerate(field_names)}
+        sum_doc_freq = sdf
     rows = []
     for fn_ in field_names:
         prev = old_stats.get(fn_, {})
@@ -1102,7 +1367,6 @@ def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
     # JVM-literal-union form still paid plan analysis plus a write job;
     # createDataFrame(list) was worse still — one python worker spawn
     # per partition under worker.reuse=false)
-    import pyarrow as pa
     stats_schema = pa.schema([
         pa.field("field", pa.string()),
         pa.field("max_doc", pa.int64()),

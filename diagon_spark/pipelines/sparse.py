@@ -35,17 +35,20 @@ def build_value_postings(df: DataFrame, id_col: str = "doc_id",
     idf form the BM25 engine uses, so the two paths share semantics.
 
     A kernel counts each row's tokens; the sum over (doc_id, term) merges
-    a doc_id repeated across rows.
+    a doc_id repeated across rows, and N counts distinct doc_ids, like
+    df. N is a one-row aggregate joined in, so no job starts before an
+    action.
     """
     tf = (_token_rows(df, id_col, text_col, _term_counts,
                       [("term", "string"), ("tf", "int64")])
           .groupBy("doc_id", "term").agg(F.sum("tf").alias("tf")))
-    n_docs = df.count()
+    n_docs = df.agg(F.count_distinct(F.col(id_col)).cast("double")
+                    .alias("__n"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    return (tf.join(dfreq, "term")
+    return (tf.join(dfreq, "term").crossJoin(n_docs)
             .select("term", "doc_id",
                     (F.col("tf") *
-                     F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df")
+                     F.log(F.lit(1.0) + (F.col("__n") - F.col("df")
                                          + F.lit(0.5)) / (F.col("df") + F.lit(0.5))))
                     .alias("weight")))
 

@@ -20,7 +20,8 @@ from hashlib import md5
 
 from pyspark.sql import DataFrame, functions as F
 
-from diagon_spark.parallel import ensure_min_parallelism
+from diagon_spark.parallel import (DEFAULT_BYTES_PER_PARTITION,
+                                   ensure_min_parallelism)
 
 # small fixed stopword list (quality/lang-id heuristics)
 STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "it", "for", "on",
@@ -30,12 +31,21 @@ STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "it", "for", "on",
 _FACTS = ("n_chars", "n_tokens", "n_distinct", "n_stop", "token_chars",
           "alnum_chars")
 _FACTS_SCHEMA = "doc_id long, " + ", ".join(f"{c} long" for c in _FACTS)
+# The facts kernel costs ~40 ms of CPU per input MB (serve corpus, 4
+# cores); a partition should carry at least the ~1 s a fresh Python
+# worker costs to start (parallel.py), so it gets one per 25 MB, not the
+# md5-grade default density of the shingle/minhash kernels.
+_FACTS_MS_PER_MB = 40
+_FACTS_BYTES_PER_PARTITION = (1000 // _FACTS_MS_PER_MB) << 20
 
 
 def _kernel_input(df: DataFrame, id_col: str, text_col: str,
-                  by_doc: bool = False) -> DataFrame:
+                  by_doc: bool = False,
+                  bytes_per_partition: int = DEFAULT_BYTES_PER_PARTITION
+                  ) -> DataFrame:
     """The input of every pipeline kernel: (doc_id long, __text) rows,
-    sized by parallel.py, which hash-partitions them on doc_id when it
+    sized by parallel.py at the kernel's own work density
+    (`bytes_per_partition`), which hash-partitions them on doc_id when it
     splits them. With `by_doc`, an input it leaves as it is is
     hash-partitioned on doc_id too, so each doc's rows share a partition.
     Ships the package: the kernels import diagon_spark on executors."""
@@ -43,7 +53,7 @@ def _kernel_input(df: DataFrame, id_col: str, text_col: str,
     ensure_shipped(df.sparkSession)
     src = df.select(F.col(id_col).cast("long").alias("doc_id"),
                     F.col(text_col).alias("__text"))
-    t = ensure_min_parallelism(src, "doc_id")
+    t = ensure_min_parallelism(src, "doc_id", bytes_per_partition)
     if by_doc and t is src:
         t = src.repartition("doc_id")
     return t
@@ -107,8 +117,10 @@ def _facts_kernel(batches):
 
 
 def _text_facts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return _kernel_input(df, id_col, text_col).mapInArrow(_facts_kernel,
-                                                          _FACTS_SCHEMA)
+    return _kernel_input(
+        df, id_col, text_col,
+        bytes_per_partition=_FACTS_BYTES_PER_PARTITION).mapInArrow(
+            _facts_kernel, _FACTS_SCHEMA)
 
 
 def _sized(fact: str):

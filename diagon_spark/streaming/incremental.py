@@ -11,7 +11,10 @@ The Spark restatement maps one micro-batch to one commit epoch:
 
 `trigger(availableNow=True)` drains the backlog batch-by-batch and stops —
 the batch-job-with-streaming-bookkeeping idiom; a continuous trigger keeps
-the index live. Searchers opened after a commit see it atomically
+the index live. Every epoch after the first is an append, so a small one
+(input files plus term_dict within one doc-prep task,
+`builder._flushes_on_driver`) flushes on the driver in one Spark job; the
+first epoch and larger ones flush on Spark. Searchers opened after a commit see it atomically
 (IndexCatalog.load picks the highest commit generation — the reopen).
 
 Exactly-once publish on top of foreachBatch's at-least-once delivery:

@@ -57,3 +57,27 @@ def both_substrates(values):
     return [pytest.param(v, sub, id=str(v) if sub == "spark"
                          else f"{v}-driver")
             for v in values for sub in SUBSTRATES]
+
+
+def pin_build_substrate(monkeypatch, name: str) -> None:
+    """Pin where an append flushes ("spark" or "driver"), as
+    `pin_substrate` does for queries: "driver" lifts the byte bound of
+    `builder._flushes_on_driver` (in-memory inputs included); fresh
+    builds, resume and capped builds stay on Spark."""
+    from diagon_spark.index import builder
+    if name == "spark":
+        def pick(df, cat, *, append, resume, max_batches):
+            return False
+    else:
+        def pick(df, cat, *, append, resume, max_batches):
+            return append and not resume and max_batches is None
+    monkeypatch.setattr(builder, "_flushes_on_driver", pick)
+
+
+@pytest.fixture(scope="module")
+def spark_build():
+    """Module-wide: every build of the module flushes on Spark (for tests
+    of the distributed build plan itself)."""
+    with pytest.MonkeyPatch.context() as mp:
+        pin_build_substrate(mp, "spark")
+        yield

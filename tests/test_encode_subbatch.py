@@ -11,6 +11,9 @@ from diagon_spark.index import builder
 from diagon_spark.search.local_reader import LocalSearcher
 from diagon_spark.search.query import Boolean, Phrase, Range, Term
 
+# tests of the distributed build plan: every build flushes on Spark
+pytestmark = pytest.mark.usefixtures("spark_build")
+
 
 @pytest.fixture(scope="module")
 def pair(spark, tmp_path_factory):

@@ -20,6 +20,26 @@ def searcher(spark, tmp_path_factory):
     return Searcher(spark, cat)
 
 
+@pytest.fixture(scope="module")
+def driver_parts(searcher, spark, tmp_path_factory):
+    """A postings part and a term_dict part written by a driver flush (a
+    small append onto a copy of the index)."""
+    import glob
+    import shutil
+
+    from diagon_spark.corpus import generate_pandas
+    from diagon_spark.index.builder import IndexCatalog
+    root = str(tmp_path_factory.mktemp("planidx-append") / "idx")
+    shutil.copytree(searcher.cat.root, root)
+    src = str(tmp_path_factory.mktemp("planidx-src") / "add.parquet")
+    generate_pandas(300, 320).to_parquet(src, index=False)
+    build_index(spark, spark.read.parquet(src), root, num_segments=1,
+                num_buckets=8, positions=True, append=True, segment_base=4)
+    assert IndexCatalog.load(root).commit_meta["flush"] == "driver"
+    return [sorted(glob.glob(f"{root}/{t}/*/part-driver-*.parquet"))[0]
+            for t in ("postings", "term_dict")]
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -54,7 +74,8 @@ def test_scoring_stage_not_coalesced(searcher, on_spark):
         or "hashpartitioning(segment_id" in plan, plan[:800]
 
 
-def test_term_granule_skip_bloom_or_dictionary(searcher, spark):
+def test_term_granule_skip_bloom_or_dictionary(searcher, spark,
+                                               driver_parts):
     """Term point-lookup granule skip (SURVEY §2.3 bloom row): every
     postings/term_dict row group either carries a parquet bloom filter on
     `term` (verified in the footer via the JVM reader) or its term column
@@ -63,15 +84,16 @@ def test_term_granule_skip_bloom_or_dictionary(searcher, spark):
     row-group membership (same skipping power). At 100 TB the per-bucket
     vocabulary overflows the dictionary, encoding falls back to PLAIN,
     and the bloom (written with parquet.bloom.filter.enabled#term) takes
-    over — self-tuning granule skip."""
+    over — self-tuning granule skip. The parts a driver flush writes with
+    pyarrow (no blooms) must be fully dictionary-encoded."""
     import glob
     import pyarrow.parquet as pq
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     checked = 0
-    for pattern in (f"{searcher.cat.postings_path}/*/*.parquet",
-                    f"{searcher.cat.term_dict_path}/*/*.parquet"):
-        f = sorted(glob.glob(pattern))[0]
+    for f in [sorted(glob.glob(pattern))[0] for pattern in (
+            f"{searcher.cat.postings_path}/*/*.parquet",
+            f"{searcher.cat.term_dict_path}/*/*.parquet")] + driver_parts:
         inf = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             jvm.org.apache.hadoop.fs.Path(f), conf)
         r = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(inf)
@@ -89,7 +111,7 @@ def test_term_granule_skip_bloom_or_dictionary(searcher, spark):
         assert "PLAIN_DICTIONARY" in enc or "RLE_DICTIONARY" in enc, \
             (f, offsets, enc)
         checked += 1
-    assert checked == 2
+    assert checked == 4
 
 
 def test_term_dict_lookup_is_partition_pruned(searcher, spark):

@@ -17,6 +17,7 @@ import shutil
 
 import pyarrow.dataset as ds
 import pytest
+from conftest import pin_build_substrate
 
 from diagon_spark import build_index
 from diagon_spark.corpus import generate_pandas
@@ -149,13 +150,25 @@ def test_killpoints_fresh_build(spark, tmp_path):
                     ["term_dict", "stats"])
 
 
-def test_killpoints_append(spark, tmp_path):
+def _killpoints_append(spark, tmp_path, monkeypatch, flush):
     base = str(tmp_path / "base")
     _build(spark, base, 0, 30, num_segments=2)
+    pin_build_substrate(monkeypatch, flush)
     _run_killpoints(spark, tmp_path, base,
                     lambda r: _build(spark, r, 30, 45, num_segments=1,
                                      append=True, segment_base=2),
                     ["term_dict", "stats"])
+
+
+def test_killpoints_append(spark, tmp_path, monkeypatch):
+    _killpoints_append(spark, tmp_path, monkeypatch, "spark")
+
+
+def test_killpoints_append_driver_flush(spark, tmp_path, monkeypatch):
+    """The driver flush adds its docs/postings/lineage parts by rename,
+    like the Spark one adds them by its job commit, and publishes
+    term_dict/stats the same way."""
+    _killpoints_append(spark, tmp_path, monkeypatch, "driver")
 
 
 def _with_deletes(spark, root):

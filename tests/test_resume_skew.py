@@ -11,6 +11,9 @@ from diagon_spark.corpus import corpus_df
 from diagon_spark.index.builder import CHUNK_DOCS, IndexCatalog
 from diagon_spark.search.query import Term
 
+# tests of the distributed build plan: every build flushes on Spark
+pytestmark = pytest.mark.usefixtures("spark_build")
+
 N = 400
 
 

@@ -23,6 +23,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from diagon_spark.index.builder import _murmur3_hash_int, _partition_salts
 
+# tests of the distributed build plan: every build flushes on Spark
+pytestmark = pytest.mark.usefixtures("spark_build")
+
 
 def test_murmur_matches_spark_hash(spark):
     from pyspark.sql import functions as F

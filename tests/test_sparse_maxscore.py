@@ -135,3 +135,25 @@ def test_filter_cache_reuse(spark, tmp_path):
           for r in s.search(q, k=10).collect()]
     assert r1 == r2
     assert len(s.filter_cache._map) == 1  # hit, not a second entry
+
+
+def test_value_postings_idf_counts_distinct_docs(spark):
+    """N in the idf is the number of distinct doc_ids (as df and tf count
+    docs, not rows), and building the postings starts no Spark job."""
+    import math
+    import uuid
+    rows = spark.createDataFrame(
+        [(1, "alpha beta"), (1, "gamma"), (2, "alpha")],
+        "doc_id long, text string")
+    sc = spark.sparkContext
+    group = f"vp-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        postings = sparse.build_value_postings(rows)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+    got = {(r.term, r.doc_id): r.weight for r in postings.collect()}
+    assert got[("beta", 1)] == pytest.approx(math.log(1 + 1.5 / 1.5))
+    assert got[("alpha", 1)] == pytest.approx(math.log(1 + 0.5 / 2.5))
+    assert got[("alpha", 2)] == pytest.approx(math.log(1 + 0.5 / 2.5))

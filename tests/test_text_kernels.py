@@ -128,7 +128,7 @@ def ref_build_value_postings(df, id_col="doc_id", text_col="text"):
     t = _ref_tokens(t, text_col).select(
         "doc_id", F.explode("tokens").alias("term"))
     tf = t.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    n_docs = df.count()
+    n_docs = df.agg(F.count_distinct(F.col(id_col))).first()[0]
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     return (tf.join(dfreq, "term")
             .select("term", "doc_id",
