@@ -25,10 +25,6 @@ import re
 import numpy as np
 import pandas as pd
 
-# ASCII fast path: token = alnum, then (alnum | ')*  — StandardTokenizer.h:118-137
-_ASCII_TOKEN = re.compile(r"[A-Za-z0-9][A-Za-z0-9']*")
-_IS_ASCII = re.compile(r"^[\x00-\x7f]*$")
-
 # Unicode fallback (ICU stand-in): letters/digits runs incl. apostrophe.
 # Underscore is a separator (as in the ASCII path) — [^\W_] excludes it
 # from both the start and continuation classes so 'foo_bar' tokenizes the
@@ -66,8 +62,8 @@ def tokenize(text: str) -> list[str]:
     """Tokenize one string (pure-Python; tests + oracle use this)."""
     if text is None:
         return []
-    if _IS_ASCII.match(text):
-        return [t.lower() for t in _ASCII_TOKEN.findall(text)]
+    if text.isascii():
+        return [t.decode("ascii") for t in _ascii_tokens_bytes(text)]
     if HAVE_ICU:
         return _icu_tokenize(text)
     toks = []
@@ -79,10 +75,11 @@ def tokenize(text: str) -> list[str]:
     return toks
 
 
-# translate table: A-Z -> a-z; keep a-z 0-9 '; everything else -> space.
-# bytes.translate + split is ~4x faster than regex findall and produces
-# the identical token stream (leading apostrophes stripped post-split,
-# because a token must START alphanumeric — StandardTokenizer.h:118-124).
+# The ASCII path (StandardTokenizer.h:118-137): a token is an alnum, then
+# (alnum | ')*, lowercased. Translate table: A-Z -> a-z; keep a-z 0-9 ';
+# everything else -> space. bytes.translate + split is ~4x faster than a
+# regex findall (leading apostrophes stripped post-split, because a token
+# must START alphanumeric — StandardTokenizer.h:118-124).
 _TRANS = bytes(
     (c + 32) if 65 <= c <= 90 else
     (c if (97 <= c <= 122 or 48 <= c <= 57 or c == 39) else 32)
@@ -154,7 +151,8 @@ def tokenize_group_flat(texts: pd.Series
     lexicographic order matches bytes order.
     """
     texts = texts.fillna("")
-    is_ascii_m = texts.str.match(_IS_ASCII).to_numpy()
+    is_ascii_m = np.fromiter((t.isascii() for t in texts), bool,
+                             count=len(texts))
     doc_parts: list[np.ndarray] = []
     pos_parts: list[np.ndarray] = []
     tok_parts: list[np.ndarray] = []
@@ -328,5 +326,5 @@ def count_tokens_series(texts: pd.Series) -> np.ndarray:
     """Token counts per row (doc_len for norms): the bytes fast path for
     ASCII rows, `tokenize` for the rest."""
     return np.fromiter(
-        (len(_ascii_tokens_bytes(s) if _IS_ASCII.match(s) else tokenize(s))
+        (len(_ascii_tokens_bytes(s) if s.isascii() else tokenize(s))
          for s in texts.fillna("")), dtype=np.int64, count=len(texts))

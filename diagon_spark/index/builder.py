@@ -606,48 +606,37 @@ def _content_sha(field_cols: list[str]):
                                         for c in field_cols]), 256)
 
 
-def _doc_lens(texts: pd.Series, analyzer=None) -> np.ndarray:
-    """Per-row token counts of one field (doc_len, the norm's input): the
-    body of the doc-prep UDF and of the driver flush."""
+def _len_norm(texts: pd.Series, analyzer=None) -> pd.DataFrame:
+    """Per-row doc_len (token count) and norm of one field: the body of
+    the doc-prep UDF and of the driver flush."""
     if analyzer is None:
         # fast path: count tokens without materializing token lists
         from diagon_spark.analysis.tokenizer import count_tokens_series
-        return count_tokens_series(texts).astype(np.int32)
-    return analyzer(texts).map(len).to_numpy(dtype=np.int32)
-
-
-def norm_expr(dl):
-    """JVM restatement of norms.encode_norm, bit-identical for the int
-    domain: n <= 0 -> 127, else trunc(127.0/sqrt(double(n))) (floor ==
-    trunc for positives; IEEE double sqrt/divide match numpy's).
-    tests/test_norm_expr.py pins the two on 0..2^20, large ints and
-    n <= 0.
-    Removes one ArrowEvalPython node per field from the doc-prep stage —
-    with the build session's worker.reuse=false, that is one
-    python-worker spawn per task per field (guide §4.1: built-ins over
-    UDFs when an exact expression exists)."""
-    return (F.when(dl <= 0, F.lit(127))
-            .otherwise(F.floor(F.lit(127.0) / F.sqrt(dl.cast("double")))
-                       .cast("int"))).cast("int")
+        lens = count_tokens_series(texts).astype(np.int32)
+    else:
+        lens = analyzer(texts).map(len).to_numpy(dtype=np.int32)
+    return pd.DataFrame({"doc_len": lens,
+                         "norm": encode_norm(lens).astype(np.int32)})
 
 
 def prepare_docs(df: DataFrame, key_cols: list[str] | None, id_col: str | None,
                  field_cols: list[str], num_segments: int, analyzer=None,
                  segment_base: int = 0) -> DataFrame:
     """The Spark flush's doc prep: `_doc_ids`, then per-field doc_len/norm
-    and content_sha256."""
+    (one UDF call per field) and content_sha256."""
     default_col = field_cols[0]
     base = _doc_ids(df, key_cols, id_col, num_segments, segment_base)
 
-    @F.pandas_udf(IntegerType())
-    def doc_len_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(_doc_lens(texts, analyzer))
+    @F.pandas_udf("doc_len int, norm int")
+    def len_norm_udf(texts: pd.Series) -> pd.DataFrame:
+        return _len_norm(texts, analyzer)
 
     for col in field_cols:
         fname = _field_name(col)
-        base = base.withColumn(doc_len_col(fname), doc_len_udf(F.col(col)))
-        base = base.withColumn(norm_col(fname),
-                               norm_expr(F.col(_bq(doc_len_col(fname)))))
+        base = base.withColumn("__len_norm", len_norm_udf(F.col(col)))
+        base = (base.withColumn(doc_len_col(fname), F.col("__len_norm.doc_len"))
+                .withColumn(norm_col(fname), F.col("__len_norm.norm"))
+                .drop("__len_norm"))
     # back-compat aliases for the default field
     base = base.withColumn("doc_len",
                            F.col(_bq(doc_len_col(_field_name(default_col)))))
@@ -778,11 +767,12 @@ def _flush_on_driver(spark, df: DataFrame, cat: IndexCatalog, pub, *,
     doc = tbl.column("doc_id").to_numpy()
     crc = tbl.column("__crc").fill_null(0).to_numpy()  # NULL content
     texts = {fn_: tbl.column(fn_).to_pandas() for fn_ in field_names}
-    lens = {fn_: _doc_lens(texts[fn_], analyzer) for fn_ in field_names}
+    lens = {}
     for fn_ in field_names:
-        tbl = tbl.append_column(doc_len_col(fn_), pa.array(lens[fn_]))
-        tbl = tbl.append_column(norm_col(fn_), pa.array(
-            encode_norm(lens[fn_]).astype(np.int32)))
+        ln = _len_norm(texts[fn_], analyzer)
+        lens[fn_] = ln["doc_len"].to_numpy()
+        tbl = (tbl.append_column(doc_len_col(fn_), pa.array(lens[fn_]))
+               .append_column(norm_col(fn_), pa.array(ln["norm"])))
     tbl = (tbl.append_column("doc_len", tbl.column(doc_len_col(field_names[0])))
            .append_column("norm", tbl.column(norm_col(field_names[0]))))
     docs_tbl = tbl.select([_field_name(c) for c in docs_cols])
@@ -887,7 +877,9 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
     to `_build_index_impl`, whose docstring documents them."""
     from diagon_spark.index.lock import write_lock
     with write_lock(out_dir):
-        return _build_index_impl(spark, df, out_dir, **kwargs)
+        cat, pub, meta = _build_index_impl(spark, df, out_dir, **kwargs)
+        pub.commit(cat, meta)
+        return cat
 
 
 def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
@@ -900,8 +892,12 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                       segment_batches: int = 1, max_batches: int | None = None,
                       resume: bool = False, analyzer=None,
                       append: bool = False, segment_base: int = 0,
-                      commit_extra: dict | None = None) -> IndexCatalog:
-    """Build (or resume) the full index. Returns a committed IndexCatalog.
+                      commit_extra: dict | None = None):
+    """Build (or resume) the full index up to its commit. Returns the
+    new IndexCatalog, the Publish that holds its staged tables and the
+    manifest keys of its commit; the caller, under write.lock, publishes
+    them with `pub.commit(cat, meta)` (update_documents adds its
+    tombstones to the same commit).
 
     `fields` lists the document columns to index, each as its own field
     with per-field postings/norms/stats (document/Field.h:24 multi-field
@@ -963,7 +959,7 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                          docs_cols=docs_cols, num_segments=num_segments,
                          segment_base=segment_base, batches=batches,
                          analyzer=analyzer)
-        return _commit_build(cat, pub, analyzer, sum(map(bool, batches)),
+        return _staged_build(cat, pub, analyzer, sum(map(bool, batches)),
                              "driver", commit_extra)
 
     # Scale-adaptive input parallelism (guide §2.5 input skew): a one-
@@ -1171,19 +1167,18 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         spark, cat, pub, new_docs_idx=new_docs_idx, append=append,
         segment_base=segment_base,
         stats_acc=stats_acc if covered_all else None)
-    return _commit_build(cat, pub, analyzer, n_run, "spark", commit_extra)
+    return _staged_build(cat, pub, analyzer, n_run, "spark", commit_extra)
 
 
-def _commit_build(cat: IndexCatalog, pub, analyzer, n_run: int, flush: str,
-                  commit_extra: dict | None) -> IndexCatalog:
+def _staged_build(cat: IndexCatalog, pub, analyzer, n_run: int, flush: str,
+                  commit_extra: dict | None):
     # a custom analyzer bypasses the standard tokenizer entirely — stamp
     # the manifest so check_index skips the icu/regex comparison instead
     # of degrading a perfectly consistent analyzer-built index
     tok_extra = ({"tokenizer": "custom-analyzer"} if analyzer is not None
                  else {})
-    pub.commit(cat, {"batches_run": n_run, "flush": flush, **tok_extra,
-                     **(commit_extra or {})})
-    return cat
+    return cat, pub, {"batches_run": n_run, "flush": flush, **tok_extra,
+                      **(commit_extra or {})}
 
 
 def rollback(spark: SparkSession, root: str, generation: int

@@ -2,28 +2,36 @@
 
 Reference semantics (index/IndexWriter.h:224-233, codecs/LiveDocsFormat.h):
 deleteDocuments(term/key) tombstones matching docs in a bitmap; readers
-mask them out; updateDocument = delete + add; stats keep counting deleted
-docs until a merge rewrites the segment (Lucene behavior, reproduced).
+mask them out; updateDocument = delete + add in one commit; stats keep
+counting deleted docs until a merge rewrites the segment (Lucene
+behavior, reproduced).
 
 Here tombstones are a `deleted/` parquet table of (doc_id, segment_id)
-under the index root, published with a new commit generation. The Spark
-Searcher masks them SCALE-SAFELY: the tombstone table is cogrouped with
-the postings scan per segment (one extra tiny shuffle input — never a
-driver collect, never an `isin` literal in the plan, and top-k is not
-inflated), and match candidates are masked inside the scoring UDF before
-top-k selection. The LocalSearcher serving path loads the tombstones of
-the segments a query touches, lazily, with a pushed segment_id filter.
-merge_segments purges tombstoned postings for good (compaction — Iceberg
+under the index root, the only way a doc is masked. A delete resolves
+its keys once, with Spark, into `_staging/deleted/` (never a driver
+collect); the commit's publish (index/publish.py) renames the non-empty
+parts in. The Spark Searcher cogroups the table with the postings scan
+per segment and masks candidates before top-k; the LocalSearcher loads
+the touched segments' tombstones with a pushed segment_id filter.
+merge_segments purges tombstoned postings for good (Iceberg
 equality-delete compaction analogue).
+
+Not covered yet (ROADMAP): an update's docs/postings parts are visible
+to a reader that opens before its commit, and `update_documents` appends
+at `segment_base=cat.num_segments`, an id a merge may have folded old
+docs into.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from diagon_spark.index.builder import IndexCatalog, build_index
+from diagon_spark.index.builder import IndexCatalog, _build_index_impl
+from diagon_spark.index.lock import write_lock
+from diagon_spark.index.publish import STAGING, Publish
 
 
 def resolve_deletes(spark: SparkSession, cat: IndexCatalog,
@@ -49,20 +57,36 @@ def resolve_deletes(spark: SparkSession, cat: IndexCatalog,
     return hits
 
 
+def _stage_tombstones(spark: SparkSession, cat: IndexCatalog,
+                      deletes_df: DataFrame,
+                      join_cols: list[str] | None = None
+                      ) -> tuple[list[str], int]:
+    """Run the resolution plan once: Spark writes the hits under
+    `_staging/deleted/`. Returns the names of the non-empty parts — the
+    caller stages them as `deleted/<part>` entries of the publish whose
+    commit renames them in — and the number of hits, read from the part
+    footers."""
+    staged = Path(cat.root, STAGING, "deleted")
+    resolve_deletes(spark, cat, deletes_df, join_cols) \
+        .write.mode("overwrite").parquet(str(staged))
+    rows = {p.name: pq.read_metadata(p).num_rows
+            for p in staged.glob("*.parquet")}
+    return sorted(p for p, n in rows.items() if n), sum(rows.values())
+
+
 def delete_documents(spark: SparkSession, cat: IndexCatalog,
                      deletes_df: DataFrame,
                      join_cols: list[str] | None = None) -> int:
     """Tombstone matching docs; returns the number deleted. Atomic via a
-    new commit generation (deleteDocuments analogue). Holds write.lock —
-    the tombstone append + commit must not interleave with another
-    writer's commit-generation allocation."""
-    from diagon_spark.index.lock import write_lock
+    new commit generation (deleteDocuments analogue), which a delete
+    that matches nothing still publishes (`deleted_added: 0`). Holds
+    write.lock — the tombstone append + commit must not interleave with
+    another writer's commit-generation allocation."""
     with write_lock(cat.root):
-        hits = resolve_deletes(spark, cat, deletes_df, join_cols)
-        n = hits.count()
-        if n:
-            hits.write.mode("append").parquet(f"{cat.root}/deleted")
-        cat.commit({"deleted_added": n})
+        parts, n = _stage_tombstones(spark, cat, deletes_df, join_cols)
+        pub = Publish(spark, cat.root)
+        pub.stage("deleted", parts=parts)
+        pub.commit(cat, {"deleted_added": n})
         return n
 
 
@@ -83,17 +107,24 @@ def update_documents(spark: SparkSession, cat: IndexCatalog,
                      new_docs: DataFrame, *,
                      content_col: str = "content",
                      fields: list[str] | None = None) -> IndexCatalog:
-    """updateDocument analogue: delete existing docs with the same keys,
-    then index the new versions as a fresh segment epoch (delete + add,
-    IndexWriter.h:233). Fields default to the index's own field set so a
-    multi-field index updates consistently."""
-    delete_documents(spark, cat, new_docs.select(*cat.key_cols))
-    # field names equal the column names they were built from, so the
-    # catalog's own field list is the correct default
-    field_cols = fields if fields is not None else cat.fields
-    return build_index(
-        spark, new_docs, cat.root, num_segments=1,
-        num_buckets=cat.num_buckets, key_cols=cat.key_cols,
-        content_col=content_col, fields=field_cols,
-        positions=cat.has_positions,
-        append=True, segment_base=cat.num_segments)
+    """updateDocument analogue: tombstone the live docs with the same
+    keys and index the new versions as a fresh segment epoch, in ONE
+    commit generation (delete + add, IndexWriter.h:233) under one hold
+    of write.lock. The old versions resolve before the new docs are
+    written, since both share the key. Fields default to the index's own
+    field set so a multi-field index updates consistently."""
+    with write_lock(cat.root):
+        parts, n = _stage_tombstones(spark, cat,
+                                     new_docs.select(*cat.key_cols))
+        # field names equal the column names they were built from, so the
+        # catalog's own field list is the correct default
+        field_cols = fields if fields is not None else cat.fields
+        new, pub, meta = _build_index_impl(
+            spark, new_docs, cat.root, num_segments=1,
+            num_buckets=cat.num_buckets, key_cols=cat.key_cols,
+            content_col=content_col, fields=field_cols,
+            positions=cat.has_positions,
+            append=True, segment_base=cat.num_segments)
+        pub.stage("deleted", parts=parts)
+        pub.commit(new, {**meta, "deleted_added": n})
+        return new

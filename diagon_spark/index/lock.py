@@ -5,7 +5,8 @@ before any mutation and holds it for the writer's lifetime
 (index/IndexWriter.cpp open path; Lucene NativeFSLockFactory semantics):
 a second writer on the same index fails fast with LockObtainFailed
 instead of corrupting the commit chain. This repo's mutators
-(build_index, delete_documents, commit_merge, rollback) all hold this
+(build_index, delete_documents, update_documents, commit_merge,
+rollback) all hold this
 lock, and taking it first heals any publish a crashed writer left
 pending (publish.repair_index — the IndexWriter-open cleanup of files
 no commit references).
@@ -21,9 +22,10 @@ Mechanics — a kernel advisory lock (fcntl.flock LOCK_EX|LOCK_NB) on
   one process) — fails fast with LockObtainFailedError, matching the
   reference's obtain(timeout=0) behavior; the lock body records
   {pid, host, ts} purely for the error message;
-* re-entry by the SAME THREAD is allowed and ref-counted, so composed
-  mutators (update_documents = delete_documents + build_index,
-  maybe_merge -> commit_merge) nest without deadlocking themselves;
+* there is no re-entry: a nested acquire, even from the thread that
+  holds the lock, fails fast like any second writer. Composed mutators
+  (update_documents, maybe_merge -> commit_merge) take the lock once and
+  call the unlocked `_impl` bodies;
 * acquire verifies by inode that the file it locked is still the live
   `write.lock` (the unlink-vs-flock race: locking an already-unlinked
   inode protects nothing), retrying if not; release unlinks the path
@@ -42,20 +44,11 @@ import fcntl
 import json
 import os
 import socket
-import threading
 import time
 from contextlib import contextmanager
 from pathlib import Path
 
 LOCK_NAME = "write.lock"
-
-# same-THREAD re-entrancy (composed mutators): abs(root) -> (tid, depth).
-# Guarded by _held_mu; any other thread falls through to flock and fails
-# fast there — the reference's IndexWriter lock is per-writer, not
-# per-process.
-_held: dict[str, tuple[int, int]] = {}
-_held_mu = threading.Lock()
-
 
 class LockObtainFailedError(RuntimeError):
     """Another live writer holds this index's write.lock."""
@@ -106,37 +99,16 @@ def write_lock(root: str):
     Raises LockObtainFailedError if another live writer (process or
     sibling thread) holds it; a crashed writer's lock needs no breaking —
     the kernel released it, and the first acquire repairs what it left
-    half-published. Same-thread nesting re-enters."""
+    half-published. A nested acquire fails fast too."""
     key = os.path.abspath(root)
-    tid = threading.get_ident()
-    with _held_mu:
-        holder = _held.get(key)
-        if holder is not None and holder[0] == tid:  # same-thread nesting
-            _held[key] = (tid, holder[1] + 1)
-            reenter = True
-        else:
-            reenter = False
-    if reenter:
-        try:
-            yield
-        finally:
-            with _held_mu:
-                t, d = _held[key]
-                _held[key] = (t, d - 1)
-        return
-
     Path(key).mkdir(parents=True, exist_ok=True)
     path = Path(key, LOCK_NAME)
     fd = _acquire(path)
-    with _held_mu:
-        _held[key] = (tid, 1)
     try:
         from diagon_spark.index.publish import repair_index
         repair_index(key)
         yield
     finally:
-        with _held_mu:
-            _held.pop(key, None)
         # unlink BEFORE close: we still hold the flock, so a racer that
         # already opened this inode fails its liveness check and retries
         path.unlink(missing_ok=True)

@@ -10,8 +10,8 @@ atomic rename, so a publish runs these steps:
 
 1. the writer stages the new tables under `<root>/_staging/`;
 2. an intent file records the pre-publish commit generation and every
-   entry being replaced, created or removed (an entry is a table dir or
-   one `bucket=N` partition of it);
+   entry being replaced, created or removed (an entry is a table dir,
+   one `bucket=N` partition of it, or one part file appended to it);
 3. each live entry is renamed aside under `<root>/_aside/`;
 4. each staged entry is renamed in (an entry staged empty is removed);
 5. the new commit generation is published;
@@ -49,9 +49,9 @@ class Publish:
 
     def stage(self, table: str, parts=None) -> str:
         """Staging dir of `table`. The publish swaps in the whole table
-        (`parts` None), or only its `parts` sub-dirs (the touched
-        `bucket=N` partitions of an append); an entry left unwritten is
-        removed."""
+        (`parts` None), or only its `parts` — the touched `bucket=N`
+        partitions of an append, or new part files of an append-only
+        table (tombstones); an entry left unwritten is removed."""
         self.entries += ([table] if parts is None
                          else [f"{table}/{p}" for p in parts])
         return str(self.path / STAGING / table)
@@ -145,9 +145,20 @@ def repair_index(root: str) -> str | None:
         live, old = r / e, r / ASIDE / e
         if old.exists():
             if live.exists():  # the staged entry already swapped in
-                shutil.rmtree(live)
+                _rm(live)
             old.rename(live)
         elif not existed and live.exists():
-            shutil.rmtree(live)
+            _rm(live)
+        if (not existed and live.parent != r and live.parent.is_dir()
+                and not any(live.parent.iterdir())):
+            live.parent.rmdir()  # a table dir step 4 created
     _finish(r, False)
     return "rolled_back"
+
+
+def _rm(p: Path) -> None:
+    """Remove an entry: a table or partition dir, or an appended part."""
+    if p.is_dir():
+        shutil.rmtree(p)
+    else:
+        p.unlink()

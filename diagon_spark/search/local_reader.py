@@ -77,7 +77,7 @@ def segment_groups(rows, aux_by_seg: dict, banned_by_seg: dict):
     """Yield (segment_id, postings, aux_sets, banned) for each segment,
     ascending, that holds postings `rows` or aux docs; `postings` maps
     (field, term) to the segment's decoded-on-demand postings, `banned`
-    is the segment's live-docs mask input (tombstones + ad-hoc ids)."""
+    is the segment's live-docs mask input (its tombstones)."""
     by_seg: dict[int, dict[tuple[str, str], list[dict]]] = {}
     for r in rows:
         by_seg.setdefault(int(r["segment_id"]), {}) \
@@ -111,8 +111,7 @@ def segment_ids(spec: dict, groups):
 
 
 class LocalSearcher(PlannerMixin):
-    def __init__(self, catalog: IndexCatalog,
-                 deleted_doc_ids: list[int] | None = None):
+    def __init__(self, catalog: IndexCatalog):
         # no process-level runtime tuning here (diagon_spark._runtime):
         # a library constructor must not mutate a host application's
         # global allocator state; a serving host that wants it calls
@@ -140,8 +139,6 @@ class LocalSearcher(PlannerMixin):
         # table carries segment_id since r2). The global union is still
         # available via the `deleted` property for the few genuinely
         # global paths (MatchAll count) and materializes on first use.
-        self._extra_tomb = np.asarray(sorted(set(deleted_doc_ids or [])),
-                                      dtype=np.int64)
         from pathlib import Path
         dp = Path(catalog.root, "deleted")
         self._tomb_ds = ds.dataset(str(dp)) if dp.exists() else None
@@ -152,21 +149,18 @@ class LocalSearcher(PlannerMixin):
 
     @property
     def deleted(self) -> np.ndarray:
-        """Global tombstone union (sorted unique) — lazy; prefer the
-        per-segment `_banned_for` in scoring paths."""
+        """All tombstoned doc ids (sorted unique) — lazy; scoring paths
+        load only the touched segments' (`_tomb_for_segments`)."""
         if self._tomb_all is None:
-            parts = [self._extra_tomb]
-            if self._tomb_ds is not None:
-                parts.append(self._tomb_ds.to_table(columns=["doc_id"])
-                             .column("doc_id").to_numpy()
-                             .astype(np.int64))
-            self._tomb_all = np.unique(np.concatenate(parts)) \
-                if any(len(p) for p in parts) else np.zeros(0, np.int64)
+            self._tomb_all = (
+                np.unique(self._tomb_ds.to_table(columns=["doc_id"])
+                          .column("doc_id").to_numpy().astype(np.int64))
+                if self._has_tombstones else np.zeros(0, np.int64))
         return self._tomb_all
 
     @property
     def _has_tombstones(self) -> bool:
-        return self._tomb_ds is not None or len(self._extra_tomb) > 0
+        return self._tomb_ds is not None
 
     def _tomb_for_segments(self, segs) -> dict[int, np.ndarray]:
         """Per-segment tombstone arrays (sorted unique), loading missing
@@ -187,14 +181,6 @@ class LocalSearcher(PlannerMixin):
             self._tomb_by_seg.setdefault(s, np.zeros(0, np.int64))
         return {s: self._tomb_by_seg.get(s, np.zeros(0, np.int64))
                 for s in segs}
-
-    def _banned_for(self, seg_tomb: np.ndarray) -> np.ndarray:
-        """Segment tombstones ∪ caller-supplied ad-hoc deleted ids."""
-        if len(self._extra_tomb) == 0:
-            return seg_tomb
-        if len(seg_tomb) == 0:
-            return self._extra_tomb
-        return np.union1d(seg_tomb, self._extra_tomb)
 
     # ------------------------------------------------------------ stats
 
@@ -259,9 +245,8 @@ class LocalSearcher(PlannerMixin):
 
     def _segment_groups(self, spec: dict):
         """The shared `segment_groups` over this reader's tables: the
-        spec's postings rows, its aux doc sets, and the tombstones (+
-        ad-hoc ids) of exactly the touched segments, fetched in one
-        pushed scan."""
+        spec's postings rows, its aux doc sets, and the tombstones of
+        exactly the touched segments, fetched in one pushed scan."""
         rows = self._postings_rows(spec["all_terms"],
                                    spec["need_positions"])
         aux_by_seg = (self._aux_by_segment(spec["aux_specs"])
@@ -269,8 +254,7 @@ class LocalSearcher(PlannerMixin):
         banned_by_seg = {}
         if self._has_tombstones:
             segs = {int(r["segment_id"]) for r in rows} | set(aux_by_seg)
-            banned_by_seg = {s: self._banned_for(t) for s, t in
-                             self._tomb_for_segments(segs).items()}
+            banned_by_seg = self._tomb_for_segments(segs)
         return segment_groups(rows, aux_by_seg, banned_by_seg)
 
     def search(self, query: Query, k: int = 100, f64: bool = False,

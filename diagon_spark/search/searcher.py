@@ -26,15 +26,18 @@ MatchAll clauses become aux doc-set DataFrames COGROUPED with the
 postings scan per segment, so constant-score clauses never collect to
 the driver.
 
-Deletes are scale-safe: the tombstone table (doc_id, segment_id) is
-cogrouped into the scoring UDF as another aux set and masked before
-top-k selection — never a driver-collected id list, never an `isin`
-literal in the plan, and k is NOT inflated (the live-docs bitmap of
-codecs/LiveDocsFormat.h:18-47 applied at scorer level). The driver
-substrate masks the same tombstones per touched segment.
+Deletes are scale-safe: the tombstone table (doc_id, segment_id) — the
+one live-docs input, written by index/deletes.py — is cogrouped into the
+scoring UDF as another aux set and masked before top-k selection — never
+a driver-collected id list, never an `isin` literal in the plan, and k
+is NOT inflated (the live-docs bitmap of codecs/LiveDocsFormat.h:18-47
+applied at scorer level). The driver substrate masks the same
+tombstones per touched segment.
 """
 
 from __future__ import annotations
+
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -92,41 +95,43 @@ class _FilterCache:
 
 
 class Searcher(PlannerMixin):
-    def __init__(self, spark: SparkSession, catalog: IndexCatalog,
-                 deleted_doc_ids: list[int] | None = None):
+    def __init__(self, spark: SparkSession, catalog: IndexCatalog):
         from diagon_spark._ship import ensure_shipped
         ensure_shipped(spark)
         self.spark = spark
         self.cat = catalog
         self.default_field = catalog.default_field
-        # the reader core: stats, term_dict and driver-substrate scoring
-        self._reader = LocalSearcher(catalog, deleted_doc_ids)
+        # the reader core: stats, term_dict, tombstones and
+        # driver-substrate scoring
+        self._reader = LocalSearcher(catalog)
         self.field_stats = self._reader.field_stats
         self.max_doc = self._reader.max_doc
-        # resolve sources once (file listing / schema inference is per-query
-        # overhead otherwise); reads stay lazy and pruned
-        self._postings_src = spark.read.parquet(catalog.postings_path)
-        self._docs_src = spark.read.parquet(catalog.docs_path)
-
-        # live-docs: durable tombstones + explicit ids, kept DISTRIBUTED
-        from diagon_spark.index.deletes import deleted_docs_df
-        ddf = deleted_docs_df(spark, catalog)
-        if deleted_doc_ids:
-            extra = (spark.createDataFrame([(int(i),) for i in deleted_doc_ids],
-                                           "doc_id long")
-                     .join(self._docs_src.select("doc_id", "segment_id"),
-                           "doc_id", "inner")
-                     .select(F.col("doc_id").cast("long"),
-                             F.col("segment_id").cast("int")))
-            ddf = extra if ddf is None else ddf.unionByName(extra).distinct()
-        self._deleted_df = ddf
-        self.n_deleted = int(ddf.count()) if ddf is not None else 0
         self.filter_cache = _FilterCache()
+
+    # Spark sources, resolved once, at the first call that runs on Spark:
+    # parquet schema inference is a Spark job, so opening a Searcher and
+    # driver-substrate queries start none. Reads stay lazy and pruned. A
+    # Searcher serves the commit it was opened at; open a new one after a
+    # commit (the reader core pins its listing at open).
+
+    @cached_property
+    def _postings_src(self) -> DataFrame:
+        return self.spark.read.parquet(self.cat.postings_path)
+
+    @cached_property
+    def _docs_src(self) -> DataFrame:
+        return self.spark.read.parquet(self.cat.docs_path)
+
+    @cached_property
+    def _deleted_df(self) -> DataFrame | None:
+        """The tombstone table, kept DISTRIBUTED (None without one)."""
+        from diagon_spark.index.deletes import deleted_docs_df
+        return deleted_docs_df(self.spark, self.cat)
 
     @property
     def deleted(self) -> np.ndarray:
-        """Tombstone + explicit deleted ids, sorted — test/debug
-        convenience ONLY; queries mask per segment."""
+        """Tombstoned doc ids, sorted — read by the reader core for the
+        MatchAll count and tests; queries mask per segment."""
         return self._reader.deleted
 
     # ------------------------------------------------------- routing
@@ -480,8 +485,8 @@ class Searcher(PlannerMixin):
         if isinstance(q, MatchNone):
             return 0
         if isinstance(q, MatchAll):
-            return self.max_doc - self.n_deleted
-        if isinstance(q, Term) and self.n_deleted == 0:
+            return self.max_doc - len(self.deleted)
+        if isinstance(q, Term) and not self._reader._has_tombstones:
             key = (self._resolve_field(q.field), q.term)
             return self.term_stats([key])[key][0]
         if isinstance(q, Range):

@@ -81,3 +81,16 @@ def spark_build():
     with pytest.MonkeyPatch.context() as mp:
         pin_build_substrate(mp, "spark")
         yield
+
+
+def tombstoned_copy(spark, cat, dest, doc_ids):
+    """A private copy of `cat`'s index at `dest`, with `doc_ids` deleted
+    durably (`delete_documents` by doc_id); returns its catalog."""
+    import shutil
+    from diagon_spark.index.builder import IndexCatalog
+    from diagon_spark.index.deletes import delete_documents
+    shutil.copytree(cat.root, dest)
+    copy = IndexCatalog.load(str(dest))
+    delete_documents(spark, copy, spark.createDataFrame(
+        [(int(d),) for d in doc_ids], "doc_id long"), join_cols=["doc_id"])
+    return copy

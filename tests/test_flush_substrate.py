@@ -7,6 +7,7 @@ return the same hits, check_index stays healthy and a following merge
 writes the same tables."""
 
 import os
+import re
 import shutil
 import uuid
 from pathlib import Path
@@ -224,3 +225,17 @@ def test_routing_keeps_everything_else_on_spark(spark, bases, tmp_path,
              if f.is_file())
     monkeypatch.setattr(builder, "DOC_PREP_BYTES_PER_PARTITION", td)
     assert not route(files, cat, append=True, **kw)
+
+
+def test_doc_prep_evaluates_len_norm_once_per_field(spark):
+    # doc_len and norm come out of one Python call per field (a struct):
+    # the plan carries that UDF once per field, so neither column
+    # re-evaluates it
+    docs = builder.prepare_docs(
+        spark.createDataFrame(_corpus(0, 10)), ["repo", "path"], None,
+        ["content", "title"], 2)
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 1, plan
+    for col in ("content", "title"):
+        assert len(re.findall(rf"len_norm_udf\({col}#", plan)) == 1, plan

@@ -8,6 +8,7 @@ import re
 
 import numpy as np
 import pytest
+from conftest import tombstoned_copy
 from pyspark.sql import functions as F
 
 from diagon_spark import Searcher, build_index
@@ -168,11 +169,12 @@ def test_local_searcher_nested_parity(mf):
     assert got_local == got_spark
 
 
-def test_deletes_masked_in_nested_no_isin(mf, spark, on_spark):
+def test_deletes_masked_in_nested_no_isin(mf, spark, on_spark, tmp_path):
     s, cat, ctx = mf
     q = Boolean(must=[Term("int")], should=[Term("if")])
     top = [int(r.doc_id) for r in s.search(q, k=3).collect()]
-    s2 = Searcher(spark, cat, deleted_doc_ids=top[:2])
+    s2 = Searcher(spark, tombstoned_copy(spark, cat, tmp_path / "del",
+                                         top[:2]))
     got = [int(r.doc_id) for r in s2.search(q, k=K).collect()]
     assert not (set(top[:2]) & set(got))
     assert got[0] == top[2]

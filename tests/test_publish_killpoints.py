@@ -1,7 +1,7 @@
 """Kill-point test of the in-place table rewrites (segments_N discipline,
 index/IndexWriter.cpp:208-247): a crash injected at each filesystem step
 (rename, rmtree, unlink) a writer takes inside the index root — fresh
-build, append, rollback, commit_merge — must leave every table that
+build, append, delete, update, rollback, commit_merge — must leave every table that
 writer swaps at its generation-N or generation-N+1 content once the next
 writer has opened the index, never missing and never mixed.
 
@@ -23,7 +23,7 @@ from diagon_spark import build_index
 from diagon_spark.corpus import generate_pandas
 from diagon_spark.index.builder import IndexCatalog, rollback
 from diagon_spark.index.check import HEALTHY, check_index
-from diagon_spark.index.deletes import delete_documents
+from diagon_spark.index.deletes import delete_documents, update_documents
 from diagon_spark.index.merge import commit_merge
 from diagon_spark.search.local_reader import LocalSearcher
 from diagon_spark.search.query import MatchAll, Term
@@ -200,3 +200,25 @@ def test_killpoints_commit_merge(spark, tmp_path):
                                            num_segments=1),
                     ["docs", "postings", "deleted", "term_dict", "stats"],
                     full=True)
+
+
+def test_killpoints_delete(spark, tmp_path):
+    """A delete's tombstone parts are entries of its publish: a crash
+    before its commit leaves deleted/ as it was."""
+    base = str(tmp_path / "base")
+    _build(spark, base, 0, 40, num_segments=2)
+    _with_deletes(spark, base)
+    _run_killpoints(spark, tmp_path, base, lambda r: _with_deletes(spark, r),
+                    ["deleted", "term_dict", "stats"], full=True)
+
+
+def test_killpoints_update(spark, tmp_path):
+    """An update publishes its tombstones with its new segment's
+    term_dict/stats in one commit."""
+    base = str(tmp_path / "base")
+    _build(spark, base, 0, 30, num_segments=2)
+    _run_killpoints(spark, tmp_path, base,
+                    lambda r: update_documents(
+                        spark, IndexCatalog.load(r),
+                        spark.createDataFrame(generate_pandas(10, 15))),
+                    ["deleted", "term_dict", "stats"])

@@ -6,7 +6,7 @@ distributed plan's bit for bit. Everything else stays on Spark."""
 import uuid
 
 import pytest
-from conftest import pin_substrate
+from conftest import pin_substrate, tombstoned_copy
 from pyspark.sql import functions as F
 
 from diagon_spark import Searcher, build_index
@@ -64,11 +64,13 @@ def test_small_query_starts_no_spark_job(spark, cat):
 
 
 @pytest.mark.parametrize("f64", [False, True])
-def test_driver_hits_equal_spark_bitwise(spark, cat, monkeypatch, f64):
+def test_driver_hits_equal_spark_bitwise(spark, cat, monkeypatch, f64,
+                                        tmp_path):
     top = [d for d, _ in _hits(Searcher(spark, cat).search(QUERIES[1], k=3))]
     explicit = top[::2]
-    s = Searcher(spark, cat, deleted_doc_ids=explicit)
-    assert s.n_deleted == 3 + len(explicit)  # durable + explicit
+    s = Searcher(spark, tombstoned_copy(spark, cat, tmp_path / "del",
+                                        explicit))
+    assert len(s.deleted) == 3 + len(explicit)  # fixture's + this test's
     assert s.profile(QUERIES[1], k=K)["segments_matched"] == 4
     for q in QUERIES:
         driver = _hits(s.search(q, k=K, f64=f64))

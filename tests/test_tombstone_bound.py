@@ -8,6 +8,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import tombstoned_copy
 from pyspark.sql import functions as F
 
 from diagon_spark import Searcher, build_index
@@ -101,6 +102,9 @@ def test_real_deletes_via_lazy_path(spark, tmp_path):
     assert not set(int(v) for v in victims) & set(hits)
     assert ls.count(MatchAll()) == 148  # global path materializes lazily
     assert ls._tomb_all is not None
-    # ad-hoc deleted_doc_ids compose with per-segment tombstones
-    ls2 = LocalSearcher(cat, deleted_doc_ids=hits[:1])
-    assert hits[0] not in [d for d, _ in ls2.search(Term("int"), k=20)]
+    # a later delete's tombstones compose with the earlier ones
+    ls2 = LocalSearcher(tombstoned_copy(spark, cat, tmp_path / "del",
+                                        hits[:1]))
+    hits2 = [d for d, _ in ls2.search(Term("int"), k=20)]
+    assert hits[0] not in hits2
+    assert not set(int(v) for v in victims) & set(hits2)

@@ -3,8 +3,8 @@ IndexWriter lock analogue (index/IndexWriter.cpp open path): a second
 live writer — another process or another thread — fails fast with
 LockObtainFailedError and never touches the first writer's commit chain;
 a crashed writer's kernel lock releases automatically (no stale-pid
-breaking step, hence none of its races); composed mutators re-enter
-their own lock on the same thread."""
+breaking step, hence none of its races); a nested acquire fails fast
+too, so composed mutators take the lock once."""
 
 import subprocess
 import sys
@@ -90,13 +90,53 @@ def test_crashed_holder_releases_automatically(spark, built):
     assert not Path(root, LOCK_NAME).exists()  # released after the build
 
 
-def test_reentrant_same_thread(tmp_path):
+def test_nested_same_thread_acquire_fails_fast(tmp_path):
+    # no re-entry: a nested acquire is a second writer, even on the
+    # holding thread, and fails fast instead of deadlocking
     root = str(tmp_path / "idx2")
     with write_lock(root):
-        with write_lock(root):  # update_documents-style nesting
-            assert Path(root, LOCK_NAME).exists()
-        assert Path(root, LOCK_NAME).exists()  # inner exit keeps the hold
+        with pytest.raises(LockObtainFailedError):
+            with write_lock(root):
+                pass
+        assert Path(root, LOCK_NAME).exists()  # the outer hold survives
     assert not Path(root, LOCK_NAME).exists()
+
+
+def test_update_holds_the_lock_until_its_one_commit(spark, built,
+                                                   monkeypatch):
+    # while update_documents writes the new versions, a second writer
+    # fails fast and no generation showing the old versions deleted has
+    # been published yet
+    from diagon_spark.index import builder
+    from diagon_spark.index.deletes import update_documents
+    cat, df, root = built
+    gen_before = cat.generation
+    seen: list = []
+    real = builder._flushes_on_driver
+
+    def hook(*args, **kwargs):
+        errs: list[Exception] = []
+
+        def second():
+            try:
+                with write_lock(root):
+                    pass
+            except Exception as e:  # noqa: BLE001
+                errs.append(e)
+
+        t = threading.Thread(target=second)
+        t.start()
+        t.join(10)
+        seen.append((errs, IndexCatalog.load(root).generation))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(builder, "_flushes_on_driver", hook)
+    new = update_documents(spark, cat, df.limit(2))
+    assert len(seen) == 1
+    errs, gen = seen[0]
+    assert len(errs) == 1 and isinstance(errs[0], LockObtainFailedError)
+    assert gen == gen_before
+    assert new.generation == gen_before + 1
 
 
 def test_second_thread_fails_fast(tmp_path):
