@@ -145,8 +145,7 @@ def flush_crossover() -> None:
                     lambda *a, _d=(sub == "driver"), **k: _d)
                 t0, c0 = time.time(), cpu_s()
                 build_index(spark, spark.read.parquet(add), root,
-                            num_segments=1, append=True, segment_base=4,
-                            **kw)
+                            num_segments=1, append=True, **kw)
                 runs[sub].append((time.time() - t0, cpu_s() - c0))
                 builder._flushes_on_driver = route
                 shutil.rmtree(root)
@@ -194,7 +193,7 @@ def suite(sf_dir: str) -> None:
     t0 = time.time()
     build_index(spark, spark.read.parquet(add), idx_dir, num_segments=1,
                 num_buckets=16, id_col="doc_id", content_col="text",
-                positions=True, append=True, segment_base=cat.num_segments)
+                positions=True, append=True)
     out["append_small"] = round(time.time() - t0, 4)
     os.remove(add)
 

@@ -5,7 +5,8 @@ tokenize → in-memory FreqProx postings → flush a segment (sorted terms,
 block-encoded postings + norms + stored) → atomic commit. Here:
 
 * one **segment = one shuffle partition group**; DWPT assignment =
-  `pmod(hash(key), num_segments)`;
+  `pmod(hash(key), num_segments)` above the latest commit's
+  `next_segment_id` (its `segments` list is the SegmentInfos counter);
 * FreqProx accumulation = `posexplode` + one shuffle into
   `(segment_id, field)` groups; term sort deferred to the encode UDF
   (numpy lexsort) exactly like the reference defers sorting to flush
@@ -252,11 +253,12 @@ _BLOOM_OPTS = {"parquet.bloom.filter.enabled#term": "true",
 
 @dataclass
 class IndexCatalog:
-    """Handle to a committed index (the DirectoryReader analogue)."""
+    """Handle to a committed index (the DirectoryReader analogue);
+    `segments` lists its live segment ids in ascending order."""
 
     root: str
     num_buckets: int
-    num_segments: int
+    segments: list[int]
     has_positions: bool
     key_cols: list[str]
     fields: list[str] = dc_field(default_factory=lambda: ["content"])
@@ -270,6 +272,14 @@ class IndexCatalog:
     @property
     def default_field(self) -> str:
         return self.fields[0]
+
+    @property
+    def num_segments(self) -> int:
+        return len(self.segments)
+
+    @property
+    def next_segment_id(self) -> int:
+        return max(self.segments, default=-1) + 1
 
     @property
     def docs_path(self) -> str:
@@ -325,12 +335,14 @@ class IndexCatalog:
         # they must be REJECTED with a migration message, not defaulted to
         # the current name and mis-read
         codec_for_name(meta.get("codec", "<pre-SPI commit, no codec key>"))
+        if "segments" not in meta:  # older format: callers rebuild
+            raise FileNotFoundError(f"{root}: commit lists no segments")
         return IndexCatalog(
             root=root,
             fields=list(meta.get("fields") or ["content"]),
             generation=opened_gen,
             commit_meta=meta,
-            **{k: meta[k] for k in ("num_buckets", "num_segments",
+            **{k: meta[k] for k in ("num_buckets", "segments",
                                     "has_positions", "key_cols")})
 
     def commit(self, extra: dict | None = None) -> None:
@@ -353,7 +365,7 @@ class IndexCatalog:
             prev_tok = json.loads(existing[-1].read_text()).get("tokenizer")
         meta = {
             "num_buckets": self.num_buckets,
-            "num_segments": self.num_segments,
+            "segments": self.segments,
             "has_positions": self.has_positions,
             "key_cols": self.key_cols,
             "fields": self.fields,
@@ -891,7 +903,7 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
                       positions: bool = True,
                       segment_batches: int = 1, max_batches: int | None = None,
                       resume: bool = False, analyzer=None,
-                      append: bool = False, segment_base: int = 0,
+                      append: bool = False, segment_base: int | None = None,
                       commit_extra: dict | None = None):
     """Build (or resume) the full index up to its commit. Returns the
     new IndexCatalog, the Publish that holds its staged tables and the
@@ -910,13 +922,14 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     kill-mid-build test). `resume=True` skips segments already completed
     per the lineage table.
 
-    `append=True` + `segment_base` adds NEW segments to an existing index
-    (incremental / near-real-time ingest: each micro-batch is an epoch of
-    fresh segments, the buffer→flush→reopen cycle of the reference's NRT
-    path — index/DirectoryReader.cpp reopen semantics). term_dict and
-    stats are maintained incrementally: only the new segments are
-    aggregated and merge-added (additive sums) — no rescan of old
-    postings.
+    `append=True` adds `num_segments` NEW segments, at ids from the latest
+    commit's `next_segment_id` (or an explicit `segment_base` not below
+    it), to an existing index (incremental / near-real-time ingest: each
+    micro-batch is an epoch of fresh segments, the buffer→flush→reopen
+    cycle of the reference's NRT path — index/DirectoryReader.cpp reopen
+    semantics). term_dict and stats are maintained incrementally: only the
+    new segments are aggregated and merge-added (additive sums) — no
+    rescan of old postings.
 
     Where a commit flushes: an append smaller than one doc-prep task
     (`_flushes_on_driver`) flushes on the driver in one Spark job
@@ -929,10 +942,16 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
         key_cols = ["repo", "path", "commit"]
     field_cols = list(fields) if fields else [content_col]
     field_names = [_field_name(c) for c in field_cols]
-    cat = IndexCatalog(root=out_dir, num_buckets=num_buckets,
-                       num_segments=segment_base + num_segments,
-                       has_positions=positions, key_cols=key_cols or [],
-                       fields=field_names)
+    cat = IndexCatalog(root=out_dir, num_buckets=num_buckets, segments=(
+        IndexCatalog.load(out_dir).segments if append else []),
+        has_positions=positions, key_cols=key_cols or [], fields=field_names)
+    if segment_base is None:
+        segment_base = cat.next_segment_id
+    elif segment_base < cat.next_segment_id:
+        raise ValueError(f"segment_base={segment_base} would reuse a segment"
+                         f" id: the next free id is {cat.next_segment_id}")
+    all_segments = list(range(segment_base, segment_base + num_segments))
+    cat.segments += all_segments
     root = Path(out_dir)
     root.mkdir(parents=True, exist_ok=True)
     # the stored-fields (.fdt) analogue (codecs/StoredFieldsWriter.h:19-63)
@@ -944,7 +963,6 @@ def _build_index_impl(spark: SparkSession, df: DataFrame, out_dir: str, *,
     docs_cols = list(dict.fromkeys(
         ["segment_id", "doc_id", *keep, "content_sha256",
          *per_field_cols, "doc_len", "norm"]))
-    all_segments = list(range(segment_base, segment_base + num_segments))
     batches: list[list[int]] = [
         [s for s in all_segments[i::segment_batches]]
         for i in range(segment_batches)
@@ -1194,31 +1212,41 @@ def _rollback_impl(spark: SparkSession, root: str, generation: int
                    ) -> IndexCatalog:
     """Roll the index back to an older commit point — the
     IndexWriter::rollback / open-at-IndexCommit analogue
-    (index/IndexWriter.h:251). Segments appended after that commit are
-    physically dropped (segment ids are monotone across append epochs, so
-    the cut is `segment_id < old.num_segments`), tombstones referencing
-    dropped docs are pruned, term_dict/stats are recomputed, and a NEW
+    (index/IndexWriter.h:251). Rows of segments outside that commit's
+    `segments` are physically dropped, the tombstone parts later commits
+    published (`deleted_parts`) are removed, so the docs live at that
+    commit are live again, term_dict/stats are recomputed, and a NEW
     commit generation publishes the rolled-back state: every rewritten
     table and the recomputed term_dict/stats swap in together with that
     commit (index/publish.py), so a crash leaves all of them at one
-    generation."""
+    generation. A merge prunes older commits, so no rollback crosses
+    one."""
     from diagon_spark.index.publish import Publish
     old = IndexCatalog.load(root, generation)
     pub = Publish(spark, root)
-    _stage_dropping(spark, pub, F.col("segment_id") >= old.num_segments,
-                    ("docs", "postings", "deleted", "lineage"))
+    _stage_dropping(spark, pub, old.segments)
+    later = {p for c in IndexCatalog.list_commits(root)
+             if IndexCatalog._gen_of(c) > generation
+             for p in json.loads(c.read_text()).get("deleted_parts", [])}
+    live = {p.name for p in Path(root, "deleted").glob("*.parquet")}
+    if live and live <= later:
+        pub.remove("deleted")  # no part survives: the table goes
+    else:
+        for p in sorted(live & later):
+            pub.remove(f"deleted/{p}")
     _refresh_term_dict_and_stats(
         spark, old, pub, new_docs_idx=spark.read.parquet(pub.source("docs")),
-        append=False, segment_base=0)
+        append=False)
     pub.commit(old, {"rolled_back_to": generation})
     return old
 
 
-def _stage_dropping(spark: SparkSession, pub, drop, tables) -> None:
-    """Stage each segment-keyed table in `tables` into the publish `pub`
-    without its rows matching `drop`; a table holding no such row is
-    left as it is."""
-    for sub in tables:
+def _stage_dropping(spark: SparkSession, pub, segments: list[int]) -> None:
+    """Stage docs, postings and lineage into the publish `pub` without
+    their rows whose segment_id is outside `segments` (a commit's live
+    segments); a table holding no such row is left as it is."""
+    drop = ~F.col("segment_id").isin(segments)
+    for sub in ("docs", "postings", "lineage"):
         p = pub.path / sub
         if not p.exists():
             continue
@@ -1233,7 +1261,7 @@ def _stage_dropping(spark: SparkSession, pub, drop, tables) -> None:
 
 def _refresh_term_dict_and_stats(spark: SparkSession, cat: IndexCatalog,
                                  pub, *, new_docs_idx: DataFrame,
-                                 append: bool, segment_base: int,
+                                 append: bool, segment_base: int = 0,
                                  stats_acc: dict | None = None) -> None:
     """Term dictionary + per-field collection stats, staged into the
     writer's publish `pub` (index/publish.py) over the postings it will

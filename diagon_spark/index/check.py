@@ -87,14 +87,12 @@ def check_index(spark: SparkSession, root: str,
         msgs.append(f"stats.max_doc={stats_max_doc} but docs table has "
                     f"{n_docs} rows")
 
-    seg_ids = docs.select("segment_id").distinct()
-    bad_segs = seg_ids.filter(
-        (F.col("segment_id") < 0)
-        | (F.col("segment_id") >= cat.num_segments)).count()
+    bad_segs = (docs.select("segment_id").distinct()
+                .filter(~F.col("segment_id").isin(cat.segments)).count())
     checks["segment_ids_in_range"] = bad_segs == 0
     if bad_segs:
-        msgs.append(f"{bad_segs} segment ids outside "
-                    f"[0, {cat.num_segments})")
+        msgs.append(f"{bad_segs} docs segment ids are not segments of "
+                    "the latest commit")
 
     dup = (docs.groupBy("doc_id").count()
            .filter(F.col("count") > 1).count())

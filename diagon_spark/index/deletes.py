@@ -16,10 +16,12 @@ the touched segments' tombstones with a pushed segment_id filter.
 merge_segments purges tombstoned postings for good (Iceberg
 equality-delete compaction analogue).
 
+Each commit that publishes tombstone parts names them in its manifest
+(`deleted_parts`), so a rollback removes exactly the tombstones the
+commits after its target added.
+
 Not covered yet (ROADMAP): an update's docs/postings parts are visible
-to a reader that opens before its commit, and `update_documents` appends
-at `segment_base=cat.num_segments`, an id a merge may have folded old
-docs into.
+to a reader that opens before its commit.
 """
 
 from __future__ import annotations
@@ -81,18 +83,20 @@ def delete_documents(spark: SparkSession, cat: IndexCatalog,
     new commit generation (deleteDocuments analogue), which a delete
     that matches nothing still publishes (`deleted_added: 0`). Holds
     write.lock — the tombstone append + commit must not interleave with
-    another writer's commit-generation allocation."""
+    another writer's commit-generation allocation. The commit extends
+    the latest one, whatever generation `cat` was opened at."""
     with write_lock(cat.root):
         parts, n = _stage_tombstones(spark, cat, deletes_df, join_cols)
         pub = Publish(spark, cat.root)
         pub.stage("deleted", parts=parts)
-        pub.commit(cat, {"deleted_added": n})
+        pub.commit(IndexCatalog.load(cat.root),
+                   {"deleted_added": n, "deleted_parts": parts})
         return n
 
 
 def deleted_docs_df(spark: SparkSession, cat: IndexCatalog) -> DataFrame | None:
     """Tombstones as a DataFrame (doc_id, segment_id), or None if the
-    index has none. Stays distributed — the Searcher cogroups it with the
+    index has none. Stays distributed — the merge cogroups it with the
     postings scan instead of collecting ids to the driver."""
     p = Path(cat.root, "deleted")
     if not p.exists():
@@ -123,8 +127,7 @@ def update_documents(spark: SparkSession, cat: IndexCatalog,
             spark, new_docs, cat.root, num_segments=1,
             num_buckets=cat.num_buckets, key_cols=cat.key_cols,
             content_col=content_col, fields=field_cols,
-            positions=cat.has_positions,
-            append=True, segment_base=cat.num_segments)
+            positions=cat.has_positions, append=True)
         pub.stage("deleted", parts=parts)
-        pub.commit(new, {**meta, "deleted_added": n})
+        pub.commit(new, {**meta, "deleted_added": n, "deleted_parts": parts})
         return new

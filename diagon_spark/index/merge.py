@@ -103,7 +103,7 @@ def _merge_term_rows(recs: list[dict], has_positions: bool,
     return docs[order], tfs[order], norms[order], deltas
 
 
-def _merge_group_fn(has_positions: bool, num_segments: int):
+def _merge_group_fn(has_positions: bool, new_segment: dict[int, int]):
     """Cogrouped merge fn: (postings rows of one (bucket, salt) group,
     tombstone rows replicated to that group). Tombstones arrive through
     the shuffle — never a driver collect, never a pickled closure array
@@ -121,7 +121,7 @@ def _merge_group_fn(has_positions: bool, num_segments: int):
             tombstones = np.zeros(0, dtype=np.int64)
         if len(pdf) == 0:
             return pd.DataFrame(columns=_POSTINGS_COLS)
-        pdf = (pdf.assign(_new_seg=pdf["segment_id"] % num_segments)
+        pdf = (pdf.assign(_new_seg=pdf["segment_id"].map(new_segment))
                .sort_values(["_new_seg", "field", "term"], kind="stable"))
         frames = []
         for (new_seg, fld), seg_recs in groupby(
@@ -163,7 +163,8 @@ def merge_segments(spark: SparkSession, cat: IndexCatalog, out_dir: str,
     from diagon_spark.index.publish import Publish
     with write_lock(out_dir):
         pub = Publish(spark, out_dir)
-        merged, n_purged = _stage_merge(spark, cat, pub, num_segments)
+        merged, n_purged = _stage_merge(
+            spark, IndexCatalog.load(cat.root), pub, num_segments)
         pub.commit(merged, {"merged_from": cat.root, "purged": n_purged})
         return merged
 
@@ -171,16 +172,20 @@ def merge_segments(spark: SparkSession, cat: IndexCatalog, out_dir: str,
 def _stage_merge(spark: SparkSession, cat: IndexCatalog, pub,
                  num_segments: int) -> tuple[IndexCatalog, int]:
     """Stage `cat` merged to `num_segments` segments into the publish
-    `pub` (index/publish.py): docs, postings, term_dict and stats.
+    `pub` (index/publish.py): docs, postings, term_dict and stats, at
+    fresh ids from `cat.next_segment_id` (`cat` is the latest commit).
     Returns the merged, not yet committed catalog of `pub`'s root and
     the number of purged docs."""
     from diagon_spark._ship import ensure_shipped
     from diagon_spark.index.deletes import deleted_docs_df
     ensure_shipped(spark)
 
+    base = cat.next_segment_id
+    new_segment = {s: base + i * num_segments // cat.num_segments
+                   for i, s in enumerate(cat.segments)}
     deleted = deleted_docs_df(spark, cat)  # distributed; None if no deletes
     merged = IndexCatalog(root=pub.root, num_buckets=cat.num_buckets,
-                          num_segments=num_segments,
+                          segments=list(range(base, base + num_segments)),
                           has_positions=cat.has_positions,
                           key_cols=cat.key_cols, fields=cat.fields)
     postings = spark.read.parquet(cat.postings_path)
@@ -195,7 +200,7 @@ def _stage_merge(spark: SparkSession, cat: IndexCatalog, pub,
         .cast("int"))
     left = (salted.repartition(n_groups, F.col("bucket"), F.col("_salt"))
             .groupBy("bucket", "_salt"))
-    fn = _merge_group_fn(cat.has_positions, num_segments)
+    fn = _merge_group_fn(cat.has_positions, new_segment)
     if deleted is None:
         out = left.applyInPandas(
             lambda key, pdf: fn(key, pdf, None), schema=POSTINGS_SCHEMA)
@@ -218,10 +223,9 @@ def _stage_merge(spark: SparkSession, cat: IndexCatalog, pub,
     pub.write(out.repartition(cat.num_buckets, F.col("bucket")),
               "postings", partition_by="bucket", options=_BLOOM_OPTS)
 
-    docs = spark.read.parquet(cat.docs_path) \
-        .withColumn("segment_id",
-                    F.pmod(F.col("segment_id"), F.lit(num_segments))
-                    .cast("int"))
+    docs = spark.read.parquet(cat.docs_path).withColumn(
+        "segment_id", F.create_map(*[F.lit(x) for kv in new_segment.items()
+                                     for x in kv])[F.col("segment_id")])
     n_purged = 0
     if deleted is not None:
         # distributed anti-join purge (no createDataFrame(list) literal);
@@ -232,7 +236,7 @@ def _stage_merge(spark: SparkSession, cat: IndexCatalog, pub,
     _refresh_term_dict_and_stats(
         spark, merged, pub,
         new_docs_idx=spark.read.parquet(pub.source("docs")),
-        append=False, segment_base=0)
+        append=False)
     return merged, n_purged
 
 
@@ -294,9 +298,11 @@ def _commit_merge_impl(spark: SparkSession, cat: IndexCatalog,
     from diagon_spark.index.publish import Publish
     from diagon_spark.streaming.incremental import committed_epochs
 
+    cat = IndexCatalog.load(cat.root)  # the latest, under write.lock
     pub = Publish(spark, cat.root)
     merged, _ = _stage_merge(spark, cat, pub, num_segments)
     pub.remove("deleted")  # purged into the merged postings/docs
+    pub.remove("lineage")  # it describes the segments the merge removed
     # stream-epoch bookkeeping must SURVIVE commit pruning: carry every
     # epoch published by the commits about to be deleted so streaming
     # replay idempotency (incremental.committed_epochs) keeps holding

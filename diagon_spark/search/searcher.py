@@ -108,25 +108,33 @@ class Searcher(PlannerMixin):
         self.max_doc = self._reader.max_doc
         self.filter_cache = _FilterCache()
 
-    # Spark sources, resolved once, at the first call that runs on Spark:
-    # parquet schema inference is a Spark job, so opening a Searcher and
-    # driver-substrate queries start none. Reads stay lazy and pruned. A
-    # Searcher serves the commit it was opened at; open a new one after a
-    # commit (the reader core pins its listing at open).
+    # Spark sources, read at the first call that runs on Spark from the
+    # files the reader core listed at open, with the schemas it read: no
+    # inference job, so opening a Searcher and driver-substrate queries
+    # start none, and both substrates serve the commit the Searcher was
+    # opened at. Reads stay lazy and pruned; open a new Searcher to see a
+    # later commit.
+
+    def _pinned(self, dataset, path: str) -> DataFrame:
+        from pyspark.sql.pandas.types import from_arrow_schema
+        return (self.spark.read.schema(from_arrow_schema(dataset.schema))
+                .option("basePath", path).parquet(*dataset.files))
 
     @cached_property
     def _postings_src(self) -> DataFrame:
-        return self.spark.read.parquet(self.cat.postings_path)
+        return self._pinned(self._reader._postings_ds, self.cat.postings_path)
 
     @cached_property
     def _docs_src(self) -> DataFrame:
-        return self.spark.read.parquet(self.cat.docs_path)
+        return self._pinned(self._reader._docs_ds, self.cat.docs_path)
 
     @cached_property
     def _deleted_df(self) -> DataFrame | None:
         """The tombstone table, kept DISTRIBUTED (None without one)."""
-        from diagon_spark.index.deletes import deleted_docs_df
-        return deleted_docs_df(self.spark, self.cat)
+        tomb = self._reader._tomb_ds
+        return (None if tomb is None else
+                self._pinned(tomb, f"{self.cat.root}/deleted")
+                .select("doc_id", "segment_id").distinct())
 
     @property
     def deleted(self) -> np.ndarray:

@@ -6,8 +6,9 @@ tests ReaderReopenTest.cpp; commit points index/IndexWriter.cpp:208-247).
 The Spark restatement maps one micro-batch to one commit epoch:
 
     readStream (new corpus files) → foreachBatch:
-        build_index(append=True, segment_base=epoch * segments_per_batch)
-        → new segments + refreshed term_dict/stats + new commit_N.json
+        build_index(append=True)
+        → new segments (ids from the latest commit's next_segment_id)
+          + refreshed term_dict/stats + new commit_N.json
 
 `trigger(availableNow=True)` drains the backlog batch-by-batch and stops —
 the batch-job-with-streaming-bookkeeping idiom; a continuous trigger keeps
@@ -23,9 +24,9 @@ epoch that already committed is skipped. An epoch that failed mid-write
 may leave two kinds of debris: a half-done term_dict/stats publish,
 which the retry's write.lock heals on entry (index/publish.py rolls it
 back, since its commit never landed), and segment rows already appended
-to docs/postings/lineage, which the retry scrubs first (segment ids are
-epoch-determined, so the partial rows are identifiable) before
-re-appending. The scrub leaves term_dict/stats alone: after the
+to docs/postings/lineage, which the retry scrubs first (their segment
+ids are not in the latest commit's `segments`) before re-appending.
+The scrub leaves term_dict/stats alone: after the
 rollback they already match the last commit. On Iceberg the scrub would
 be a snapshot rollback instead of a filter-rewrite.
 """
@@ -33,9 +34,8 @@ be a snapshot rollback instead of a filter-rewrite.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from diagon_spark.index.builder import IndexCatalog, build_index
 
@@ -67,17 +67,15 @@ def index_stream(spark: SparkSession, source_dir: str, out_dir: str,
         epoch = int(batch_id)
         if epoch in committed_epochs(out_dir):
             return  # at-least-once replay of a published epoch: no-op
-        base = epoch * segments_per_batch
         exists = _exists(out_dir)
         if exists:
-            _scrub_partial_epoch(batch_df.sparkSession, out_dir,
-                                 base, base + segments_per_batch)
+            _scrub_partial_epoch(batch_df.sparkSession, out_dir)
         build_index(
             batch_df.sparkSession, batch_df, out_dir,
             num_segments=segments_per_batch, num_buckets=num_buckets,
             key_cols=key_cols, id_col=id_col, content_col=content_col,
             fields=fields, positions=positions, append=exists,
-            segment_base=base, commit_extra={"stream_epoch": epoch})
+            commit_extra={"stream_epoch": epoch})
         if compact_max_segments is not None:
             from diagon_spark.index.merge import maybe_merge
             maybe_merge(batch_df.sparkSession,
@@ -107,26 +105,25 @@ def committed_epochs(out_dir: str) -> set[int]:
     return out
 
 
-def _scrub_partial_epoch(spark: SparkSession, out_dir: str,
-                         seg_lo: int, seg_hi: int) -> None:
+def _scrub_partial_epoch(spark: SparkSession, out_dir: str) -> None:
     """Remove rows of a partially-written (uncommitted) epoch so the retry
-    is idempotent. Rare path: only runs when a previous attempt of this
-    epoch died between its first append and its commit. term_dict/stats
-    change only together with a commit, and write.lock rolls back a
-    publish that died before its own, so they already match the last
-    commit; only docs/postings/lineage are filtered, swapped in under a
-    commit of their own (index/publish.py)."""
+    is idempotent: rows whose segment id is not in the latest commit's
+    `segments`. Rare path: only finds rows when a previous attempt of
+    this epoch died between its first append and its commit.
+    term_dict/stats change only together with a commit, and write.lock
+    rolls back a publish that died before its own, so they already match
+    the last commit; only docs/postings/lineage are filtered, swapped in
+    under a commit of their own (index/publish.py)."""
     from diagon_spark.index.builder import _stage_dropping
     from diagon_spark.index.lock import write_lock
     from diagon_spark.index.publish import Publish
     with write_lock(out_dir):
+        cat = IndexCatalog.load(out_dir)
         pub = Publish(spark, out_dir)
-        _stage_dropping(spark, pub, F.col("segment_id").between(
-            seg_lo, seg_hi - 1), ("docs", "postings", "lineage"))
+        _stage_dropping(spark, pub, cat.segments)
         if pub.entries:
-            pub.commit(IndexCatalog.load(out_dir),
-                       {"scrubbed_segments": [seg_lo, seg_hi]})
+            pub.commit(cat, {"scrubbed": True})
 
 
 def _exists(out_dir: str) -> bool:
-    return Path(out_dir, "_commits").exists()
+    return bool(IndexCatalog.list_commits(out_dir))

@@ -1,6 +1,7 @@
 """Full index-lifecycle soak at the largest sandbox scale (default 2M
 docs): build -> queries -> delete -> append -> reader reopen ->
-crash-safe in-place merge commit -> queries again, with invariants
+crash-safe in-place merge commit -> queries again -> update of one
+file -> check_index, with invariants
 checked at every step. Prints one JSON line of timings + checks.
 
 This is the robustness receipt the per-operator tests can't give: every
@@ -43,7 +44,8 @@ def main() -> None:
     from diagon_spark import Searcher, build_index
     from diagon_spark.corpus import corpus_df, VOCAB
     from diagon_spark.index.builder import IndexCatalog
-    from diagon_spark.index.deletes import delete_documents
+    from diagon_spark.index.check import HEALTHY, check_index
+    from diagon_spark.index.deletes import delete_documents, update_documents
     from diagon_spark.index.merge import commit_merge
     from diagon_spark.search.local_reader import LocalSearcher
     from diagon_spark.search.query import Boolean, MatchAll, Phrase, Term
@@ -102,7 +104,7 @@ def main() -> None:
     build_index(spark, corpus_df(spark, n_append, partitions=16,
                                  start=n_docs), out,
                 num_segments=8, num_buckets=16, positions=True,
-                append=True, segment_base=cat.num_segments)
+                append=True)
     t["append"] = time.time() - t0
     cat2 = IndexCatalog.load(out)
     s2 = Searcher(spark, cat2)
@@ -125,6 +127,19 @@ def main() -> None:
         lsm.count(MatchAll()) == live
         and len(lsm.search(q_or, k=100)) == 100)
     t["queries_final"] = time.time() - t0
+
+    # an update after the merge takes a fresh segment id: the new
+    # version's doc_id is unique and the index stays healthy
+    t0 = time.time()
+    updated = update_documents(spark, merged, corpus_df(
+        spark, 1, partitions=1, start=n_docs))
+    t["update"] = time.time() - t0
+    checks["update_after_merge"] = (
+        LocalSearcher(updated).count(MatchAll()) == live)
+    t0 = time.time()
+    checks["check_index_healthy"] = (
+        check_index(spark, out)["status"] == HEALTHY)
+    t["check_index"] = time.time() - t0
 
     ok = all(checks.values())
     print(json.dumps({

@@ -20,10 +20,10 @@ from diagon_spark.search.query import MatchAll, Term
 
 def test_commit_generation_numeric_order(tmp_path):
     root = str(tmp_path / "idx")
-    cat = IndexCatalog(root=root, num_buckets=4, num_segments=1,
+    cat = IndexCatalog(root=root, num_buckets=4, segments=[0],
                        has_positions=False, key_cols=[])
     for i in range(12):  # crosses the 9 -> 10 lexicographic boundary
-        cat.num_segments = i + 1
+        cat.segments = list(range(i + 1))
         cat.commit()
     loaded = IndexCatalog.load(root)
     assert loaded.num_segments == 12
@@ -94,7 +94,7 @@ def test_streaming_epoch_replay_idempotent(spark, tmp_path):
                         positions=False, append=True, segment_base=2)
     assert committed_epochs(out) == {0}
     # the retry path: scrub, then re-append
-    _scrub_partial_epoch(spark, out, 2, 4)
+    _scrub_partial_epoch(spark, out)
     build_index(spark, df1, out, num_segments=2, num_buckets=4,
                 positions=False, append=True, segment_base=2,
                 commit_extra={"stream_epoch": 1})

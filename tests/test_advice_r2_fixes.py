@@ -63,22 +63,28 @@ def test_rollback_prunes_tombstones_of_dropped_segments(spark, tmp_path):
     df0 = spark.createDataFrame(generate_pandas(0, 40))
     cat = build_index(spark, df0, out, num_segments=2, num_buckets=4,
                       positions=False)  # commit gen 0
-    df1 = spark.createDataFrame(generate_pandas(40, 70))
-    build_index(spark, df1, out, num_segments=1, num_buckets=4,
-                positions=False, append=True, segment_base=2)  # gen 1
 
-    # tombstones: one surviving doc + one appended doc (gen 2)
+    def delete(victim):
+        return delete_documents(
+            spark, IndexCatalog.load(out),
+            spark.createDataFrame([(victim,)], "doc_id long"),
+            join_cols=["doc_id"])
+
+    # tombstones: one surviving doc (gen 1, the rollback target), then
+    # one doc of an appended segment (gen 2 append, gen 3 delete)
     docs = spark.read.parquet(f"{out}/docs")
     keep_victim = int(docs.filter("segment_id < 2")
                       .select("doc_id").first().doc_id)
+    assert delete(keep_victim) == 1
+    df1 = spark.createDataFrame(generate_pandas(40, 70))
+    build_index(spark, df1, out, num_segments=1, num_buckets=4,
+                positions=False, append=True, segment_base=2)  # gen 2
+    docs = spark.read.parquet(f"{out}/docs")
     drop_victim = int(docs.filter("segment_id >= 2")
                       .select("doc_id").first().doc_id)
-    assert delete_documents(
-        spark, IndexCatalog.load(out),
-        spark.createDataFrame([(keep_victim,), (drop_victim,)],
-                              "doc_id long"), join_cols=["doc_id"]) == 2
+    assert delete(drop_victim) == 1
 
-    rolled = rollback(spark, out, generation=0)
+    rolled = rollback(spark, out, generation=1)
     assert rolled.num_segments == 2
     # tombstone of the dropped epoch's doc is pruned; the survivor keeps
     # its tombstone row

@@ -37,14 +37,14 @@ def test_commit_merge_in_place_removes_sources_and_purges(spark, tmp_path):
     assert ls.count(MatchAll()) == 80 - len(set(victims))
     # physical segment count is down to 1 (doc_ids stay stable — they
     # embed their ORIGINAL segment bits; the tables' segment_id column is
-    # the physical grouping)
+    # the physical grouping), at the first id above the 4 merged ones
     segs = {r.segment_id for r in
             spark.read.parquet(f"{out}/docs").select("segment_id")
             .distinct().collect()}
     psegs = {r.segment_id for r in
              spark.read.parquet(f"{out}/postings").select("segment_id")
              .distinct().collect()}
-    assert segs == {0} and psegs == {0}
+    assert segs == {4} and psegs == {4}
     # surviving matches unchanged as a SET; exact scores/order legitimately
     # shift because merge recomputes df/avgdl WITHOUT the purged docs
     # (pre-merge stats count deleted docs until a merge — Lucene behavior,

@@ -40,7 +40,8 @@ def test_merged_rank_identical(pair, qi):
 def test_merged_is_single_segment(pair, spark):
     _, s_merged = pair
     p = spark.read.parquet(s_merged.cat.postings_path)
-    assert [r.segment_id for r in p.select("segment_id").distinct().collect()] == [0]
+    # one segment, at the first id above the 4 it merged
+    assert [r.segment_id for r in p.select("segment_id").distinct().collect()] == [4]
     # every (term, chunk) unique — chunks re-packed maximally
     dup = (p.groupBy("term", "chunk").count()
            .filter(F.col("count") > 1).collect())

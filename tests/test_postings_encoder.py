@@ -34,10 +34,10 @@ def _rows(frame: pd.DataFrame) -> list[tuple]:
     return sorted(rows, key=lambda r: (r[3], r[0], r[1], r[4]))
 
 
-def _reference_merge(pdf, tombstones, has_positions, num_segments):
+def _reference_merge(pdf, tombstones, has_positions, new_segment):
     """One `encode_term_postings` call per term chunk."""
     rows = []
-    pdf = pdf.assign(_new_seg=pdf["segment_id"] % num_segments)
+    pdf = pdf.assign(_new_seg=pdf["segment_id"].map(new_segment))
     for (new_seg, fld, term), grp in pdf.groupby(
             ["_new_seg", "field", "term"], sort=False):
         docs, tfs, norms, deltas = _merge_term_rows(
@@ -89,9 +89,11 @@ def test_merge_equals_per_term_reference(four_segments, monkeypatch,
     tomb = doc_ids[::7] if tombstoned else np.zeros(0, dtype=np.int64)
     monkeypatch.setattr(merge, "CHUNK_DOCS", CHUNK)
 
-    got = _merge_group_fn(has_positions, num_segments)(
+    # the merge's segment map: the 4 segments onto fresh ids from 4
+    new_segment = {s: 4 + s * num_segments // 4 for s in range(4)}
+    got = _merge_group_fn(has_positions, new_segment)(
         (0, 0), postings, pd.DataFrame({"doc_id": tomb}))
-    want = _reference_merge(postings, tomb, has_positions, num_segments)
+    want = _reference_merge(postings, tomb, has_positions, new_segment)
 
     assert (got["chunk"] > 0).any()  # some terms span several chunks
     assert len(got) == len(want)
